@@ -29,21 +29,34 @@ survive executor churn (multi-hour pipelines, shared caches), use
 ``persist(StorageLevel.MEMORY_AND_DISK_2)`` or a reliable
 ``checkpoint()`` to a replicated store instead.
 
-Small-graph fast paths (round 15): every iterative operator here pays a
-measured ~1.2-1.7 s of FIXED cost per distributed round at small scale
-(AQE stage-job submissions, per-round plan analysis, checkpoint
-barriers — q184: ~0.15 s of task time inside a 1.6 s round), so when
-the materialized edge list is at/below :data:`GRAPH_SMALL_MAX_ROWS`
-rows the operator runs its exact single-task twin instead (union-find /
-in-memory peeling / integer iteration via one ``mapInPandas`` task —
-the global_prefix small-input precedent, decided on the EXACT row count
-the operator already computes rather than a Catalyst estimate, which
-errs 5-6 orders of magnitude high through join lineages). Results are
-bit-identical (integer/decimal-exact arithmetic; shortest-repr HALF_UP
-rounding twins); the distributed forms remain the scale path and stay
-oracle-verified via the env-pinned parity artifact
-($SPARK_GRAFT_GRAPH_SMALL_MAX_ROWS=0 sweep) plus the fast ≡ distributed
-property pins in tests/test_graph_small_path.py.
+Small graphs run in one task. Every iterative operator here pays
+~1.2-1.7 s of fixed cost per distributed round at small scale (AQE
+stage-job submissions, per-round plan analysis, checkpoint barriers —
+q184: ~0.15 s of task time inside a 1.6 s round). So each operator
+materializes its edge list, counts it exactly, and asks :func:`_small`
+— the one decision, read from the one knob
+``$SPARK_GRAFT_GRAPH_SMALL_MAX_ROWS`` — whether to run its exact
+single-task twin instead (union-find / in-memory peeling / integer
+iteration). Three helpers carry every twin:
+
+* :func:`_small` — the edge-count decision;
+* :func:`_single_task` — the one ``mapInPandas`` task: it gathers the
+  two endpoint columns, factorizes them to dense node indices and calls
+  the operator's kernel;
+* :func:`_eager` — the eager ``localCheckpoint`` of a twin's result,
+  and the one channel for contract errors raised inside a kernel: Spark
+  delivers a Python worker's exception to the driver only as text, so a
+  kernel raises the contract error :func:`_tagged` (its class name
+  between sentinel tokens) and :func:`_eager` re-raises that class with
+  the same message. Each contract message is written once and shared by
+  the kernel and the distributed path.
+
+Results are bit-identical (integer/decimal-exact arithmetic;
+shortest-repr HALF_UP rounding twins). The distributed forms remain the
+scale path and stay oracle-verified by the parity sweep run with the
+knob at 0, plus the fast ≡ distributed pins in
+tests/test_graph_small_path.py. Edges with a null endpoint are dropped
+by every operator before either form sees them.
 """
 
 from __future__ import annotations
@@ -54,24 +67,18 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 #: Default edge-count line at/below which the iterative operators run
-#: their SINGLE-TASK exact form instead of the unrolled distributed
-#: rounds (round 15, the global_prefix small-input precedent). The
-#: decision reads the EXACT materialized row count every operator in
-#: this module already computes (its edge frame is eagerly
-#: localCheckpointed and counted for convergence/guard purposes), not a
-#: Catalyst estimate — join/window-built edge lineages estimate 5-6
-#: orders of magnitude high (measured: q135's edge frame estimates
-#: 1.1 TB against a true 587k rows), so the global_prefix sizeInBytes
-#: branch can never fire here. A ≤2M-row edge list is a few tens of MB
-#: of narrow pairs — data one ordinary task already handles — while the
-#: distributed rounds pay ~1.2-1.7 s of PURE per-round fixed cost
-#: (AQE stage-job submissions + per-round plan analysis; measured on
-#: q184: 6 rounds × 1.6 s wall against ~0.15 s of actual task time per
-#: round). Override with $SPARK_GRAFT_GRAPH_SMALL_MAX_ROWS (0 disables
-#: every fast path) or per call via ``small_max_rows``; the distributed
-#: forms stay oracle-verified by the env-pinned parity sweep artifact
-#: (PARITY_graphdist_* — see OPTIMIZATION_r15.md) and the fast ≡
-#: distributed property pins in tests/test_graph_small_path.py.
+#: their single-task exact form instead of the unrolled distributed
+#: rounds. The decision reads the EXACT row count of the materialized
+#: edge frame each operator already computes, not a Catalyst estimate:
+#: join/window-built edge lineages estimate 5-6 orders of magnitude
+#: high (q135's edge frame estimates 1.1 TB against a true 587k rows).
+#: A ≤2M-row edge list is a few tens of MB of narrow pairs — data one
+#: ordinary task handles — while the distributed rounds pay ~1.2-1.7 s
+#: of pure per-round fixed cost (q184: 6 rounds × 1.6 s wall against
+#: ~0.15 s of task time per round). ``$SPARK_GRAFT_GRAPH_SMALL_MAX_ROWS``
+#: overrides it for every operator at once and is the only selector;
+#: 0 pins every distributed form (the parity sweep over the distributed
+#: forms and the fast ≡ distributed pins set it).
 GRAPH_SMALL_MAX_ROWS = 2_000_000
 
 #: int64 headroom guard for the fast paths' scaled-integer decimal
@@ -80,26 +87,67 @@ GRAPH_SMALL_MAX_ROWS = 2_000_000
 #: refused the fast path regardless of the configured threshold.
 _FAST_PATH_HARD_MAX_ROWS = 8_000_000
 
+#: Sentinel around a kernel's contract error in the text Spark hands
+#: back from the Python worker: ``<tag>ClassName<tag>message<tag>``.
+_TAG = "~graph-contract~"
+_CONTRACTS = {c.__name__: c for c in (ValueError, RuntimeError)}
 
-def _small_max_rows(override: int | None) -> int:
-    """Resolve the fast-path edge-count line: explicit argument wins
-    (0 = force distributed, the test pin), else the env override, else
-    the module default — mirroring global_prefix's small_input_bytes
-    contract."""
-    if override is not None:
-        return min(int(override), _FAST_PATH_HARD_MAX_ROWS)
+
+def _small(n: int) -> bool:
+    """True when an edge list of exactly ``n`` rows takes the
+    single-task form: ``0 < n <=`` the line set by
+    ``$SPARK_GRAFT_GRAPH_SMALL_MAX_ROWS`` (default
+    :data:`GRAPH_SMALL_MAX_ROWS`), never past
+    :data:`_FAST_PATH_HARD_MAX_ROWS`."""
     raw = os.environ.get("SPARK_GRAFT_GRAPH_SMALL_MAX_ROWS")
-    if raw is None:
-        return min(GRAPH_SMALL_MAX_ROWS, _FAST_PATH_HARD_MAX_ROWS)
     try:
-        n = int(raw)
+        line = GRAPH_SMALL_MAX_ROWS if raw is None else int(raw)
     except ValueError:
         raise ValueError(
             f"$SPARK_GRAFT_GRAPH_SMALL_MAX_ROWS={raw!r} is not an "
             "integer; set a row count (0 disables every graph fast "
             "path) or unset it for the default "
             f"({GRAPH_SMALL_MAX_ROWS})") from None
-    return min(n, _FAST_PATH_HARD_MAX_ROWS)
+    return 0 < n <= min(line, _FAST_PATH_HARD_MAX_ROWS)
+
+
+def _single_task(e: DataFrame, kernel, schema: str) -> DataFrame:
+    """Run ``kernel(nodes, a_i, b_i)`` over ALL of the two-column edge
+    frame ``e`` in one task; the pandas frame it returns is the result,
+    typed by ``schema``. ``nodes`` holds the ascending-unique ids of
+    both columns and ``a_i``/``b_i`` each edge's int64 endpoint indices
+    into it (:func:`_factorize`). ``e`` is a small materialized frame,
+    so ``coalesce(1)`` is a narrow read of its cached blocks — no
+    shuffle, one Arrow hand-off, one job."""
+    a, b = e.columns
+
+    def fn(batches):
+        import pandas as pd
+
+        pdf = pd.concat(batches, ignore_index=True)
+        nodes, inv = _factorize(pdf[a].to_numpy(), pdf[b].to_numpy())
+        yield kernel(nodes, inv[:len(pdf)], inv[len(pdf):])
+
+    return e.coalesce(1).mapInPandas(fn, schema)
+
+
+def _tagged(ex: Exception) -> Exception:
+    """The in-kernel form of contract error ``ex``: same class, its
+    text wrapped in :data:`_TAG` tokens for :func:`_eager` to read."""
+    return type(ex)(f"{_TAG}{type(ex).__name__}{_TAG}{ex}{_TAG}")
+
+
+def _eager(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=True)``: a twin's result computed at
+    call time, so a kernel's :func:`_tagged` contract error surfaces
+    here, re-raised as its own class and message."""
+    try:
+        return df.localCheckpoint(eager=True)
+    except Exception as ex:
+        parts = str(ex).split(_TAG)
+        if len(parts) < 4 or parts[1] not in _CONTRACTS:
+            raise
+        raise _CONTRACTS[parts[1]](parts[2]) from None
 
 
 def _factorize(*arrays):
@@ -161,14 +209,6 @@ def _quantize_scaled_int(x, digits: int):
     return out
 
 
-def _single_task(df: DataFrame, fn, schema: str) -> DataFrame:
-    """Run ``fn`` (a mapInPandas iterator function) over ALL of ``df``
-    in one task. ``df`` is a small materialized (localCheckpointed)
-    frame, so ``coalesce(1)`` is a narrow read of its cached blocks —
-    no shuffle, one Arrow hand-off, one job."""
-    return df.coalesce(1).mapInPandas(fn, schema)
-
-
 def _round_half_up(x: float, digits: int) -> float:
     """Python twin of Spark's ``round(double, d)`` / double→decimal
     cast semantics: shortest-repr decimalization (JVM
@@ -210,7 +250,7 @@ def _pagerank_single_task(e: DataFrame, iterations: int,
     typ = e.schema["src"].dataType.simpleString()
     base_lit = round(1.0 - damping, 6)
 
-    def fn(batches):
+    def kernel(nodes, src_i, dst_i):
         from decimal import ROUND_HALF_UP, Decimal
 
         import numpy as np
@@ -218,20 +258,10 @@ def _pagerank_single_task(e: DataFrame, iterations: int,
 
         q6 = Decimal("1E-6")
         q12 = Decimal("1E-12")
-        srcs, dsts = [], []
-        for pdf in batches:
-            srcs.append(pdf["src"].to_numpy())
-            dsts.append(pdf["dst"].to_numpy())
-        src = np.concatenate(srcs) if srcs else np.array([])
-        dst = np.concatenate(dsts) if dsts else np.array([])
-        nodes, inv = _factorize(src, dst)
-        src_i, dst_i = inv[:len(src)], inv[len(src):]
         n = len(nodes)
         outdeg = np.bincount(src_i, minlength=n)
         if (outdeg == 0).any():
-            raise ValueError(
-                "graph has nodes without out-edges; symmetrize() the "
-                "edge list or drop dangling nodes before pagerank()")
+            raise _tagged(_dangling())
         r0 = float(Decimal(repr(1.0 / n)).quantize(q6, ROUND_HALF_UP))
         base = float(Decimal(repr(base_lit / n))
                      .quantize(q12, ROUND_HALF_UP))
@@ -266,21 +296,27 @@ def _pagerank_single_task(e: DataFrame, iterations: int,
             new_rank[ridx] = new_int.astype(np.float64) / 1e6
             rank, has = new_rank, received
         keep = np.flatnonzero(has)
-        yield pd.DataFrame({"node": nodes[keep], "rank": rank[keep]})
+        return pd.DataFrame({"node": nodes[keep], "rank": rank[keep]})
 
-    return _single_task(e, fn, f"node {typ}, rank double")
+    return _single_task(e, kernel, f"node {typ}, rank double")
+
+
+def _dangling() -> ValueError:
+    """pagerank's contract: every node has an out-edge."""
+    return ValueError(
+        "graph has nodes without out-edges; symmetrize() the edge list "
+        "or drop dangling nodes before pagerank()")
 
 
 def pagerank(edges: DataFrame, iterations: int = 3,
              damping: float = 0.85, src: str = "src",
-             dst: str = "dst",
-             small_max_rows: int | None = None) -> DataFrame:
+             dst: str = "dst") -> DataFrame:
     """PageRank with a FIXED iteration count, statically unrolled:
     ``r₀(v) = 1/N``; ``r_{k+1}(v) = (1−d)/N + d·Σ_{u→v} r_k(u)/outdeg(u)``.
 
     Every node must have at least one out-edge (use :func:`symmetrize`
-    first, or pre-drop dangling nodes) — asserted via a loud count check
-    at plan-build time on the degree frame, not silently mis-ranked.
+    first, or pre-drop dangling nodes) — asserted at call time, not
+    silently mis-ranked. Edges with a null endpoint are dropped.
 
     Each iteration is one equi-join of the (node, rank) vector with the
     edge list on the source key followed by a groupBy on the destination
@@ -293,51 +329,30 @@ def pagerank(edges: DataFrame, iterations: int = 3,
     The rank vector localCheckpoints every few rounds (deep loops
     only) to bound lineage; shallow unrolls run as one pipelined job.
 
-    Small-graph fast path (round 15): the edge list is materialized
-    once (an eager localCheckpoint — the dangling-node guard forced a
-    materialization before this round too, as the first action over the
-    persisted frame) and its exact row count picks the form: at/below
-    ``small_max_rows`` (default :data:`GRAPH_SMALL_MAX_ROWS`) the whole
-    trajectory runs as ONE single-task job
+    Small graphs (:func:`_small` on the materialized edge count) run
+    the whole trajectory as ONE single-task job
     (:func:`_pagerank_single_task`, bit-identical per iteration — the
     parity design above is exactly what makes a cross-engine twin
-    possible); above it, the distributed unroll below. Pass
-    ``small_max_rows=0`` to pin the distributed form."""
+    possible); larger ones run the distributed unroll below."""
     if iterations < 1:
         raise ValueError("pagerank needs at least 1 iteration")
     e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
          .localCheckpoint(eager=True))
-    n_edges = e.count()
-    # Fast path BEFORE the dangling guard (round 16): the single task
-    # runs the identical outdeg==0 check in-kernel, and the eager
-    # localCheckpoint below surfaces it AT CALL TIME as the same
-    # contract ValueError — so the two driver-side guard jobs (nodes
-    # distinct + anti-join, ~0.6 s at sf0.1) are pure duplication on
-    # this path. The distributed branch keeps the plan-build guard
-    # (its unrolled joins cannot check in-flight). The result cut is
-    # node-sized, so the materialization is the one task job the
-    # caller's first action would have paid anyway.
-    if 0 < n_edges <= _small_max_rows(small_max_rows):
-        out = _pagerank_single_task(e, iterations, damping)
-        try:
-            return out.localCheckpoint(eager=True)
-        except Exception as ex:
-            if "nodes without out-edges" in str(ex):
-                raise ValueError(
-                    "graph has nodes without out-edges; symmetrize() "
-                    "the edge list or drop dangling nodes before "
-                    "pagerank()") from None
-            raise
+    # The fast path skips the driver-side dangling guard: its kernel
+    # runs the same check, and _eager surfaces it at call time — so the
+    # two guard jobs (nodes distinct + anti-join, ~0.6 s at sf0.1)
+    # would be pure duplication. The distributed branch keeps the
+    # plan-build guard (its unrolled joins cannot check in flight).
+    if _small(e.count()):
+        return _eager(_pagerank_single_task(e, iterations, damping))
     deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
     nodes = (e.select(F.col("src").alias("node"))
              .unionByName(e.select(F.col("dst").alias("node")))
              .distinct())
-    dangling = (nodes.join(deg.withColumnRenamed("src", "node"),
-                           "node", "left_anti").limit(1).count())
-    if dangling:
-        raise ValueError(
-            "graph has nodes without out-edges; symmetrize() the edge "
-            "list or drop dangling nodes before pagerank()")
+    if (nodes.join(deg.withColumnRenamed("src", "node"), "node",
+                   "left_anti").limit(1).count()):
+        raise _dangling()
     n_nodes = nodes.select(F.count("*").alias("__n"))
     # 1−d as the 6-rounded literal, NOT the raw float subtraction:
     # Python's 1.0−0.85 and a SQL engine's CAST(0.15 AS DOUBLE) are
@@ -367,9 +382,9 @@ def pagerank(edges: DataFrame, iterations: int = 3,
                          .alias("rank")))
         if (i + 1) % checkpoint_every == 0 and (i + 1) < iterations:
             ranks = ranks.localCheckpoint(eager=True)
-    # NOTE: e is localCheckpointed (round 15 — it doubles as the
-    # fast-path row-count read), so the (lazy) iterations re-read its
-    # materialized partitions; Spark drops them with the session.
+    # e is localCheckpointed (it doubles as the fast-path row-count
+    # read), so the lazy iterations re-read its materialized
+    # partitions; Spark drops them with the session.
     return ranks
 
 
@@ -381,18 +396,10 @@ def _triangle_single_task(e: DataFrame) -> DataFrame:
     round-6 clustering arithmetic. Wedge enumeration flushes in chunks
     so memory stays bounded even on adversarially dense inputs."""
 
-    def fn(batches):
+    def kernel(nodes, u_i, v_i):
         import numpy as np
         import pandas as pd
 
-        us, vs = [], []
-        for pdf in batches:
-            us.append(pdf["u"].to_numpy())
-            vs.append(pdf["v"].to_numpy())
-        u = np.concatenate(us) if us else np.array([])
-        v = np.concatenate(vs) if vs else np.array([])
-        nodes, inv = _factorize(u, v)
-        u_i, v_i = inv[:len(u)], inv[len(u):]
         n = len(nodes)
         m = len(u_i)
         deg = np.bincount(u_i, minlength=n) + np.bincount(v_i, minlength=n)
@@ -439,20 +446,19 @@ def _triangle_single_task(e: DataFrame) -> DataFrame:
             gc = _round_half_up(3.0 * tri / n_wedges, 6)
         else:
             gc = 0.0
-        yield pd.DataFrame({"n_nodes": np.array([n], np.int64),
-                            "n_edges": np.array([m], np.int64),
-                            "n_wedges": np.array([n_wedges], np.int64),
-                            "n_triangles": np.array([tri], np.int64),
-                            "global_clustering": [gc]})
+        return pd.DataFrame({"n_nodes": np.array([n], np.int64),
+                             "n_edges": np.array([m], np.int64),
+                             "n_wedges": np.array([n_wedges], np.int64),
+                             "n_triangles": np.array([tri], np.int64),
+                             "global_clustering": [gc]})
 
     return _single_task(
-        e, fn, "n_nodes bigint, n_edges bigint, n_wedges bigint, "
-               "n_triangles bigint, global_clustering double")
+        e, kernel, "n_nodes bigint, n_edges bigint, n_wedges bigint, "
+                   "n_triangles bigint, global_clustering double")
 
 
 def triangle_count(edges: DataFrame, src: str = "src",
-                   dst: str = "dst",
-                   small_max_rows: int | None = None) -> DataFrame:
+                   dst: str = "dst") -> DataFrame:
     """Exact triangle count + global clustering coefficient — the
     second classic distributed-graph workload beside :func:`pagerank`,
     and the canonical example of a join whose COST is controlled by an
@@ -475,13 +481,14 @@ def triangle_count(edges: DataFrame, src: str = "src",
     (each triangle {x<y<z} in orientation order is counted exactly
     once, at its lowest-degree corner). Returns one row:
     ``(n_nodes, n_edges, n_wedges, n_triangles, global_clustering)``
-    with clustering = 3·T / Σ C(deg,2) on TRUE degrees (rounded 6)."""
+    with clustering = 3·T / Σ C(deg,2) on TRUE degrees (rounded 6).
+    Small graphs (:func:`_small`) run :func:`_triangle_single_task`."""
     u = F.least(F.col(src), F.col(dst)).alias("u")
     v = F.greatest(F.col(src), F.col(dst)).alias("v")
     e = (edges.select(u, v)
          .where(F.col("u") != F.col("v")).distinct().persist())
-    if 0 < e.count() <= _small_max_rows(small_max_rows):
-        out = _triangle_single_task(e).localCheckpoint(eager=True)
+    if _small(e.count()):
+        out = _eager(_triangle_single_task(e))
         e.unpersist()
         return out
     deg = (e.select(F.col("u").alias("n"))
@@ -604,18 +611,10 @@ def _cc_union_find(e: DataFrame) -> DataFrame:
     tests/test_graph_small_path.py."""
     typ = e.schema["u"].dataType.simpleString()
 
-    def fn(batches):
+    def kernel(nodes, u_i, v_i):
         import numpy as np
         import pandas as pd
 
-        us, vs = [], []
-        for pdf in batches:
-            us.append(pdf["u"].to_numpy())
-            vs.append(pdf["v"].to_numpy())
-        u = np.concatenate(us) if us else np.array([])
-        v = np.concatenate(vs) if vs else np.array([])
-        nodes, inv = _factorize(u, v)
-        u_i, v_i = inv[:len(u)], inv[len(u):]
         n = len(nodes)
         lab = np.arange(n, dtype=np.int64)
         while True:
@@ -630,15 +629,14 @@ def _cc_union_find(e: DataFrame) -> DataFrame:
             if np.array_equal(new, lab):
                 break
             lab = new
-        yield pd.DataFrame({"node": nodes, "label": nodes[lab]})
+        return pd.DataFrame({"node": nodes, "label": nodes[lab]})
 
-    return _single_task(e, fn, f"node {typ}, label {typ}")
+    return _single_task(e, kernel, f"node {typ}, label {typ}")
 
 
 def connected_components(edges: DataFrame, src: str = "src",
                          dst: str = "dst",
-                         max_iter: int = 25,
-                         small_max_rows: int | None = None) -> DataFrame:
+                         max_iter: int = 25) -> DataFrame:
     """Connected components by alternating large-star/small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC'14) — the O(log n)-round labeling that completes the graph
@@ -665,16 +663,13 @@ def connected_components(edges: DataFrame, src: str = "src",
     appear in ``edges`` and are the caller's singletons, same contract
     as dedup_clusters).
 
-    Small-graph fast path (round 15): when the materialized canonical
-    edge count — already computed here for the convergence checksum —
-    is at/below ``small_max_rows`` (default
-    :data:`GRAPH_SMALL_MAX_ROWS`, env-overridable), the labeling runs
-    as ONE single-task union-find (:func:`_cc_union_find`) instead of
-    ~log(n) checkpointed rounds; identical labels (component minimum),
-    pinned by tests/test_graph_small_path.py. ``max_iter`` applies to
-    the distributed rounds only — the fast path always converges
-    exactly (union-find has no round budget to exhaust); pass
-    ``small_max_rows=0`` to pin the distributed form."""
+    Small graphs (:func:`_small` on the canonical edge count, already
+    computed here for the convergence checksum) label in ONE
+    single-task union-find (:func:`_cc_union_find`) instead of ~log(n)
+    checkpointed rounds; identical labels (component minimum), pinned
+    by tests/test_graph_small_path.py. ``max_iter`` applies to the
+    distributed rounds only — union-find always converges exactly and
+    has no round budget to exhaust. The result stays lazy."""
     e = _cc_canonical(edges, src, dst).localCheckpoint(eager=True)
 
     def checksum(d: DataFrame):
@@ -688,7 +683,7 @@ def connected_components(edges: DataFrame, src: str = "src",
         return (r["n"], r["h"])
 
     sig = checksum(e)
-    if 0 < sig[0] <= _small_max_rows(small_max_rows):
+    if _small(sig[0]):
         return _cc_union_find(e)
 
     large_star, small_star = _cc_large_star, _cc_small_star
@@ -736,18 +731,10 @@ def _kcore_single_task(e: DataFrame, k: int, max_rounds: int) -> DataFrame:
     including the round-budget raise)."""
     typ = e.schema["u"].dataType.simpleString()
 
-    def fn(batches):
+    def kernel(nodes, u_i, v_i):
         import numpy as np
         import pandas as pd
 
-        us, vs = [], []
-        for pdf in batches:
-            us.append(pdf["u"].to_numpy())
-            vs.append(pdf["v"].to_numpy())
-        u = np.concatenate(us) if us else np.array([])
-        v = np.concatenate(vs) if vs else np.array([])
-        nodes, inv = _factorize(u, v)
-        u_i, v_i = inv[:len(u)], inv[len(u):]
         n = len(nodes)
         alive = np.ones(len(u_i), bool)
         prev = len(u_i)
@@ -765,37 +752,26 @@ def _kcore_single_task(e: DataFrame, k: int, max_rounds: int) -> DataFrame:
                 break
             prev = cur
         if not converged:
-            raise RuntimeError(
-                f"k_core(k={k}) did not converge within max_rounds="
-                f"{max_rounds} peel rounds; raise max_rounds — returning an "
-                "un-peeled supergraph would report non-core nodes as core")
+            raise _tagged(_kcore_budget(k, max_rounds))
         deg = (np.bincount(u_i[alive], minlength=n)
                + np.bincount(v_i[alive], minlength=n))
         keep = np.flatnonzero(deg >= k)
-        yield pd.DataFrame({"node": nodes[keep],
-                            "core_degree": deg[keep].astype(np.int64)})
+        return pd.DataFrame({"node": nodes[keep],
+                             "core_degree": deg[keep].astype(np.int64)})
 
-    out = _single_task(e, fn, f"node {typ}, core_degree bigint")
-    # EAGER, so the round-budget exhaustion surfaces at CALL time as
-    # the contract RuntimeError (the distributed loop raises at plan
-    # build; a task-side raise would reach the caller as a wrapped
-    # PythonException at action time) — the k-core result is node-
-    # bounded, so the cut is cheap
-    try:
-        return out.localCheckpoint(eager=True)
-    except Exception as ex:
-        if "did not converge within max_rounds" in str(ex):
-            raise RuntimeError(
-                f"k_core(k={k}) did not converge within max_rounds="
-                f"{max_rounds} peel rounds; raise max_rounds — returning "
-                "an un-peeled supergraph would report non-core nodes as "
-                "core") from None
-        raise
+    return _single_task(e, kernel, f"node {typ}, core_degree bigint")
+
+
+def _kcore_budget(k: int, max_rounds: int) -> RuntimeError:
+    """k_core's contract: the peel converges within ``max_rounds``."""
+    return RuntimeError(
+        f"k_core(k={k}) did not converge within max_rounds={max_rounds} "
+        "peel rounds; raise max_rounds — returning an un-peeled "
+        "supergraph would report non-core nodes as core")
 
 
 def k_core(edges: DataFrame, k: int = 2, src: str = "src",
-           dst: str = "dst", max_rounds: int = 12,
-           small_max_rows: int | None = None) -> DataFrame:
+           dst: str = "dst", max_rounds: int = 12) -> DataFrame:
     """k-core decomposition by iterative peeling — the density-based
     subgraph extractor that completes the graph family (pagerank =
     importance, components = reachability, triangles = local
@@ -815,13 +791,15 @@ def k_core(edges: DataFrame, k: int = 2, src: str = "src",
     un-peeled supergraph — and the SQL oracle unrolls the same fixed
     round budget, which is sound because converged rounds are no-ops.
     Returns ``(node, core_degree)`` for every k-core member, with its
-    degree inside the core."""
+    degree inside the core. Small graphs (:func:`_small`) peel in
+    :func:`_kcore_single_task`, computed at call time so a budget
+    exhaustion raises here as on the distributed path."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     e = _cc_canonical(edges, src, dst).localCheckpoint(eager=True)
     prev0 = e.count()
-    if 0 < prev0 <= _small_max_rows(small_max_rows):
-        return _kcore_single_task(e, k, max_rounds)
+    if _small(prev0):
+        return _eager(_kcore_single_task(e, k, max_rounds))
 
     def degrees(d: DataFrame) -> DataFrame:
         return (d.select(F.col("u").alias("node"))
@@ -844,10 +822,7 @@ def k_core(edges: DataFrame, k: int = 2, src: str = "src",
             break
         prev = cur
     if not converged:
-        raise RuntimeError(
-            f"k_core(k={k}) did not converge within max_rounds="
-            f"{max_rounds} peel rounds; raise max_rounds — returning an "
-            "un-peeled supergraph would report non-core nodes as core")
+        raise _kcore_budget(k, max_rounds)
     return (degrees(e).where(F.col("deg") >= k)
             .select("node", F.col("deg").alias("core_degree")))
 
@@ -861,36 +836,18 @@ def _hits_single_task(e: DataFrame, rounds: int, top_k: int) -> DataFrame:
     where the distributed form is — that is what the guard bounds."""
     typ = e.schema["v"].dataType.simpleString()
 
-    def fn(batches):
+    def kernel(nodes, u_i, v_i):
+        import math
+
         import numpy as np
         import pandas as pd
 
-        us, vs = [], []
-        for pdf in batches:
-            us.append(pdf["u"].to_numpy())
-            vs.append(pdf["v"].to_numpy())
-        u = np.concatenate(us) if us else np.array([])
-        v = np.concatenate(vs) if vs else np.array([])
-        nodes, inv = _factorize(u, v)
-        u_i, v_i = inv[:len(u)], inv[len(u):]
         n = len(nodes)
         a = np.bincount(v_i, minlength=n).astype(np.int64)  # a₁ = in-deg
         outdeg = np.bincount(u_i, minlength=n)
-        din = int(a.max()) if len(a) else 0
-        dout = int(outdeg.max()) if len(outdeg) else 0
-        if din > 0:
-            bound = din ** rounds * max(dout, 1) ** (rounds - 1)
-            if bound > 2 ** 63 - 1:
-                raise ValueError(
-                    f"hits_scores(rounds={rounds}) worst-case score "
-                    f"Din^r·Dout^(r-1) = {din}^{rounds}·{dout}^{rounds - 1} "
-                    "exceeds int64 — note this bound is CONSERVATIVE: it "
-                    "pairs the global max in-degree and max out-degree even "
-                    "when they belong to unconnected nodes, so the true max "
-                    "score may be far smaller (ADVICE r12). Lower rounds "
-                    "(rank order is stable by 2 on conveying graphs) or use "
-                    "a decimal-fold variant if the graph's actual structure "
-                    "keeps scores in range")
+        err = _hits_overflow(rounds, int(a.max()), int(outdeg.max()))
+        if err:
+            raise _tagged(err)
         for _ in range(rounds - 1):
             h = np.zeros(n, np.int64)
             np.add.at(h, u_i, a[v_i])
@@ -901,11 +858,9 @@ def _hits_single_task(e: DataFrame, rounds: int, top_k: int) -> DataFrame:
         has[v_i] = True
         idx = np.flatnonzero(has)
         mx = float(a[idx].max()) if len(idx) else 0.0
-        import math
-
         rows = sorted(((int(a[i]), nodes[i]) for i in idx),
                       key=lambda t: (-t[0], t[1]))[:top_k]
-        yield pd.DataFrame({
+        return pd.DataFrame({
             "node": [nd for _, nd in rows],
             "authority_int": np.array([ai for ai, _ in rows],
                                       dtype=np.int64),
@@ -913,12 +868,30 @@ def _hits_single_task(e: DataFrame, rounds: int, top_k: int) -> DataFrame:
                           / 1_000_000.0 for ai, _ in rows]})
 
     return _single_task(
-        e, fn, f"node {typ}, authority_int bigint, authority double")
+        e, kernel, f"node {typ}, authority_int bigint, authority double")
+
+
+def _hits_overflow(rounds: int, din: int, dout: int) -> ValueError | None:
+    """hits_scores' contract, checked before any iteration: scores after
+    r authority updates are bounded by Din^r · Dout^(r−1) (h₀=1; each
+    authority update multiplies by ≤ Din, each hub update by ≤ Dout).
+    The error when that exact Python-bigint bound passes int64, else
+    None."""
+    if din > 0 and din ** rounds * max(dout, 1) ** (rounds - 1) > 2 ** 63 - 1:
+        return ValueError(
+            f"hits_scores(rounds={rounds}) worst-case score "
+            f"Din^r·Dout^(r-1) = {din}^{rounds}·{dout}^{rounds - 1} "
+            "exceeds int64 — note this bound is CONSERVATIVE: it pairs the "
+            "global max in-degree and max out-degree even when they belong "
+            "to unconnected nodes, so the true max score may be far "
+            "smaller (ADVICE r12). Lower rounds (rank order is stable by 2 "
+            "on conveying graphs) or use a decimal-fold variant if the "
+            "graph's actual structure keeps scores in range")
+    return None
 
 
 def hits_scores(edges: DataFrame, src: str = "src", dst: str = "dst",
-                rounds: int = 2, top_k: int = 20,
-                small_max_rows: int | None = None) -> DataFrame:
+                rounds: int = 2, top_k: int = 20) -> DataFrame:
     """HITS hubs & authorities on a bipartite graph (Kleinberg 1999) —
     the mutual-reinforcement ranking PageRank can't express: a part is
     authoritative when ordered by strong hub customers, a customer is
@@ -947,7 +920,8 @@ def hits_scores(edges: DataFrame, src: str = "src", dst: str = "dst",
     conveying graphs.
     Returns the ``top_k`` authorities ``(node, authority_int,
     authority)`` by (score desc, node asc) — exact integer + 6-rounded
-    max-normalized double."""
+    max-normalized double. Small graphs (:func:`_small`) run
+    :func:`_hits_single_task`, computed at call time."""
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
     e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -959,31 +933,12 @@ def hits_scores(edges: DataFrame, src: str = "src", dst: str = "dst",
          # when the guard first landed with two uncheckpointed degree
          # jobs)
          .localCheckpoint(eager=True))
-    n_edges = e.count()
-    # Fast path BEFORE the degree/guard jobs (round 16): the single
-    # task computes the degree maxima and runs the IDENTICAL
-    # conservative bound check in-kernel, and the eager localCheckpoint
-    # surfaces it at call time as the same contract ValueError — so the
-    # driver-side degree aggregation job is pure duplication here. The
-    # distributed branch keeps the pre-flight (its BIGINT folds cannot
-    # check mid-job). The result is top_k rows, so the cut is free.
-    if 0 < n_edges <= _small_max_rows(small_max_rows):
-        out = _hits_single_task(e, rounds, top_k)
-        try:
-            return out.localCheckpoint(eager=True)
-        except Exception as ex:
-            text = str(ex)
-            if "exceeds int64" in text:
-                import re as _re
-                m = _re.search(
-                    r"hits_scores\(rounds=\d+\).*?keeps scores in range",
-                    text, _re.DOTALL)
-                raise ValueError(
-                    m.group(0) if m else
-                    f"hits_scores(rounds={rounds}) worst-case score "
-                    "exceeds int64 — lower rounds or use a decimal-fold "
-                    "variant") from None
-            raise
+    # The fast path skips the driver-side degree job: its kernel
+    # computes the degree maxima and runs the same bound check, and
+    # _eager surfaces it at call time. The distributed branch keeps the
+    # pre-flight (its BIGINT folds cannot check mid-job).
+    if _small(e.count()):
+        return _eager(_hits_single_task(e, rounds, top_k))
     # Degree frame = overflow guard input AND iteration 1 (VERDICT r12
     # #2): with h₀ = 1 the first authority update is exactly the
     # in-degree, so ONE bidirectional map-side-combined count job
@@ -1006,24 +961,9 @@ def hits_scores(edges: DataFrame, src: str = "src", dst: str = "dst",
                    F.max(F.when(F.col("s") == "o", F.col("d")))
                    .alias("dout"))
            .first())
-    din, dout = row["din"] or 0, row["dout"] or 0
-    if din > 0:
-        # Scores after r authority updates are bounded by
-        # Din^r · Dout^(r−1) (h₀=1; each authority update multiplies by
-        # ≤ Din, each hub update by ≤ Dout). Exact Python-bigint check —
-        # raise BEFORE launching an iteration that could pass int64.
-        bound = din ** rounds * max(dout, 1) ** (rounds - 1)
-        if bound > 2 ** 63 - 1:
-            raise ValueError(
-                f"hits_scores(rounds={rounds}) worst-case score "
-                f"Din^r·Dout^(r-1) = {din}^{rounds}·{dout}^{rounds - 1} "
-                "exceeds int64 — note this bound is CONSERVATIVE: it "
-                "pairs the global max in-degree and max out-degree even "
-                "when they belong to unconnected nodes, so the true max "
-                "score may be far smaller (ADVICE r12). Lower rounds "
-                "(rank order is stable by 2 on conveying graphs) or use "
-                "a decimal-fold variant if the graph's actual structure "
-                "keeps scores in range")
+    err = _hits_overflow(rounds, row["din"] or 0, row["dout"] or 0)
+    if err:
+        raise err
     # iteration 1 for free: a₁ = in-degree (h₀ = 1)
     a = (deg.where(F.col("s") == "i")
          .select(F.col("node").alias("v"), F.col("d").alias("a")))
@@ -1059,18 +999,10 @@ def _lpa_single_task(sym: DataFrame, rounds: int, top_k: int) -> DataFrame:
     equals Spark's UTF8 binary order on valid UTF-8)."""
     typ = sym.schema["a"].dataType.simpleString()
 
-    def fn(batches):
+    def kernel(nodes, a_i, b_i):
         import numpy as np
         import pandas as pd
 
-        avs, bvs = [], []
-        for pdf in batches:
-            avs.append(pdf["a"].to_numpy())
-            bvs.append(pdf["b"].to_numpy())
-        av = np.concatenate(avs) if avs else np.array([])
-        bv = np.concatenate(bvs) if bvs else np.array([])
-        nodes, inv = _factorize(av, bv)
-        a_i, b_i = inv[:len(av)].astype(np.int64), inv[len(av):]
         n = len(nodes)
         lab = np.arange(n, dtype=np.int64)
         for _ in range(rounds):
@@ -1093,16 +1025,15 @@ def _lpa_single_task(sym: DataFrame, rounds: int, top_k: int) -> DataFrame:
             lab = new_lab
         lv, lc = np.unique(lab, return_counts=True)
         order = np.lexsort((lv, -lc))[:top_k]
-        yield pd.DataFrame({"label": nodes[lv[order]],
+        return pd.DataFrame({"label": nodes[lv[order]],
                             "n_nodes": lc[order].astype(np.int64)})
 
-    return _single_task(sym, fn, f"label {typ}, n_nodes bigint")
+    return _single_task(sym, kernel, f"label {typ}, n_nodes bigint")
 
 
 def label_propagation(edges: DataFrame, rounds: int = 2,
                       src: str = "src", dst: str = "dst",
-                      top_k: int = 25,
-                      small_max_rows: int | None = None) -> DataFrame:
+                      top_k: int = 25) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
     et al. 2007) with a DETERMINISTIC update — the density-community
     complement to connected_components (pure reachability) and k_core
@@ -1133,7 +1064,7 @@ def label_propagation(edges: DataFrame, rounds: int = 2,
     sym = (e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
            .distinct().localCheckpoint(eager=True))
     e.unpersist()
-    if 0 < sym.count() <= _small_max_rows(small_max_rows):
+    if _small(sym.count()):
         return _lpa_single_task(sym, rounds, top_k)
     labels = (sym.select(F.col("a").alias("node")).distinct()
               .withColumn("label", F.col("node")))

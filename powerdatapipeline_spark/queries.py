@@ -1256,7 +1256,8 @@ def _run_stream_to_memory(spark: SparkSession, frame: DataFrame,
       track stream volume (2 here, the session ceiling at firehose
       scale); partition count never changes aggregation/join results.
     * the checkpoint is an explicit tmpfs scratch dir, removed after
-      the run (the memory sink holds the rows; these one-shot
+      the run, whether it succeeds, times out or fails to start (the
+      memory sink holds the rows; these one-shot
       checkpoints are never resumed — write_stream_parquet keeps the
       durable-checkpoint production contract).
     * ``noDataMicroBatches`` is disabled unless
@@ -1292,12 +1293,13 @@ def _run_stream_to_memory(spark: SparkSession, frame: DataFrame,
                  .outputMode(mode).trigger(availableNow=True)
                  .option("checkpointLocation", ckpt).start())
             finished = q.awaitTermination(300)
+        if not finished:
+            q.stop()
+            raise TimeoutError(
+                f"{tag} streaming job did not finish within 300 s")
     finally:
         spark.conf.set(ndb_key, old_ndb)
-    if not finished:
-        q.stop()
-        raise TimeoutError(f"{tag} streaming job did not finish within 300 s")
-    shutil.rmtree(ckpt, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
 

@@ -95,6 +95,29 @@ def test_short_name_normalization_bridges_old_and_new_envelopes():
     assert guard.find_regressions(cur, prev) == [("q29", 2.0, 3.4)]
 
 
+def test_packed_clamp_keeps_exact_map_entry():
+    # the packed string clamps at 129.5 s; a query past the clamp must
+    # keep its slowest-first map entry, so 150 s -> 600 s is flagged
+    import bench
+    from powerdatapipeline_spark.queries import REGISTRY
+
+    slow = sorted(REGISTRY)[0]
+
+    def payload(slow_s):
+        timings = {n: 1.0 for n in REGISTRY}
+        timings["flagship"] = 1.0
+        timings[slow] = slow_s
+        _, line = bench.build_payloads(timings, 0.1)
+        return guard._unwrap(json.loads(line))
+
+    base, cur = payload(150.0), payload(600.0)
+    short = bench.short_name(slow)
+    assert (base["queries"][short], cur["queries"][short]) == (150, 600)
+    assert (short, 150.0, 600.0) in guard.find_regressions(cur, base)
+    # below the clamp the packed decisecond value still wins
+    assert payload(42.34)["queries"][short] == 42.3
+
+
 def test_latest_baseline_ignores_nonnumeric_suffix(tmp_path):
     (tmp_path / "BENCH_r02.json").write_text(json.dumps(_bench({"q1": 1.0})))
     (tmp_path / "BENCH_rerun.json").write_text("{}")

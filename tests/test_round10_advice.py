@@ -76,4 +76,7 @@ def test_bench_truncation_attempts_keep_one():
     assert len(line) <= MAX_LINE
     # the map survived truncation (>= 1 entry), never dropped wholesale
     assert obj.get("queries"), line
-    assert obj["q_omitted"] == 49
+    # q_omitted counts queries missing from the line entirely: the
+    # packed ``t`` string carries all 50, so it is 0 by contract
+    assert obj["q_omitted"] == 0
+    assert len(obj["t"]) == 2 * len(timings)

@@ -213,11 +213,11 @@ def test_cc_large_ids(spark):
     assert cc == {big: big, big + 1: big, big + 2: big}
 
 
-def test_cc_budget_exhaustion_raises(spark):
-    # small_max_rows=0 pins the DISTRIBUTED star contraction: the
-    # round budget is a property of the iterative path (the round-15
+def test_cc_budget_exhaustion_raises(spark, monkeypatch):
+    # the env knob at 0 pins the DISTRIBUTED star contraction: the
+    # round budget is a property of the iterative path (the
     # single-task union-find converges exactly and has no budget)
+    monkeypatch.setenv("SPARK_GRAFT_GRAPH_SMALL_MAX_ROWS", "0")
     with pytest.raises(RuntimeError, match="did not converge"):
         gr.connected_components(
-            _edges(spark, [(i, i + 1) for i in range(300)]), max_iter=2,
-            small_max_rows=0)
+            _edges(spark, [(i, i + 1) for i in range(300)]), max_iter=2)

@@ -303,3 +303,27 @@ def test_stream_static_enrich_matches_batch_join(spark, tmp_path):
     assert got == want and len(got) == 4
     # the unregistered key survives with a NULL dim side
     assert (9, 90.0, None) in got
+
+
+def test_stream_harness_removes_checkpoint_when_start_fails(
+        spark, tmp_path, monkeypatch):
+    """The registry's streaming harness removes its scratch checkpoint
+    on every exit path, not only on success: a query that fails at
+    start() (append-mode aggregation without a watermark) leaves no
+    directory behind and restores the no-data-batch conf."""
+    import tempfile
+
+    from powerdatapipeline_spark.queries import _run_stream_to_memory
+    from powerdatapipeline_spark.streaming import pipeline
+
+    monkeypatch.setattr(
+        pipeline, "scratch_dir",
+        lambda prefix: tempfile.mkdtemp(prefix=prefix, dir=tmp_path))
+    ndb_key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    before = spark.conf.get(ndb_key, "true")
+    counts = (spark.readStream.format("rate").load()
+              .groupBy("value").count())
+    with pytest.raises(Exception, match="(?i)append"):
+        _run_stream_to_memory(spark, counts, "start_fails", "append")
+    assert list(tmp_path.iterdir()) == []
+    assert spark.conf.get(ndb_key, "true") == before

@@ -49,10 +49,12 @@ def _expand_packed(d: dict) -> dict:
     """Re-expand the round-16 packed timing string (``t``: 2 base36
     digits of deciseconds per query, ascending short-name order — see
     bench.py's module docstring) into the ``queries`` map, OVERRIDING
-    the map's coarser integer-second entries. The name order is
-    reconstructed from the current registry and cross-checked against
-    the payload's ``tch`` name-list checksum; on any mismatch the
-    payload is returned untouched."""
+    the map's coarser integer-second entries — except at the packed
+    clamp (36²−1 ds = 129.5 s), which only says "at least": there the
+    map entry, when present, is the real value and is kept. The name
+    order is reconstructed from the current registry and cross-checked
+    against the payload's ``tch`` name-list checksum; on any mismatch
+    the payload is returned untouched."""
     t = d.get("t")
     if not isinstance(t, str) or not t:
         return d
@@ -69,8 +71,12 @@ def _expand_packed(d: dict) -> dict:
         if (hashlib.md5(",".join(shorts).encode()).hexdigest()[:6]
                 != d["tch"]):
             return d
-    full = {s: int(t[2 * i:2 * i + 2], 36) / 10.0
-            for i, s in enumerate(shorts)}
+    mapped = {_short(n) for n in d.get("queries", {})}
+    full = {}
+    for i, s in enumerate(shorts):
+        ds = int(t[2 * i:2 * i + 2], 36)
+        if ds < 36 * 36 - 1 or s not in mapped:
+            full[s] = ds / 10.0
     return {**d, "queries": {**d.get("queries", {}), **full}}
 
 
