@@ -4,67 +4,109 @@ similarity search over ``embeddings.embedding``).
 All JVM-side higher-order functions (``zip_with`` + ``aggregate``) — no
 Python UDFs, so dot products stay inside whole-stage codegen and scale
 linearly with executors.
+
+Each helper takes column NAMES and returns ONE ``F.expr``: its SQL text is
+built in Python and parsed by Spark in a single call. The lambda-API form
+(``F.zip_with(..., lambda x, y: ...)``) builds the same expression tree
+node by node, one or more Py4J round trips per node; with the hyperplane
+and centroid transforms that was thousands of round trips per plan build.
+The ``*_sql`` builders return the same texts over SQL operands (a quoted
+name from :func:`col_sql`, a lambda variable, an :func:`array_sql`
+literal), so callers compose larger expressions such as
+``transform(<planes>, __row -> <dot>)`` that still parse once; constant
+planes and centroids enter only as :func:`array_sql` text. Casts,
+literal types (``0.0D``, ``decimal(38,12)``) and fold order are those of
+the lambda-API form, so results are bit-identical to it. Lambda
+variables use ``__``-prefixed names; a column passed by name may not
+carry one of them, or the lambda would shadow it.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+#: lambda variables of the SQL texts below
+_LAMBDA_VARS = frozenset({"__x", "__y", "__acc", "__p"})
 
-def _c(col: str | Column) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+
+def col_sql(name: str) -> str:
+    """A column name as a quoted SQL identifier (a plain name, not a
+    nested-field path)."""
+    if not isinstance(name, str):
+        raise TypeError(f"expected a column name, got {type(name).__name__}")
+    if name in _LAMBDA_VARS:
+        raise ValueError(f"column name {name!r} would be shadowed by a "
+                         "lambda variable of the vector expressions")
+    return "`" + name.replace("`", "``") + "`"
 
 
-def array_lit(values) -> Column:
-    """Literal ``array<double>`` / ``array<array<double>>`` built in ONE
-    JVM call (round 15). ``F.lit(nested_list)`` RECURSES into
-    per-element ``lit()`` Py4J round trips — a 16×64 centroid literal
-    costs ~1,000 gateway calls, and cProfile put 6-7 s of q35's 7 s
-    plan-build inside those socket reads. Serializing the matrix to one
-    SQL expression string keeps the exact doubles (shortest-repr ``D``
-    literals parse back through ``Double.parseDouble``, which inverts
-    ``repr``'s shortest round-trip form bit-exactly) and makes the whole
-    build a single parse call. Finite values only — plane/centroid/
-    codebook constants by construction."""
-    import math
-
+def array_sql(values) -> str:
+    """SQL text of a literal ``array<double>`` / ``array<array<double>>``
+    (round 15). ``F.lit(nested_list)`` RECURSES into per-element
+    ``lit()`` Py4J round trips — a 16×64 centroid literal costs ~1,000
+    gateway calls, and cProfile put 6-7 s of q35's 7 s plan-build inside
+    those socket reads; as SQL text the literal costs nothing until the
+    expression holding it is parsed. Shortest-repr ``D`` literals parse
+    back through ``Double.parseDouble``, which inverts ``repr``'s
+    shortest round-trip form bit-exactly. Finite values only —
+    plane/centroid/codebook constants by construction."""
     def fmt(x) -> str:
         fx = float(x)
         if not math.isfinite(fx):
-            raise ValueError(f"array_lit: non-finite literal {x!r}")
+            raise ValueError(f"array_sql: non-finite literal {x!r}")
         return repr(fx) + "D"
+
+    def row(r) -> str:
+        return "array(" + ",".join(fmt(x) for x in r) + ")"
 
     # ndim check FIRST: ``values and …`` on a multi-element numpy array
     # raises on ambiguous truthiness before reaching any isinstance
     # (ADVICE r15 — latent, all current callers pass lists)
     if hasattr(values, "ndim"):
         if getattr(values, "ndim", 1) == 2:
-            body = ",".join(
-                "array(" + ",".join(fmt(x) for x in row) + ")"
-                for row in values)
-            return F.expr(f"array({body})")
+            return "array(" + ",".join(row(r) for r in values) + ")"
         values = list(values)
     if len(values) == 0:
         raise ValueError(
-            "array_lit: empty input has no element type; pass at least "
+            "array_sql: empty input has no element type; pass at least "
             "one value (an untyped array() literal would not bind to "
             "array<double> operations)")
     if isinstance(values[0], (list, tuple)):
-        body = ",".join(
-            "array(" + ",".join(fmt(x) for x in row) + ")" for row in values)
-    else:
-        body = ",".join(fmt(x) for x in values)
-    return F.expr(f"array({body})")
+        return "array(" + ",".join(row(r) for r in values) + ")"
+    return row(values)
 
 
-def dot(a: str | Column, b: str | Column) -> Column:
+def dot_sql(a: str, b: str) -> str:
+    """SQL text of :func:`dot` over two SQL operands."""
+    return (f"aggregate(zip_with({a}, {b}, (__x, __y) -> "
+            "CAST(__x AS DOUBLE) * CAST(__y AS DOUBLE)), "
+            "0.0D, (__acc, __p) -> __acc + __p)")
+
+
+def ddot_sql(a: str, b: str) -> str:
+    """SQL text of :func:`ddot` over two SQL operands."""
+    return (f"CAST(aggregate(zip_with({a}, {b}, (__x, __y) -> "
+            "CAST(CAST(__x AS DOUBLE) * CAST(__y AS DOUBLE) "
+            "AS DECIMAL(28,12))), CAST(0 AS DECIMAL(38,12)), "
+            "(__acc, __p) -> CAST(__acc + __p AS DECIMAL(38,12))) "
+            "AS DOUBLE)")
+
+
+def l2_norm_sql(a: str) -> str:
+    """SQL text of :func:`l2_norm` over one SQL operand."""
+    return (f"SQRT(aggregate({a}, 0.0D, (__acc, __x) -> "
+            "__acc + CAST(__x AS DOUBLE) * CAST(__x AS DOUBLE)))")
+
+
+def dot(a: str, b: str) -> Column:
     """Elementwise product then sum: ``aggregate(zip_with(a, b, *), 0.0, +)``."""
-    prod = F.zip_with(_c(a), _c(b), lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prod, F.lit(0.0), lambda acc, x: acc + x)
+    return F.expr(dot_sql(col_sql(a), col_sql(b)))
 
 
-def ddot(a: str | Column, b: str | Column) -> Column:
+def ddot(a: str, b: str) -> Column:
     """Decimal-exact dot product of two array<float> columns: products in
     double (exact IEEE), each rounded to DECIMAL(28,12) identically in any
     engine, summed exactly — so the result is bit-reproducible regardless
@@ -82,39 +124,37 @@ def ddot(a: str | Column, b: str | Column) -> Column:
     cross-engine fold prefer plain-double sums with an IDENTICAL fold
     order (Spark ``aggregate`` ≡ DuckDB ``list_reduce`` left fold — the
     q98 construction)."""
-    prod = F.zip_with(_c(a), _c(b), lambda p, q: (p.cast("double") * q.cast("double"))
-                      .cast("decimal(28,12)"))
-    return F.aggregate(prod, F.lit(0).cast("decimal(38,12)"),
-                       lambda acc, v: (acc + v).cast("decimal(38,12)")).cast("double")
+    return F.expr(ddot_sql(col_sql(a), col_sql(b)))
 
 
-def l2_norm(a: str | Column) -> Column:
-    return F.sqrt(F.aggregate(_c(a), F.lit(0.0),
-                              lambda acc, x: acc + x.cast("double") * x.cast("double")))
+def l2_norm(a: str) -> Column:
+    return F.expr(l2_norm_sql(col_sql(a)))
 
 
-def cosine_similarity(a: str | Column, b: str | Column) -> Column:
+def cosine_similarity(a: str, b: str) -> Column:
     """Cosine similarity between two array columns; NULL-safe on zero norms."""
-    d = dot(a, b)
-    na, nb = l2_norm(a), l2_norm(b)
-    return F.when((na > 0) & (nb > 0), d / (na * nb))
+    qa, qb = col_sql(a), col_sql(b)
+    na, nb = l2_norm_sql(qa), l2_norm_sql(qb)
+    return F.expr(f"CASE WHEN ({na} > 0) AND ({nb} > 0) "
+                  f"THEN {dot_sql(qa, qb)} / ({na} * {nb}) END")
 
 
-def sign_bucket(scores: Column, n_planes: int, offset: int = 0) -> Column:
+def sign_bucket(scores: str, n_planes: int, offset: int = 0) -> Column:
     """Pack the signs of ``n_planes`` hyperplane margins (elements
-    ``offset..offset+n_planes-1`` of a materialized score array) into one
-    integer LSH bucket id: bit ``i`` is set iff ``scores[offset+i] >= 0``.
+    ``offset..offset+n_planes-1`` of the materialized score array column
+    ``scores``) into one integer LSH bucket id: bit ``i`` is set iff
+    ``scores[offset+i] >= 0``. Bits up to 30 add as INT, higher ones as
+    BIGINT literals (the literal type Spark gives ``2**i``).
 
     Shared by the ANN bucketing (similarity.hyperplane_lsh_topk) and the
     near-dup banding (dedup.embedding_neardup_pairs) so the sign convention
     — and any fix to it — lives in exactly one place. Callers materialize
     ``scores`` into a column first; testing signs on the raw transform would
     re-evaluate every interpreted dot product per bit."""
-    out = F.lit(0)
-    for i in range(n_planes):
-        out = out + F.when(scores[offset + i] >= 0,
-                           F.lit(2 ** i)).otherwise(F.lit(0))
-    return out
+    s = col_sql(scores)
+    return F.expr("0" + "".join(
+        f" + CASE WHEN {s}[{offset + i}] >= 0 THEN {2 ** i} ELSE 0 END"
+        for i in range(n_planes)))
 
 
 def vectorize(cols: list[str], dtype: str = "double") -> Column:

@@ -343,8 +343,9 @@ def embedding_neardup_pairs(df: DataFrame, threshold: float = 0.9,
     """
     import numpy as np
 
-    from powerdatapipeline_spark.functions.vector import (array_lit, ddot,
-                                                          dot, sign_bucket)
+    from powerdatapipeline_spark.functions.vector import (array_sql, col_sql,
+                                                          ddot, dot, dot_sql,
+                                                          sign_bucket)
 
     if n_planes is None:
         n_planes = derive_n_planes(df.count())
@@ -358,15 +359,17 @@ def embedding_neardup_pairs(df: DataFrame, threshold: float = 0.9,
     # materialized into __sc before the bit tests — per-plane F.lit nodes and
     # per-bit dot() trees made driver-side plan construction (~2.7 s) cost
     # more than the query itself (the similarity.py scores() lesson). Built
-    # via array_lit (round 15): F.lit on a nested list still recursed into
-    # one Py4J call per element; the SQL-literal form is a single call
-    all_planes = array_lit([[float(x) for x in planes[t][i]]
+    # as one SQL text (round 15 literal, one-parse transform): F.lit on a
+    # nested list recursed into one Py4J call per element, and the
+    # lambda-API transform into several per expression node
+    all_planes = array_sql([[float(x) for x in planes[t][i]]
                             for t in range(n_tables) for i in range(n_planes)])
-    margins = F.transform(all_planes, lambda p: dot(F.col(vec_col), p))
+    margins = F.expr(f"transform({all_planes}, "
+                     f"__row -> {dot_sql(col_sql(vec_col), '__row')})")
 
     tables = F.array(*[F.struct(
         F.lit(t).alias("t"),
-        sign_bucket(F.col("__sc"), n_planes, t * n_planes).alias("bk"))
+        sign_bucket("__sc", n_planes, t * n_planes).alias("bk"))
         for t in range(n_tables)])
     # The 32 interpreted-HOF dot products are the dominant cost: compute them
     # ONCE into a persisted frame (the q29 pattern) instead of re-evaluating
@@ -651,11 +654,10 @@ def semdedup(df: DataFrame, centroids: DataFrame, id_col: str = "vec_id",
         centroids.select(
             F.col(centroids.columns[0]).alias("__cid"),
             F.col(centroids.columns[1]).alias("__cvec"))
-        .withColumn("__cnorm", F.sqrt(ddot(F.col("__cvec"),
-                                           F.col("__cvec")))))
+        .withColumn("__cnorm", F.sqrt(ddot("__cvec", "__cvec"))))
     base = (df.select(F.col(id_col), F.col(vec_col).alias("__v"))
-            .withColumn("__norm", F.sqrt(ddot(F.col("__v"), F.col("__v")))))
-    csim = F.round(ddot(F.col("__v"), F.col("__cvec"))
+            .withColumn("__norm", F.sqrt(ddot("__v", "__v"))))
+    csim = F.round(ddot("__v", "__cvec")
                    / (F.col("__norm") * F.col("__cnorm")), 6)
     scored = base.crossJoin(cents).select(
         id_col, "__v", "__norm", F.col("__cid"), csim.alias("__csim"))
@@ -683,9 +685,8 @@ def semdedup(df: DataFrame, centroids: DataFrame, id_col: str = "vec_id",
     # is lost — and the decimal-exact 6-rounded cosine decides only for
     # the survivors
     from powerdatapipeline_spark.functions.vector import dot as fdot
-    fast_cos = fdot(F.col("__va"), F.col("__vb")) \
-        / (F.col("__na") * F.col("__nb"))
-    pair_cos = F.round(ddot(F.col("__va"), F.col("__vb"))
+    fast_cos = fdot("__va", "__vb") / (F.col("__na") * F.col("__nb"))
+    pair_cos = F.round(ddot("__va", "__vb")
                        / (F.col("__na") * F.col("__nb")), 6)
     dropped = (a.join(b, "cell_id")
                .where(F.col("__ida") != F.col("__idb"))

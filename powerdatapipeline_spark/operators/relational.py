@@ -62,12 +62,6 @@ def top_k_per_group(df: DataFrame, partition_by: Sequence[str],
               .where(F.col(rank_col) <= k))
 
 
-def grouped_agg(df: DataFrame, keys: Sequence[str], aggs: Sequence[Column]) -> DataFrame:
-    """Hash aggregation with map-side partial aggregation (free in Spark —
-    the reference has no grouped agg machinery at all, SURVEY.md §2.4)."""
-    return df.groupBy(*keys).agg(*aggs)
-
-
 def pivot_table(df: DataFrame, index: Sequence[str], pivot_col: str,
                 values: Sequence, agg: Column) -> DataFrame:
     """Long→wide pivot (inverse of q58's unpivot; SURVEY.md §2.12).

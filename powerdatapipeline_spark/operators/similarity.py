@@ -17,9 +17,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from powerdatapipeline_spark.functions.vector import (
-    array_lit,
-    ddot,
+    array_sql,
+    col_sql,
     dot,
+    dot_sql,
     l2_norm,
     sign_bucket,
 )
@@ -58,8 +59,9 @@ def _with_cell(df: DataFrame, cents, vec_col: str,
     dot-product transform twice per row. Shared by the k-means E-step, the
     IVF index writer, and the in-memory IVF search so the assign-to-cell
     expression has exactly one definition."""
-    cent_arr = array_lit([[float(x) for x in c] for c in cents])
-    sc = F.transform(cent_arr, lambda c: dot(F.col(vec_col), c))
+    cent_arr = array_sql([[float(x) for x in c] for c in cents])
+    sc = F.expr(f"transform({cent_arr}, "
+                f"__row -> {dot_sql(col_sql(vec_col), '__row')})")
     return (df.withColumn("__sc", sc)
               .withColumn(cell_name,
                           F.array_position(F.col("__sc"), F.array_max("__sc")) - 1)
@@ -118,40 +120,41 @@ def hyperplane_lsh_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10,
     def scores(col: str):
         # per-plane signed margins, materialized once per row so the dot
         # products are not recomputed per bit. Each plane is ONE nested
-        # literal (not dim F.lit nodes) — with hundreds of scalar literals
-        # the Python expression-tree build and Catalyst analysis dominate
-        # the query on small inputs
-        return F.array(*[dot(col, array_lit([float(x) for x in planes[i]]))
-                         for i in range(n_planes)])
+        # literal (not dim F.lit nodes) and the whole array is ONE SQL
+        # parse — with hundreds of scalar literals or per-node lambda
+        # calls the Python expression-tree build dominates the query on
+        # small inputs
+        q = col_sql(col)
+        return F.expr("array(" + ", ".join(
+            dot_sql(q, array_sql([float(x) for x in planes[i]]))
+            for i in range(n_planes)) + ")")
 
     emb_b = (embeddings
              .withColumn("__sc", scores(vec_col))
              .withColumn("__bucket",
-                         sign_bucket(F.col("__sc"), n_planes).cast("long"))
+                         sign_bucket("__sc", n_planes).cast("long"))
              .drop("__sc"))
     qs = (queries.select(query_id_col, F.col(vec_col).alias("__qvec"))
           .withColumn("__sc", scores("__qvec"))
           .withColumn("__base",
-                      sign_bucket(F.col("__sc"), n_planes).cast("long")))
+                      sign_bucket("__sc", n_planes).cast("long")))
     if n_probe == 1:
         q_b = qs.withColumn("__bucket", F.col("__base"))
     else:
         # bits ranked by |margin| ascending — flip the closest hyperplanes
-        flip_order = F.transform(
-            F.array_sort(F.zip_with(
-                F.col("__sc"), F.sequence(F.lit(0), F.lit(n_planes - 1)),
-                lambda s, i: F.struct(F.abs(s).alias("margin"), i.alias("bit")))),
-            lambda st: st["bit"])
+        flip_order = ("transform(array_sort(zip_with(`__sc`, "
+                      f"sequence(0, {n_planes - 1}), (__s, __i) -> "
+                      "struct(abs(__s) AS margin, __i AS bit))), "
+                      "__st -> __st['bit'])")
         # exact 1L<<bit via a literal long lookup (n_planes ≤ 62 entries),
         # not pow(2.0, bit).cast(int): the double→int cast overflows at
         # bit 31 and pow loses exactness past 2^53
-        bit_masks = F.array(*[F.lit(1 << i).cast("long")
-                              for i in range(n_planes)])
-        probes = F.concat(
-            F.array(F.col("__base")),
-            F.transform(F.slice(flip_order, 1, n_probe - 1),
-                        lambda b: F.col("__base").bitwiseXOR(
-                            F.element_at(bit_masks, b.cast("int") + 1))))
+        bit_masks = "array(" + ", ".join(
+            f"CAST({1 << i} AS BIGINT)" for i in range(n_planes)) + ")"
+        probes = F.expr(
+            "concat(array(`__base`), transform(slice("
+            f"{flip_order}, 1, {n_probe - 1}), __b -> `__base` ^ "
+            f"element_at({bit_masks}, CAST(__b AS INT) + 1)))")
         q_b = qs.withColumn("__bucket", F.explode(probes))
     q_b = F.broadcast(q_b.select(query_id_col, "__qvec", "__bucket")
                       .withColumn("__qnrm", l2_norm("__qvec")))
@@ -257,14 +260,12 @@ def _probe_frame(queries: DataFrame, cents, n_probe: int,
     qs = queries.select(query_id_col, F.col(vec_col).alias("__qvec"))
     # argsort the cell scores expression-side: pair (−score, cell), sort,
     # take the n_probe best cell ids
-    cent_arr = array_lit([[float(x) for x in c] for c in cents])
-    sc = F.transform(cent_arr, lambda c: dot(F.col("__qvec"), c))
-    ranked_cells = F.slice(
-        F.transform(F.array_sort(F.zip_with(sc,
-                                            F.sequence(F.lit(0), F.lit(n_cells - 1)),
-                                            lambda s, i: F.struct((-s).alias("neg"), i.alias("cell")))),
-                    lambda st: st["cell"]),
-        1, n_probe)
+    cent_arr = array_sql([[float(x) for x in c] for c in cents])
+    sc = f"transform({cent_arr}, __row -> {dot_sql(col_sql('__qvec'), '__row')})"
+    ranked_cells = F.expr(
+        f"slice(transform(array_sort(zip_with({sc}, sequence(0, "
+        f"{n_cells - 1}), (__s, __i) -> struct(-__s AS neg, __i AS cell))), "
+        f"__st -> __st['cell']), 1, {n_probe})")
     return (qs.withColumn("__cells", ranked_cells)
               .withColumn(cell_name, F.explode("__cells"))
               .drop("__cells")
@@ -437,8 +438,9 @@ def random_projection(embeddings: DataFrame, out_dim: int = 16,
 
     rng = np.random.default_rng(seed)
     R = rng.standard_normal((out_dim, dim)) / np.sqrt(out_dim)
-    r_lit = array_lit([[float(x) for x in row] for row in R])
-    proj = F.transform(r_lit, lambda row: F.round(dot(vec_col, row), 6))
+    r_lit = array_sql([[float(x) for x in row] for row in R])
+    proj = F.expr(f"transform({r_lit}, "
+                  f"__row -> round({dot_sql(col_sql(vec_col), '__row')}, 6))")
     return embeddings.withColumn(out_col, proj)
 
 

@@ -931,42 +931,6 @@ def winsorize_report(df: DataFrame, value_col: str,
         .alias("sum_winsorized")))
 
 
-def effective_sample_size(df: DataFrame, weight_col,
-                          keys: Sequence[str] = ()) -> DataFrame:
-    """Kish effective sample size per group — the diagnostic every
-    weighted-mixture plan (mixture q86, temperature q141, DSIR q131,
-    weighted sampling q99) should publish next to its weights: n
-    weighted rows only carry ``ESS = (Σw)²/Σw²`` rows' worth of
-    statistical information, and a handful of huge weights silently
-    collapses a "million-document" source to a few hundred effective
-    documents.
-
-    ``weight_col`` is a Column (6-rounded by the operator, so Σw is
-    decimal-exact and Σw² multiplies two ~6-decimal doubles — the
-    parity-safe product class). One map-side-combined aggregation per
-    group. Returns ``(keys..., n, sum_w, ess, ess_ratio)`` with ESS
-    6-rounded and ``ess_ratio = ESS/n`` (1.0 = unweighted; → 0 =
-    weight collapse)."""
-    w = F.round(weight_col.cast("double"), 6)
-    base = df.select(*[F.col(k) for k in keys], w.alias("__w"))
-    sw = F.col("sum_w")
-    sww = F.col("__sww")
-    ess = sw * sw / sww
-    return (base.where(F.col("__w") > 0)
-            .groupBy(*[F.col(k) for k in keys])
-            .agg(F.count("*").cast("bigint").alias("n"),
-                 # (28,6) summand → sum accumulates at the (38,6) cap
-                 # instead of (28,6)'s 1e22 weight-mass ceiling
-                 F.sum(F.col("__w").cast("decimal(28,6)")).cast("double")
-                 .alias("sum_w"),
-                 F.sum((F.col("__w") * F.col("__w"))
-                       .cast("decimal(28,12)")).cast("double")
-                 .alias("__sww"))
-            .select(*keys, "n", "sum_w",
-                    F.round(ess, 6).alias("ess"),
-                    F.round(ess / F.col("n"), 6).alias("ess_ratio")))
-
-
 def _floor6(x) -> "F.Column":
     """Engine-stable 6-decimal rounding: ``floor(x*1e6 + 0.5)/1e6``.
 

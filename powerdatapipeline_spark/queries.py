@@ -34,18 +34,21 @@ inventory) so parity can be checked line-by-line.
 
 from __future__ import annotations
 
+import atexit
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from powerdatapipeline_spark.functions.datetime_funcs import _cyclical
+from powerdatapipeline_spark.functions.vector import ddot
 from powerdatapipeline_spark.operators import dedup as dd
 from powerdatapipeline_spark.operators import graph as gr
 from powerdatapipeline_spark.operators import relational as rel
 from powerdatapipeline_spark.operators import similarity as sim
 from powerdatapipeline_spark.operators import text as tx
 from powerdatapipeline_spark.operators import timeseries as ts
+from powerdatapipeline_spark.sources.readers import file_identity, read_parquet
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -109,7 +112,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         return load_events(spark, sf_dir)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     missing = [c for c in TABLE_COLUMNS.get(name, []) if c not in df.columns]
     if missing:
         raise ValueError(
@@ -122,17 +125,27 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 #: schema drift — the parquet twin of readers.check_columns for CSV)
 EVENTS_COLUMNS = ["event_id", "ts", "user_id", "event_type", "value", "props"]
 
+#: ``events_ts_unit`` results keyed by ``readers.file_identity``
+_ts_units: dict[tuple, str | None] = {}
+
 
 def events_ts_unit(sf_dir: str) -> str | None:
     """Physical time unit of ``events.parquet``'s ``ts`` column ('ns', 'us',
     'ms', 's') or None when it is a plain INT64. The driver regenerates the
     fixture between rounds with different physical schemas (round 3:
     TIMESTAMP(NANOS); round 4+: timestamp[us]), so the loaders dispatch on
-    the footer instead of assuming — one pyarrow footer read, no data scan."""
+    the footer instead of assuming — one pyarrow footer read, no data scan,
+    cached per file identity (:func:`readers.file_identity`)."""
     import pyarrow.parquet as pq
 
-    t = pq.read_schema(f"{sf_dir}/events.parquet").field("ts").type
-    return getattr(t, "unit", None)
+    path = f"{sf_dir}/events.parquet"
+    ident = file_identity(path)
+    if ident is not None and ident in _ts_units:
+        return _ts_units[ident]
+    unit = getattr(pq.read_schema(path).field("ts").type, "unit", None)
+    if ident is not None:
+        _ts_units[ident] = unit
+    return unit
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -155,11 +168,11 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit = events_ts_unit(sf_dir)
     if unit == "ns" or unit is None:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/events.parquet")
+        df = read_parquet(spark, f"{sf_dir}/events.parquet")
         if df.schema["ts"].dataType.simpleString() == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     else:
-        df = spark.read.parquet(f"{sf_dir}/events.parquet")
+        df = read_parquet(spark, f"{sf_dir}/events.parquet")
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     missing = [c for c in EVENTS_COLUMNS if c not in df.columns]
     if missing or df.schema["ts"].dataType.simpleString() != "timestamp":
@@ -882,13 +895,6 @@ def q29_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                              shingle_unit="word")
 
 
-def _ddot(x, y):
-    """Decimal-exact dot product — moved to functions/vector.ddot so
-    operators (embedding near-dup) share the same parity-safe kernel."""
-    from powerdatapipeline_spark.functions.vector import ddot
-    return ddot(x, y)
-
-
 _SQL_DOT = ("CAST(list_sum(list_transform(generate_series(1, 64), i -> "
             "CAST(CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)"
             " AS DECIMAL(28,12)))) AS DOUBLE)")
@@ -919,9 +925,9 @@ def q31_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
 
-    norm = F.sqrt(_ddot(F.col("embedding"), F.col("embedding")))
-    cos = F.round(_ddot(F.col("embedding"), F.col("qv"))
-                  / (norm * F.sqrt(_ddot(F.col("qv"), F.col("qv")))), 6)
+    norm = F.sqrt(ddot("embedding", "embedding"))
+    cos = F.round(ddot("embedding", "qv")
+                  / (norm * F.sqrt(ddot("qv", "qv"))), 6)
     scored = (emb.crossJoin(F.broadcast(qs))
               .select("query_id", "vec_id", cos.alias("cosine"),
                       F.round(norm, 6).alias("vec_norm")))
@@ -1227,16 +1233,31 @@ def q45_stream_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
                       "avg_value", "n")
 
 
-def _stream_scratch(prefix: str) -> str:
-    """Scratch base for the foreachBatch monitor queries' partial
-    frames + checkpoints — tmpfs-preferring (round 16: ~0.4-0.7 s of
-    small-file ext4 I/O per monitor run measured on q231). The partials
-    are read LAZILY by the finalize frame each query returns, so these
-    dirs are not removed at query end (same lifetime as the previous
-    /tmp mkdtemp, a few KB per run)."""
+def _run_monitor(prefix: str, start) -> str:
+    """Run one foreachBatch partials monitor to completion and return
+    its partials directory. ``start(partials, checkpoint)`` starts the
+    query. Both live in one tmpfs-preferring scratch dir (round 16:
+    ~0.4-0.7 s of small-file ext4 I/O per monitor run measured on
+    q231). The checkpoint is removed as soon as the query ends, on every
+    exit path: it is never resumed. The partials are read LAZILY by the
+    finalize frame each query returns, so the scratch dir is removed at
+    interpreter exit."""
+    import shutil
+
     from powerdatapipeline_spark.streaming.pipeline import scratch_dir
 
-    return scratch_dir(prefix)
+    tmp = scratch_dir(prefix)
+    atexit.register(shutil.rmtree, tmp, True)
+    ckpt = f"{tmp}/ckpt"
+    try:
+        q = start(f"{tmp}/partials", ckpt)
+        if not q.awaitTermination(300):
+            q.stop()
+            raise TimeoutError(f"{prefix.split('_')[0]} streaming job did "
+                               "not finish within 300 s")
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return f"{tmp}/partials"
 
 
 def _run_stream_to_memory(spark: SparkSession, frame: DataFrame,
@@ -1329,7 +1350,7 @@ def q47_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 F.col("embedding").alias("cvec")))
     scored = (emb.crossJoin(cents)
               .select("vec_id", "centroid_id",
-                      _ddot(F.col("embedding"), F.col("cvec")).alias("dot")))
+                      ddot("embedding", "cvec").alias("dot")))
     w = Window.partitionBy("vec_id").orderBy(F.col("dot").desc(), F.col("centroid_id"))
     assigned = scored.withColumn("rn", F.row_number().over(w)).where("rn = 1")
     return (assigned.groupBy("centroid_id")
@@ -7694,6 +7715,7 @@ def q190_streaming_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming run. Score = event value; label = even-user cohort (the
     A/B ranking-separation audit)."""
 
+    from powerdatapipeline_spark.operators.stats import auc_per_score_counts
     from powerdatapipeline_spark.streaming.stateful import (
         finalize_binary_auc, streaming_binary_auc)
 
@@ -7701,14 +7723,12 @@ def q190_streaming_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = stream.select(
         F.round(F.col("value").cast("double"), 6).alias("score"),
         (F.col("user_id") % 2 == 0).alias("label"))
-    tmp = _stream_scratch("q190_streaming_auc_")
-    q = streaming_binary_auc(scored, "score", "label",
-                             f"{tmp}/partials", f"{tmp}/ckpt")
-    finished = q.awaitTermination(300)
-    if not finished:
-        q.stop()
-        raise TimeoutError("q190 streaming job did not finish within 300 s")
-    return finalize_binary_auc(spark, f"{tmp}/partials")
+    partials = _run_monitor(
+        "q190_streaming_auc_",
+        lambda p, c: streaming_binary_auc(scored, "score", "label", p, c))
+    return finalize_binary_auc(
+        spark, partials,
+        schema=auc_per_score_counts(scored, "score", "label").schema)
 
 
 def q190_stream_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8061,18 +8081,17 @@ def q196_streaming_heavy_hitters(spark: SparkSession, sf_dir: str
     round-11 rotation."""
 
     from powerdatapipeline_spark.streaming.stateful import (
-        finalize_heavy_hitters, streaming_heavy_hitters)
+        finalize_heavy_hitters, heavy_hitter_partial,
+        streaming_heavy_hitters)
 
     stream = docs_stream_source(spark, sf_dir)
     terms = stream.select(F.explode(tx.tokens("text")).alias("term"))
-    tmp = _stream_scratch("q196_streaming_hh_")
-    q = streaming_heavy_hitters(terms, "term",
-                                f"{tmp}/partials", f"{tmp}/ckpt")
-    finished = q.awaitTermination(300)
-    if not finished:
-        q.stop()
-        raise TimeoutError("q196 streaming job did not finish within 300 s")
-    return finalize_heavy_hitters(spark, f"{tmp}/partials")
+    partials = _run_monitor(
+        "q196_streaming_hh_",
+        lambda p, c: streaming_heavy_hitters(terms, "term", p, c))
+    return finalize_heavy_hitters(
+        spark, partials,
+        schema=heavy_hitter_partial(terms, "term").schema)
 
 
 def q196_stream_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8218,16 +8237,12 @@ def q199_streaming_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = (events_stream_source(spark, sf_dir)
               .where(F.col("event_type") == "click"))
-    tmp = _stream_scratch("q199_streaming_ks_")
-    q = streaming_ks_drift(stream, "value",
-                           f"{tmp}/partials", f"{tmp}/ckpt")
-    finished = q.awaitTermination(300)
-    if not finished:
-        q.stop()
-        raise TimeoutError("q199 streaming job did not finish within 300 s")
+    partials = _run_monitor(
+        "q199_streaming_ks_",
+        lambda p, c: streaming_ks_drift(stream, "value", p, c))
     reference = load_events(spark, sf_dir).where(
         (F.col("event_type") == "view") & F.col("value").isNotNull())
-    return finalize_ks_drift(spark, reference, "value", f"{tmp}/partials")
+    return finalize_ks_drift(spark, reference, "value", partials)
 
 
 def q199_stream_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8909,14 +8924,10 @@ def q213_streaming_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = (events_stream_source(spark, sf_dir)
               .where(F.col("event_type") == "purchase"))
-    tmp = _stream_scratch("q213_streaming_quantile_")
-    q = streaming_quantile_monitor(stream, "value",
-                                   f"{tmp}/partials", f"{tmp}/ckpt")
-    finished = q.awaitTermination(300)
-    if not finished:
-        q.stop()
-        raise TimeoutError("q213 streaming job did not finish within 300 s")
-    return finalize_quantile_monitor(spark, f"{tmp}/partials")
+    partials = _run_monitor(
+        "q213_streaming_quantile_",
+        lambda p, c: streaming_quantile_monitor(stream, "value", p, c))
+    return finalize_quantile_monitor(spark, partials)
 
 
 def q213_stream_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9677,17 +9688,12 @@ def q231_streaming_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = (events_stream_source(spark, sf_dir)
               .where(F.col("event_type") == "click"))
-    tmp = _stream_scratch("q231_streaming_psi_")
-    q = streaming_psi_drift(stream, "value",
-                            f"{tmp}/partials", f"{tmp}/ckpt")
-    finished = q.awaitTermination(300)
-    if not finished:
-        q.stop()
-        raise TimeoutError("q231 streaming job did not finish within 300 s")
+    partials = _run_monitor(
+        "q231_streaming_psi_",
+        lambda p, c: streaming_psi_drift(stream, "value", p, c))
     reference = load_events(spark, sf_dir).where(
         F.col("event_type") == "view")
-    return finalize_psi_drift(spark, reference, "value",
-                              f"{tmp}/partials")
+    return finalize_psi_drift(spark, reference, "value", partials)
 
 
 def q231_stream_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11043,20 +11049,18 @@ def q258_streaming_woe(spark: SparkSession, sf_dir: str) -> DataFrame:
     run."""
 
     from powerdatapipeline_spark.streaming.stateful import (
-        finalize_woe_monitor, streaming_woe_monitor)
+        finalize_woe_monitor, streaming_woe_monitor, woe_partial)
 
     stream = events_stream_source(spark, sf_dir)
     bucket = F.least(F.floor(F.col("value").cast("double") / 50.0)
                      .cast("bigint"), F.lit(9).cast("bigint"))
-    tmp = _stream_scratch("q258_streaming_woe_")
-    q = streaming_woe_monitor(stream, bucket,
-                              F.col("event_type") == "purchase",
-                              f"{tmp}/partials", f"{tmp}/ckpt")
-    finished = q.awaitTermination(300)
-    if not finished:
-        q.stop()
-        raise TimeoutError("q258 streaming job did not finish within 300 s")
-    return finalize_woe_monitor(spark, f"{tmp}/partials")
+    label = F.col("event_type") == "purchase"
+    partials = _run_monitor(
+        "q258_streaming_woe_",
+        lambda p, c: streaming_woe_monitor(stream, bucket, label, p, c))
+    return finalize_woe_monitor(
+        spark, partials,
+        schema=woe_partial(stream, bucket, label).schema)
 
 
 @register("q259_join_size_estimate", """
@@ -11363,20 +11367,20 @@ def q266_streaming_krippendorff(spark: SparkSession,
     run."""
 
     from powerdatapipeline_spark.streaming.stateful import (
-        finalize_krippendorff_monitor, streaming_krippendorff_monitor)
+        finalize_krippendorff_monitor, krippendorff_partial,
+        streaming_krippendorff_monitor)
 
     docs = (docs_stream_source(spark, sf_dir)
             .where(F.col("doc_id").isNotNull()
                    & F.col("text").isNotNull()))
     ratings = _q249_ratings(docs)
-    tmp = _stream_scratch("q266_streaming_krippendorff_")
-    q = streaming_krippendorff_monitor(ratings, F.col("u"), F.col("c"),
-                                       f"{tmp}/partials", f"{tmp}/ckpt")
-    finished = q.awaitTermination(300)
-    if not finished:
-        q.stop()
-        raise TimeoutError("q266 streaming job did not finish within 300 s")
-    return finalize_krippendorff_monitor(spark, f"{tmp}/partials")
+    partials = _run_monitor(
+        "q266_streaming_krippendorff_",
+        lambda p, c: streaming_krippendorff_monitor(
+            ratings, F.col("u"), F.col("c"), p, c))
+    return finalize_krippendorff_monitor(
+        spark, partials,
+        schema=krippendorff_partial(ratings, F.col("u"), F.col("c")).schema)
 
 
 @register("q267_streaming_did",
@@ -11399,14 +11403,10 @@ def q267_streaming_did(spark: SparkSession, sf_dir: str) -> DataFrame:
         finalize_did_monitor, streaming_did_monitor)
 
     ev, group, post = _q257_design(events_stream_source(spark, sf_dir))
-    tmp = _stream_scratch("q267_streaming_did_")
-    q = streaming_did_monitor(ev, "value", group, post,
-                              f"{tmp}/partials", f"{tmp}/ckpt")
-    finished = q.awaitTermination(300)
-    if not finished:
-        q.stop()
-        raise TimeoutError("q267 streaming job did not finish within 300 s")
-    return finalize_did_monitor(spark, f"{tmp}/partials")
+    partials = _run_monitor(
+        "q267_streaming_did_",
+        lambda p, c: streaming_did_monitor(ev, "value", group, post, p, c))
+    return finalize_did_monitor(spark, partials)
 
 
 # Round-10 rotation (EXECUTED): CORRECTNESS_r09 recorded the q99-q149

@@ -32,6 +32,12 @@ _SCALE_DEFAULTS = {
     # ANSI off: match DuckDB's permissive casts closely enough for the
     # oracle queries while keeping NULL-on-error semantics.
     "spark.sql.ansi.enabled": "false",
+    # Origin capture off: by default every Column and DataFrame call
+    # walks the Python stack to record its call site, about 15 Py4J round
+    # trips for one ``F.col``. It only feeds the Python call-site block of
+    # runtime error messages; pass this key as "true" in ``extra_conf``
+    # to get it back when debugging.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -14,6 +14,7 @@ what a 100 TB deployment actually reads).
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -174,12 +175,54 @@ def read_csv(
     return df
 
 
+#: Session confs that change the schema Spark infers from one parquet
+#: footer; each is part of the schema cache key.
+PARQUET_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+#: Process-wide: a table load has no handle to keep a cache on, and the
+#: key changes whenever the file or an inference conf does.
+_parquet_schemas: dict[tuple, T.StructType] = {}
+
+
+def file_identity(path: str) -> tuple | None:
+    """``(absolute path, st_mtime_ns, st_size)`` of a local regular file,
+    or None for a directory, a URI or a missing path. Rewriting the file
+    changes the identity, so caches keyed on it never serve stale data."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+
+
 def read_parquet(spark: SparkSession, path: str | list[str],
                  select: list[str] | None = None) -> DataFrame:
+    """Parquet reader. A single local file is read with the schema Spark
+    inferred the first time it read that file under the same inference
+    confs: schema inference runs one Spark job per read, a given schema
+    runs none. Directories, URIs and path lists are inferred every time."""
     # parquet(paths: String*) is varargs — a Python list must be splatted,
     # or Py4J packs the whole list as one path and the read crashes
-    df = spark.read.parquet(*path) if isinstance(path, (list, tuple)) \
-        else spark.read.parquet(path)
+    if isinstance(path, (list, tuple)):
+        df = spark.read.parquet(*path)
+    elif (ident := file_identity(path)) is None:
+        df = spark.read.parquet(path)
+    else:
+        key = ident + tuple(spark.conf.get(k)
+                            for k in PARQUET_INFERENCE_CONFS)
+        schema = _parquet_schemas.get(key)
+        if schema is None:
+            df = spark.read.parquet(path)
+            _parquet_schemas[key] = df.schema
+        else:
+            df = spark.read.schema(schema).parquet(path)
     if select:
         df = df.select(*select)
     return df
@@ -188,7 +231,7 @@ def read_parquet(spark: SparkSession, path: str | list[str],
 def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
     """Load the driver's parquet tables from an sf directory."""
     names = names or TESTDATA_TABLES
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}
+    return {n: read_parquet(spark, f"{sf_dir}/{n}.parquet") for n in names}
 
 
 def check_columns(df: DataFrame, expected: list[str]) -> None:

@@ -242,6 +242,85 @@ def batch_ewma_iir(df: DataFrame, series_col: str, ts_col: str = "ts",
     return src.groupBy("series").applyInPandas(smooth, schema=EWMA_OUTPUT)
 
 
+def _start_monitor(stream: DataFrame, partial, partials_path: str,
+                   checkpoint: str):
+    """Start one of the eight partials monitors below: foreachBatch
+    reduces each micro-batch with ``partial`` and writes the result
+    under ``partials_path``; availableNow trigger.
+
+    foreachBatch is AT-LEAST-ONCE: a retried micro-batch re-runs this
+    sink, and a blind top-level append would stack the batch's counts
+    twice (silently wrong accumulated statistic after one executor
+    loss). Standard exactly-once recipe: overwrite the batch's OWN
+    batch=<id> subdirectory — replays reuse the SAME batch_id, so the
+    retry REPLACES the first attempt. Finalizers read the parent path;
+    partition discovery surfaces `batch` as a column the groupBy/agg
+    finalizers never reference. (Round-12 self-review.)"""
+    def _append(batch_df: DataFrame, batch_id: int) -> None:
+        (partial(batch_df).write.mode("overwrite")
+         .parquet(f"{partials_path}/batch={batch_id}"))
+
+    return (stream.writeStream.foreachBatch(_append)
+            .option("checkpointLocation", checkpoint)
+            .outputMode("update").trigger(availableNow=True).start())
+
+
+def _read_partials(spark, partials_path: str,
+                   schema: "T.StructType | str | None") -> DataFrame:
+    """The accumulated partials, read with the schema their ``_append``
+    writes: no schema-inference job, and a directory that holds no batch
+    yet reads as an empty frame instead of failing to infer. ``None``
+    infers the schema from the files."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(partials_path)
+
+
+#: partial schemas of the monitors whose partial columns have fixed types
+KS_PARTIAL = "__v double, cb bigint"
+QUANTILE_PARTIAL = "__v double, c bigint"
+PSI_PARTIAL = "bin bigint, n bigint"
+DID_PARTIAL = "__cell string, n bigint, s decimal(38,0), ss decimal(38,0)"
+
+
+def _value_counts(value_col: str, count_name: str):
+    """Per-distinct-value count partial over 6-rounded values, NULLs
+    excluded (ks_test's contract): the KS and quantile monitors' batch
+    reduction."""
+    def partial(df: DataFrame) -> DataFrame:
+        v = F.round(F.col(value_col).cast("double"), 6)
+        return (df.select(v.alias("__v"))
+                .where(F.col("__v").isNotNull())
+                .groupBy("__v")
+                .agg(F.count("*").cast("bigint").alias(count_name)))
+    return partial
+
+
+def heavy_hitter_partial(df: DataFrame, term_col: str) -> DataFrame:
+    """Per-term count partial ``(term, c)`` of one micro-batch."""
+    return (df.groupBy(F.col(term_col).alias("term"))
+            .agg(F.count("*").cast("bigint").alias("c")))
+
+
+def woe_partial(df: DataFrame, bucket, label) -> DataFrame:
+    """Per-bucket ``(bucket, n_pos, n_neg)`` count partial of one
+    micro-batch."""
+    return (df.select(bucket.alias("bucket"), label.alias("__y"))
+            .where(F.col("bucket").isNotNull() & F.col("__y").isNotNull())
+            .groupBy("bucket")
+            .agg(F.sum(F.when(F.col("__y"), 1).otherwise(0)).cast("bigint")
+                 .alias("n_pos"),
+                 F.sum(F.when(F.col("__y"), 0).otherwise(1)).cast("bigint")
+                 .alias("n_neg")))
+
+
+def krippendorff_partial(df: DataFrame, unit, label) -> DataFrame:
+    """``(__u, __c, nuc)`` unit-label count partial of one micro-batch."""
+    return (df.select(unit.alias("__u"), label.alias("__c"))
+            .where(F.col("__u").isNotNull() & F.col("__c").isNotNull())
+            .groupBy("__u", "__c")
+            .agg(F.count("*").cast("bigint").alias("nuc")))
+
+
 def streaming_binary_auc(stream: DataFrame, score_col: str,
                          label_col: str, partials_path: str,
                          checkpoint: str,
@@ -269,37 +348,28 @@ def streaming_binary_auc(stream: DataFrame, score_col: str,
     from powerdatapipeline_spark.operators.stats import \
         auc_per_score_counts
 
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        (auc_per_score_counts(batch_df, score_col, label_col, keys)
-         # foreachBatch is AT-LEAST-ONCE: a retried micro-batch re-runs
-         # this sink, and a blind top-level append would stack the
-         # batch's counts twice (silently wrong accumulated statistic
-         # after one executor loss). Standard exactly-once recipe:
-         # overwrite the batch's OWN batch=<id> subdirectory — replays
-         # reuse the SAME batch_id, so the retry REPLACES the first
-         # attempt. Finalizers read the parent path; partition
-         # discovery surfaces `batch` as a column the groupBy/agg
-         # finalizers never reference. (Round-12 self-review; applies
-         # to all eight monitors in this module.)
-         .write.mode("overwrite")
-         .parquet(f"{partials_path}/batch={batch_id}"))
-
-    return (stream.writeStream.foreachBatch(_append)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("update").trigger(availableNow=True).start())
+    return _start_monitor(
+        stream,
+        lambda df: auc_per_score_counts(df, score_col, label_col, keys),
+        partials_path, checkpoint)
 
 
 def finalize_binary_auc(spark, partials_path: str,
-                        keys: tuple[str, ...] = ()) -> DataFrame:
+                        keys: tuple[str, ...] = (),
+                        schema: "T.StructType | str | None" = None
+                        ) -> DataFrame:
     """Reduce the appended per-score partials to the final AUC frame —
     bit-identical to the batch operator on the same rows because both
     halves are shared code: the partials carry exact BIGINT counts (no
     rounding happened upstream) and ``auc_from_score_counts`` re-sums
-    per score before its one ordered pass."""
+    per score before its one ordered pass. ``schema`` is the partials'
+    schema (``auc_per_score_counts(stream, ...).schema``: the score
+    and key types come from the stream); None infers it."""
     from powerdatapipeline_spark.operators.stats import \
         auc_from_score_counts
 
-    return auc_from_score_counts(spark.read.parquet(partials_path), keys)
+    return auc_from_score_counts(
+        _read_partials(spark, partials_path, schema), keys)
 
 
 def streaming_ks_drift(stream: DataFrame, value_col: str,
@@ -316,22 +386,8 @@ def streaming_ks_drift(stream: DataFrame, value_col: str,
     stream's history.
 
     Returns the started StreamingQuery (availableNow trigger)."""
-
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        v = F.round(F.col(value_col).cast("double"), 6)
-        (batch_df.select(v.alias("__v"))
-         .where(F.col("__v").isNotNull())
-         .groupBy("__v")
-         .agg(F.count("*").cast("bigint").alias("cb"))
-         # idempotent per-batch write — see streaming_binary_auc's
-         # _append for the at-least-once rationale (shared by all
-         # eight monitors in this module)
-         .write.mode("overwrite")
-         .parquet(f"{partials_path}/batch={batch_id}"))
-
-    return (stream.writeStream.foreachBatch(_append)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("update").trigger(availableNow=True).start())
+    return _start_monitor(stream, _value_counts(value_col, "cb"),
+                          partials_path, checkpoint)
 
 
 def finalize_ks_drift(spark, reference: DataFrame, ref_value_col: str,
@@ -346,13 +402,9 @@ def finalize_ks_drift(spark, reference: DataFrame, ref_value_col: str,
     from powerdatapipeline_spark.operators.stats import \
         ks_from_value_counts
 
-    v = F.round(F.col(ref_value_col).cast("double"), 6)
-    ref = (reference.select(v.alias("__v"))
-           .where(F.col("__v").isNotNull())
-           .groupBy("__v")
-           .agg(F.count("*").cast("bigint").alias("ca"))
+    ref = (_value_counts(ref_value_col, "ca")(reference)
            .withColumn("cb", F.lit(0).cast("bigint")))
-    got = (spark.read.parquet(partials_path)
+    got = (_read_partials(spark, partials_path, KS_PARTIAL)
            .withColumn("ca", F.lit(0).cast("bigint"))
            .select("__v", "ca", "cb"))
     return ks_from_value_counts(ref.select("__v", "ca", "cb").union(got))
@@ -374,32 +426,27 @@ def streaming_heavy_hitters(term_stream: DataFrame, term_col: str,
 
     Returns the started StreamingQuery (caller awaits, then calls
     :func:`finalize_heavy_hitters`)."""
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df.groupBy(F.col(term_col).alias("term"))
-         .agg(F.count("*").cast("bigint").alias("c"))
-         # idempotent per-batch write — see streaming_binary_auc's
-         # _append for the at-least-once rationale (shared by all
-         # eight monitors in this module)
-         .write.mode("overwrite")
-         .parquet(f"{partials_path}/batch={batch_id}"))
-
-    return (term_stream.writeStream.foreachBatch(_append)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("update").trigger(availableNow=True).start())
+    return _start_monitor(term_stream,
+                          lambda df: heavy_hitter_partial(df, term_col),
+                          partials_path, checkpoint)
 
 
 def finalize_heavy_hitters(spark, partials_path: str, top_n: int = 20,
-                           width: int = 1024, depth: int = 3) -> DataFrame:
+                           width: int = 1024, depth: int = 3,
+                           schema: "T.StructType | str | None" = None
+                           ) -> DataFrame:
     """Re-reduce the appended per-batch count partials and publish the
     q113 report: exact top-N terms, their CMS estimates from the
     merged sketch, and the one-sided no-underestimate contract column.
     Addition commutes, so this is bit-identical to the batch operator
     over the union of all batches — the batch DuckDB oracle verifies
-    the streaming run."""
+    the streaming run. ``schema`` is the partials' schema
+    (``heavy_hitter_partial(stream, term_col).schema``); None infers
+    it."""
     from powerdatapipeline_spark.operators.stats import (cms_build,
                                                          cms_estimate)
 
-    counts = (spark.read.parquet(partials_path)
+    counts = (_read_partials(spark, partials_path, schema)
               .groupBy("term")
               .agg(F.sum("c").cast("bigint").alias("c")))
     top = counts.orderBy(F.desc("c"), F.asc("term")).limit(top_n)
@@ -427,22 +474,8 @@ def streaming_quantile_monitor(stream: DataFrame, value_col: str,
     by |distinct 6-rounded values|, not row count.
 
     Returns the started StreamingQuery (availableNow trigger)."""
-
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        v = F.round(F.col(value_col).cast("double"), 6)
-        (batch_df.select(v.alias("__v"))
-         .where(F.col("__v").isNotNull())
-         .groupBy("__v")
-         .agg(F.count("*").cast("bigint").alias("c"))
-         # idempotent per-batch write — see streaming_binary_auc's
-         # _append for the at-least-once rationale (shared by all
-         # eight monitors in this module)
-         .write.mode("overwrite")
-         .parquet(f"{partials_path}/batch={batch_id}"))
-
-    return (stream.writeStream.foreachBatch(_append)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("update").trigger(availableNow=True).start())
+    return _start_monitor(stream, _value_counts(value_col, "c"),
+                          partials_path, checkpoint)
 
 
 def finalize_quantile_monitor(spark, partials_path: str,
@@ -454,7 +487,7 @@ def finalize_quantile_monitor(spark, partials_path: str,
         quantiles_from_value_counts
 
     return quantiles_from_value_counts(
-        spark.read.parquet(partials_path), qs=qs)
+        _read_partials(spark, partials_path, QUANTILE_PARTIAL), qs=qs)
 
 
 def streaming_psi_drift(stream: DataFrame, value_col: str,
@@ -475,18 +508,11 @@ def streaming_psi_drift(stream: DataFrame, value_col: str,
     Returns the started StreamingQuery (availableNow trigger)."""
     from powerdatapipeline_spark.operators.stats import histogram
 
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        (histogram(batch_df, value_col, lo, hi, nbins)
-         .select("bin", F.col("n").cast("bigint").alias("n"))
-         # idempotent per-batch write — see streaming_binary_auc's
-         # _append for the at-least-once rationale (shared by all
-         # eight monitors in this module)
-         .write.mode("overwrite")
-         .parquet(f"{partials_path}/batch={batch_id}"))
-
-    return (stream.writeStream.foreachBatch(_append)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("update").trigger(availableNow=True).start())
+    return _start_monitor(
+        stream,
+        lambda df: (histogram(df, value_col, lo, hi, nbins)
+                    .select("bin", F.col("n").cast("bigint").alias("n"))),
+        partials_path, checkpoint)
 
 
 def finalize_psi_drift(spark, reference: DataFrame, ref_value_col: str,
@@ -502,7 +528,7 @@ def finalize_psi_drift(spark, reference: DataFrame, ref_value_col: str,
 
     r = (histogram(reference, ref_value_col, lo, hi, nbins)
          .select("bin", F.col("n").alias("__c_r")))
-    c = (spark.read.parquet(partials_path)
+    c = (_read_partials(spark, partials_path, PSI_PARTIAL)
          .groupBy("bin").agg(F.sum("n").cast("bigint").alias("__c_c")))
     both = (r.join(c, ["bin"], "full_outer")
             .select("bin",
@@ -526,35 +552,23 @@ def streaming_woe_monitor(stream: DataFrame, bucket, label,
     expressions :func:`operators.stats.woe_iv` takes. Returns the
     started StreamingQuery (availableNow trigger; caller awaits, then
     calls :func:`finalize_woe_monitor`)."""
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df.select(bucket.alias("bucket"), label.alias("__y"))
-         .where(F.col("bucket").isNotNull() & F.col("__y").isNotNull())
-         .groupBy("bucket")
-         .agg(F.sum(F.when(F.col("__y"), 1).otherwise(0)).cast("bigint")
-              .alias("n_pos"),
-              F.sum(F.when(F.col("__y"), 0).otherwise(1)).cast("bigint")
-              .alias("n_neg"))
-         # idempotent per-batch write — see streaming_binary_auc's
-         # _append for the at-least-once rationale (shared by all
-         # eight monitors in this module)
-         .write.mode("overwrite")
-         .parquet(f"{partials_path}/batch={batch_id}"))
-
-    return (stream.writeStream.foreachBatch(_append)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("update").trigger(availableNow=True).start())
+    return _start_monitor(stream, lambda df: woe_partial(df, bucket, label),
+                          partials_path, checkpoint)
 
 
-def finalize_woe_monitor(spark, partials_path: str) -> DataFrame:
+def finalize_woe_monitor(spark, partials_path: str,
+                         schema: "T.StructType | str | None" = None
+                         ) -> DataFrame:
     """Merge the accumulated per-bucket count partials by addition and
     publish the WOE/IV report through the SAME
     ``woe_from_bucket_counts`` finalizer the batch operator uses —
     stream ≡ batch bit-identically, so the batch DuckDB oracle
-    verifies the streaming run."""
+    verifies the streaming run. ``schema`` is the partials' schema
+    (``woe_partial(stream, bucket, label).schema``); None infers it."""
     from powerdatapipeline_spark.operators.stats import \
         woe_from_bucket_counts
 
-    per = (spark.read.parquet(partials_path)
+    per = (_read_partials(spark, partials_path, schema)
            .groupBy("bucket")
            .agg(F.sum("n_pos").cast("bigint").alias("n_pos"),
                 F.sum("n_neg").cast("bigint").alias("n_neg")))
@@ -579,32 +593,25 @@ def streaming_krippendorff_monitor(stream: DataFrame, unit, label,
     the units TOUCHED per batch (each unit needs its own m_u) — still
     a count frame, never the ratings stream. Returns the started
     StreamingQuery (availableNow trigger)."""
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df.select(unit.alias("__u"), label.alias("__c"))
-         .where(F.col("__u").isNotNull() & F.col("__c").isNotNull())
-         .groupBy("__u", "__c")
-         .agg(F.count("*").cast("bigint").alias("nuc"))
-         # idempotent per-batch write — see streaming_binary_auc's
-         # _append for the at-least-once rationale (shared by all
-         # eight monitors in this module)
-         .write.mode("overwrite")
-         .parquet(f"{partials_path}/batch={batch_id}"))
-
-    return (stream.writeStream.foreachBatch(_append)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("update").trigger(availableNow=True).start())
+    return _start_monitor(stream,
+                          lambda df: krippendorff_partial(df, unit, label),
+                          partials_path, checkpoint)
 
 
-def finalize_krippendorff_monitor(spark, partials_path: str) -> DataFrame:
+def finalize_krippendorff_monitor(spark, partials_path: str,
+                                  schema: "T.StructType | str | None" = None
+                                  ) -> DataFrame:
     """Merge the accumulated (unit, label) count partials by addition
     and publish alpha through the SAME
     ``krippendorff_from_unit_label_counts`` finalizer the batch
     operator uses — stream ≡ batch bit-identically, so q249's DuckDB
-    oracle verifies the streaming run."""
+    oracle verifies the streaming run. ``schema`` is the partials'
+    schema (``krippendorff_partial(stream, unit, label).schema``); None
+    infers it."""
     from powerdatapipeline_spark.operators.stats import \
         krippendorff_from_unit_label_counts
 
-    uc = (spark.read.parquet(partials_path)
+    uc = (_read_partials(spark, partials_path, schema)
           .groupBy("__u", "__c")
           .agg(F.sum("nuc").cast("bigint").alias("nuc")))
     return krippendorff_from_unit_label_counts(uc)
@@ -625,17 +632,9 @@ def streaming_did_monitor(stream: DataFrame, value_col: str, group, post,
     Returns the started StreamingQuery (availableNow trigger)."""
     from powerdatapipeline_spark.operators.stats import did_cell_moments
 
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        (did_cell_moments(batch_df, value_col, group, post)
-         # idempotent per-batch write — see streaming_binary_auc's
-         # _append for the at-least-once rationale (shared by all
-         # eight monitors in this module)
-         .write.mode("overwrite")
-         .parquet(f"{partials_path}/batch={batch_id}"))
-
-    return (stream.writeStream.foreachBatch(_append)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("update").trigger(availableNow=True).start())
+    return _start_monitor(
+        stream, lambda df: did_cell_moments(df, value_col, group, post),
+        partials_path, checkpoint)
 
 
 def finalize_did_monitor(spark, partials_path: str) -> DataFrame:
@@ -646,4 +645,5 @@ def finalize_did_monitor(spark, partials_path: str) -> DataFrame:
     from powerdatapipeline_spark.operators.stats import \
         did_from_cell_moments
 
-    return did_from_cell_moments(spark.read.parquet(partials_path))
+    return did_from_cell_moments(
+        _read_partials(spark, partials_path, DID_PARTIAL))

@@ -122,3 +122,122 @@ def test_stats_profile_matches_numpy(spark):
     assert abs(out.stddev_pop_qty - x.std()) < 1e-4
     assert abs(out.stddev_pop_price - y.std()) < 1e-4
     assert abs(out.corr_qty_price - np.corrcoef(x, y)[0][1]) < 1e-6
+
+
+# ------------------------------------------------- one-parse vector helpers
+def _lambda_dot(a, b):
+    prod = F.zip_with(F.col(a), F.col(b),
+                      lambda x, y: x.cast("double") * y.cast("double"))
+    return F.aggregate(prod, F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _lambda_ddot(a, b):
+    prod = F.zip_with(F.col(a), F.col(b),
+                      lambda p, q: (p.cast("double") * q.cast("double"))
+                      .cast("decimal(28,12)"))
+    return F.aggregate(prod, F.lit(0).cast("decimal(38,12)"),
+                       lambda acc, v: (acc + v).cast("decimal(38,12)")
+                       ).cast("double")
+
+
+def _lambda_l2_norm(a):
+    return F.sqrt(F.aggregate(F.col(a), F.lit(0.0),
+                              lambda acc, x: acc + x.cast("double")
+                              * x.cast("double")))
+
+
+def _lambda_cosine(a, b):
+    d, na, nb = _lambda_dot(a, b), _lambda_l2_norm(a), _lambda_l2_norm(b)
+    return F.when((na > 0) & (nb > 0), d / (na * nb))
+
+
+def _lambda_sign_bucket(scores, n_planes, offset=0):
+    out = F.lit(0)
+    for i in range(n_planes):
+        out = out + F.when(F.col(scores)[offset + i] >= 0,
+                           F.lit(2 ** i)).otherwise(F.lit(0))
+    return out
+
+
+def _vector_rows(seed=11, n=40, dim=70):
+    """Seeded float arrays with negative zeros, zeros, null elements, a
+    null array, an all-zero vector and a length mismatch."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    rows = []
+    for i in range(n):
+        a = [float(np.float32(x)) for x in rng.standard_normal(dim)]
+        b = [float(np.float32(x)) for x in rng.standard_normal(dim)]
+        for j in rng.integers(0, dim, 4):
+            a[j] = -0.0
+        b[int(rng.integers(0, dim))] = 0.0
+        if i % 7 == 3:
+            a[int(rng.integers(0, dim))] = None
+        if i % 11 == 5:
+            b[int(rng.integers(0, dim))] = None
+        rows.append((i, a, b))
+    rows.append((n, [0.0] * dim, [-0.0] * dim))
+    rows.append((n + 1, None, [1.0] * dim))
+    rows.append((n + 2, [1.0, -0.0, 2.0], [3.0, 4.0]))
+    return rows
+
+
+def _bits(v):
+    # repr keeps the sign of zero and every bit of a double
+    return None if v is None else repr(v)
+
+
+@pytest.mark.parametrize("ansi", ["false", "true"])
+def test_vector_helpers_equal_lambda_forms_bit_for_bit(spark, ansi):
+    from powerdatapipeline_spark.functions.vector import ddot, sign_bucket
+
+    df = spark.createDataFrame(_vector_rows(),
+                               "id int, a array<float>, b array<float>")
+    pairs = [
+        (dot("a", "b"), _lambda_dot("a", "b")),
+        (dot("a", "a"), _lambda_dot("a", "a")),
+        (ddot("a", "b"), _lambda_ddot("a", "b")),
+        (l2_norm("a"), _lambda_l2_norm("a")),
+        (l2_norm("b"), _lambda_l2_norm("b")),
+        (cosine_similarity("a", "b"), _lambda_cosine("a", "b")),
+        (sign_bucket("a", 8), _lambda_sign_bucket("a", 8)),
+        (sign_bucket("a", 8, 5), _lambda_sign_bucket("a", 8, 5)),
+        (sign_bucket("b", 62), _lambda_sign_bucket("b", 62)),
+        (sign_bucket("a", 62, 3), _lambda_sign_bucket("a", 62, 3)),
+    ]
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        # rows long enough for every index the sign_bucket pairs read
+        # (ANSI raises on an out-of-range array index)
+        full = df.where(F.size("a") >= 65) if ansi == "true" else df
+        out = full.select(
+            "id",
+            *[new.alias(f"n{k}") for k, (new, _) in enumerate(pairs)],
+            *[ref.alias(f"o{k}") for k, (_, ref) in enumerate(pairs)])
+        types = dict(out.dtypes)
+        rows = out.orderBy("id").collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
+    assert len(rows) >= 40
+    for k in range(len(pairs)):
+        assert types[f"n{k}"] == types[f"o{k}"], k
+        got = [_bits(r[f"n{k}"]) for r in rows]
+        want = [_bits(r[f"o{k}"]) for r in rows]
+        assert got == want, k
+    # the fixtures reach the edge cases they are there for
+    assert any(r["n0"] is None for r in rows)
+    assert any(r["n5"] is None for r in rows)
+    assert any(r["n8"] is not None and r["n8"] >= 2 ** 31 for r in rows)
+
+
+def test_vector_helpers_reject_shadowed_names():
+    from powerdatapipeline_spark.functions.vector import ddot
+
+    with pytest.raises(ValueError, match="lambda variable"):
+        dot("__x", "b")
+    with pytest.raises(ValueError, match="lambda variable"):
+        ddot("a", "__acc")
+    with pytest.raises(TypeError, match="column name"):
+        l2_norm(F.col("a"))

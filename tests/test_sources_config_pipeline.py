@@ -572,3 +572,93 @@ def test_binary_fixture_reused_and_content_addressed(spark, sf_dir):
     assert d3 != d1
     files = [f for f in os.listdir(d1) if f.endswith(".txt")]
     assert len(files) == 25
+
+
+# ------------------------------------------------ parquet schema cache
+def _jobs_in_group(spark, group, fn):
+    """Spark jobs ``fn()`` fires, counted by job group. A marker job runs
+    last in the same group; once the status tracker lists it, every
+    earlier job of the group has been listed too."""
+    import time
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        spark.range(1).collect()  # marker: one job
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deadline = time.time() + 30
+    while time.time() < deadline:
+        ids = sc.statusTracker().getJobIdsForGroup(group)
+        if ids and all(sc.statusTracker().getJobInfo(i) is not None
+                       and sc.statusTracker().getJobInfo(i).status
+                       == "SUCCEEDED" for i in ids):
+            break
+        time.sleep(0.05)
+    return out, len(ids) - 1
+
+
+def _write_region(sf, drop=None):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = {"r_regionkey": pa.array([0, 1], pa.int64()),
+            "r_name": pa.array(["AFRICA", "AMERICA"]),
+            "r_comment": pa.array(["x", "y"])}
+    if drop:
+        del cols[drop]
+    sf.mkdir(exist_ok=True)
+    pq.write_table(pa.table(cols), str(sf / "region.parquet"))
+
+
+def test_second_table_load_fires_no_job(spark, tmp_path):
+    from powerdatapipeline_spark.queries import _t
+
+    sf = tmp_path / "sf"
+    _write_region(sf)
+    first, n1 = _jobs_in_group(spark, "schema-cache-1",
+                               lambda: _t(spark, str(sf), "region"))
+    second, n2 = _jobs_in_group(spark, "schema-cache-2",
+                                lambda: _t(spark, str(sf), "region"))
+    assert n1 == 1      # the schema-inference job of the first read
+    assert n2 == 0
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_rewritten_table_invalidates_cached_schema(spark, tmp_path):
+    from powerdatapipeline_spark.queries import _t
+
+    sf = tmp_path / "sf"
+    _write_region(sf)
+    assert "r_name" in _t(spark, str(sf), "region").columns
+    _write_region(sf, drop="r_name")
+    with pytest.raises(ValueError, match="region fixture drifted"):
+        _t(spark, str(sf), "region")
+
+
+def test_schema_cache_keys_on_inference_confs(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from powerdatapipeline_spark.sources import read_parquet
+
+    path = str(tmp_path / "b.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"ab"], pa.binary())}), path)
+    key = "spark.sql.parquet.binaryAsString"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        assert read_parquet(spark, path).dtypes == [("b", "binary")]
+        spark.conf.set(key, "true")
+        assert read_parquet(spark, path).dtypes == [("b", "string")]
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_get_spark_turns_origin_capture_off(spark):
+    # per-call Python stack capture costs ~15 Py4J round trips per F.col
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"

@@ -196,3 +196,42 @@ def test_streaming_ewma_validates_alpha(spark):
         batch_ewma_iir(df, "series", alpha=0.0)
     with pytest.raises(ValueError):
         streaming_ewma(df, "series", alpha=0.0)
+
+
+# ------------------------------------------- schema'd partials reads
+def test_fixed_partial_schemas_match_what_append_writes(spark):
+    """The finalizers read the partials with these schemas, so they must
+    be exactly what the monitors' batch reductions produce."""
+    from powerdatapipeline_spark.operators.stats import did_cell_moments
+    from powerdatapipeline_spark.streaming import stateful as sf
+
+    df = spark.createDataFrame([(True, False, 1.5)],
+                               "g boolean, p boolean, v double")
+
+    def ddl(frame):
+        return ", ".join(f"{c} {t}" for c, t in frame.dtypes)
+
+    assert ddl(sf._value_counts("v", "cb")(df)) == sf.KS_PARTIAL
+    assert ddl(sf._value_counts("v", "c")(df)) == sf.QUANTILE_PARTIAL
+    assert ddl(did_cell_moments(df, "v", F.col("g"), F.col("p"))) \
+        == sf.DID_PARTIAL
+    from powerdatapipeline_spark.operators.stats import histogram
+    psi = (histogram(df, "v", 0.0, 200.0, 10)
+           .select("bin", F.col("n").cast("bigint").alias("n")))
+    assert ddl(psi) == sf.PSI_PARTIAL
+
+
+def test_empty_partials_dir_finalizes_without_inference(spark, tmp_path):
+    """A partials dir that no micro-batch has written to yet reads as an
+    empty frame (it used to fail with 'Unable to infer schema'): the
+    quantile monitor finalizes to its all-NULL row, the DiD monitor
+    raises its own < 2-rows-per-cell contract error."""
+    from powerdatapipeline_spark.streaming.stateful import (
+        finalize_did_monitor, finalize_quantile_monitor)
+
+    p = tmp_path / "partials"
+    p.mkdir()
+    assert finalize_quantile_monitor(spark, str(p)).collect() == [
+        Row(n=None, q_50=None, q_90=None, q_99=None)]
+    with pytest.raises(Exception, match="a cell has < 2 rows"):
+        finalize_did_monitor(spark, str(p)).collect()

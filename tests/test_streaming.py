@@ -327,3 +327,64 @@ def test_stream_harness_removes_checkpoint_when_start_fails(
         _run_stream_to_memory(spark, counts, "start_fails", "append")
     assert list(tmp_path.iterdir()) == []
     assert spark.conf.get(ndb_key, "true") == before
+
+
+def test_q213_removes_checkpoint_now_and_partials_at_exit(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """The partials monitors drop their checkpoint as soon as the query
+    ends; the partials, which the returned frame reads lazily, go at
+    interpreter exit."""
+    import atexit
+    import tempfile
+
+    from powerdatapipeline_spark.queries import REGISTRY
+    from powerdatapipeline_spark.streaming import pipeline
+
+    monkeypatch.setattr(
+        pipeline, "scratch_dir",
+        lambda prefix: tempfile.mkdtemp(prefix=prefix, dir=tmp_path))
+    at_exit = []
+    monkeypatch.setattr(atexit, "register",
+                        lambda fn, *a: at_exit.append((fn, a)))
+    df = REGISTRY["q213_streaming_quantile"][0](spark, sf_dir)
+    (scratch,) = tmp_path.iterdir()
+    assert not (scratch / "ckpt").exists()
+    assert (scratch / "partials").is_dir()
+    assert df.count() == 1
+    for fn, a in at_exit:
+        fn(*a)
+    assert not scratch.exists()
+
+
+def test_stream_state_partitions_sizes_paths_and_uris(spark, tmp_path):
+    """Source bytes come from Hadoop FileSystem: a plain path, its
+    file:// URI and a directory size as the local walk did, and a
+    missing path counts 0 bytes."""
+    import os
+
+    from powerdatapipeline_spark.streaming.pipeline import (
+        state_sized, stream_state_partitions)
+
+    f = tmp_path / "one.bin"
+    f.write_bytes(b"x" * 1234)
+    d = tmp_path / "dir"
+    (d / "sub").mkdir(parents=True)
+    (d / "a.bin").write_bytes(b"y" * 100)
+    (d / "sub" / "b.bin").write_bytes(b"z" * 55)
+
+    def walked(p):
+        return sum(os.path.getsize(os.path.join(r, n))
+                   for r, _, names in os.walk(p) for n in names)
+
+    # one byte per partition under a huge ceiling: the count IS the bytes
+    with state_sized(spark, 10 ** 9):
+        def nbytes(*paths):
+            return stream_state_partitions(spark, *paths,
+                                           bytes_per_partition=1, floor=0)
+        assert nbytes(str(f)) == os.path.getsize(f) == 1234
+        assert nbytes(f.as_uri()) == 1234
+        assert nbytes(str(d)) == walked(d) == 155
+        assert nbytes(d.as_uri()) == 155
+        assert nbytes(str(tmp_path / "missing")) == 0
+        assert nbytes(str(f), str(d), str(tmp_path / "missing")) == 1389
+    assert stream_state_partitions(spark, str(tmp_path / "missing")) == 2
