@@ -3,9 +3,25 @@ reference's orchestration layer (``get_dictdataset_from_csv`` →
 ``add_select_resample_csvdataset`` → featurize → window → split; reference
 datapipeline/datapipeline.py:34-82, 619-650, 427-503; SURVEY.md §3).
 
-One declarative DataFrame chain per config; no eager probes in the plan
-(the reference forces partial execution repeatedly with ``take(1)`` debug
-prints — SURVEY.md §3.4; here verbosity is the caller's problem).
+One DataFrame chain per config. Besides the caller's sink, a batch run
+executes these actions and no others (the reference forces partial
+execution repeatedly with ``take(1)`` debug prints — SURVEY.md §3.4; here
+verbosity is the caller's problem):
+
+* ``build_pipeline``: the interval audit (``check_intervals``), on the
+  selected rows, before anything is materialized — a broken cadence
+  raises from ``build_pipeline``;
+* ``build_pipeline``: the feature fit (``FeatureSpace.fit``), when
+  ``normalize`` or ``onehot_features`` is set;
+* ``split``: the percentile thresholds.
+
+One evaluation per run: a batch frame gets one lazy local checkpoint after
+the resample (and the optional ``downsampling_rate`` sample), right before
+featurize. The first consumer (the fit, else the split percentile, else
+the caller's sink) fills its blocks; the fit, the split thresholds, every
+split write and the sliding windows then read those blocks instead of
+parsing the source and re-running the resample shuffle. A streaming frame
+is never checkpointed.
 """
 
 from __future__ import annotations
@@ -14,6 +30,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from powerdatapipeline_spark.config.model import RunConfig
 from powerdatapipeline_spark.functions.datetime_funcs import with_derived_columns
@@ -142,6 +159,14 @@ def transform(df: DataFrame, cfg: RunConfig) -> DataFrame:
         # df.sample is unsupported on streams; streaming subsampling would
         # be a modulo filter on the event id/timestamp instead
         df = df.sample(fraction=tr.downsampling_rate, seed=42)
+    if not df.isStreaming:
+        # one evaluation per run (module docstring). Lazy: the first
+        # consumer fills the blocks, so this adds no job. Local, not
+        # persist(): the blocks belong to this frame alone (a rerun over
+        # a rewritten CSV at the same path cannot be served them) and
+        # are freed once the frame is garbage-collected; they do not
+        # survive executor loss.
+        df = df.localCheckpoint(eager=False)
     df = featurize(df, cfg)
     if tr.window_size and sec_col and sec_col in df.columns and not df.isStreaming:
         # row-based sliding windows are not supported on streams; the
@@ -154,7 +179,8 @@ def transform(df: DataFrame, cfg: RunConfig) -> DataFrame:
 
 def featurize(df: DataFrame, cfg: RunConfig) -> DataFrame:
     """FeatureSpace stage (reference get_featurespace/apply_featurespace,
-    datapipeline.py:273-401): z-score numeric features (honoring
+    datapipeline.py:273-401): z-score every numeric column (any
+    ``NumericType``: tinyint through decimal; honoring
     ``skip_normalization``), one-hot the ``onehot_features`` (int, depth 5 —
     reference hard-codes 5, Appendix A.7); stats fitted on the first
     ``n_rows_to_adapt_featurespace`` rows, exactly the reference's adapt
@@ -167,11 +193,11 @@ def featurize(df: DataFrame, cfg: RunConfig) -> DataFrame:
     from powerdatapipeline_spark.features import FeatureSpace, FeatureSpec
 
     specs, keep = [], []
-    numeric = {"double", "float", "int", "bigint", "smallint"}
-    for c, t in df.dtypes:
+    for f in df.schema.fields:
+        c = f.name
         if c in tr.onehot_features:
             specs.append(FeatureSpec(c, "int", "one_hot"))
-        elif tr.normalize and t in numeric:
+        elif tr.normalize and isinstance(f.dataType, T.NumericType):
             specs.append(FeatureSpec(c, "float", "normalized",
                                      skip_normalization=c in tr.skip_normalization))
         else:

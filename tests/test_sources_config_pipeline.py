@@ -662,3 +662,105 @@ def test_get_spark_turns_origin_capture_off(spark):
     # per-call Python stack capture costs ~15 Py4J round trips per F.col
     assert spark.conf.get(
         "spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+# ------------------------------------------------ one evaluation per run
+def _f1_config(tmp_path, drop=None):
+    """A small F1-shaped run: 1 s cadence, mean-downsampled to 60 s,
+    normalized. ``drop`` leaves that second out of the CSV."""
+    p = tmp_path / "f1.csv"
+    p.write_text("datetimestampseconds,W,DCW\n" + "".join(
+        f"{i},{(i * 7) % 13 / 3:.3f},{(i * 5) % 11 / 7:.3f}\n"
+        for i in range(600) if i != drop))
+    return RunConfig(name="F1", datapipeline={
+        "extraction": {"data_files": [str(p)],
+                       "columns_original": ["datetimestampseconds", "W", "DCW"]},
+        "transformation": {"features": ["W", "DCW", "datetimestampseconds"],
+                           "time_interval_original": 1,
+                           "time_interval_desired": 60, "resample": True,
+                           "resample_method": "mean", "normalize": True,
+                           "n_rows_to_adapt_featurespace": 10 ** 9}})
+
+
+def _f1_splits(spark, tmp_path):
+    from powerdatapipeline_spark.plans.pipeline import split
+
+    cfg = _f1_config(tmp_path)
+    return split(build_pipeline(spark, cfg), cfg, "bucket_ts")
+
+
+def test_pipeline_splits_read_one_materialization(spark, tmp_path):
+    parts = _f1_splits(spark, tmp_path)
+    for frame in parts:
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        assert "FileScan csv" not in plan
+        assert "ExistingRDD" in plan
+    assert [f.count() for f in parts] == [8, 1, 1]
+
+
+def test_each_split_write_runs_one_job(spark, tmp_path):
+    from powerdatapipeline_spark.sources.readers import write_parquet
+
+    parts = _f1_splits(spark, tmp_path)
+    for name, frame in zip(("train", "test", "eval"), parts):
+        out = str(tmp_path / name)
+        _, n = _jobs_in_group(spark, f"one-eval-{name}",
+                              lambda: write_parquet(frame, out))
+        assert n == 1
+        assert sorted(spark.read.parquet(out).collect()) == \
+            sorted(frame.collect())
+
+
+def test_streaming_pipeline_is_never_checkpointed(spark, tmp_path,
+                                                  monkeypatch):
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
+
+    def refuse(self, *a, **k):
+        raise RuntimeError("localCheckpoint called")
+
+    monkeypatch.setattr(ClassicDF, "localCheckpoint", refuse)
+    src = tmp_path / "f1stream"
+    src.mkdir()
+    batch = _f1_config(tmp_path)
+    (src / "f1.csv").write_text((tmp_path / "f1.csv").read_text())
+    ex = batch.datapipeline.extraction.model_dump()
+    stream_cfg = RunConfig(name="F1s", datapipeline={
+        "extraction": {**ex, "data_files": [], "use_streaming": True,
+                       "streaming_data_source": str(src)},
+        "transformation": batch.datapipeline.transformation.model_dump()})
+    assert build_pipeline(spark, stream_cfg).isStreaming
+    # the batch twin reaches the patched method, so the patch is live
+    with pytest.raises(RuntimeError, match="localCheckpoint called"):
+        build_pipeline(spark, batch)
+
+
+def test_build_pipeline_raises_on_broken_cadence(spark, tmp_path):
+    with pytest.raises(AssertionError, match="interval audit failed"):
+        build_pipeline(spark, _f1_config(tmp_path, drop=300))
+
+
+def test_featurize_normalizes_tinyint_and_decimal(spark, tmp_path):
+    p = tmp_path / "d.csv"
+    p.write_text("datetimestampseconds,W,B,cat\n" + "".join(
+        f"{i * 60},{i / 2:.3f},{(i * 3) % 7},{i % 3}\n" for i in range(12)))
+    cfg = RunConfig(name="dec", datapipeline={
+        "extraction": {"data_files": [str(p)],
+                       "columns_original": ["datetimestampseconds", "W", "B",
+                                            "cat"],
+                       "column_dtypes": {"W": "decimal(10,3)",
+                                         "B": "tinyint", "cat": "tinyint"}},
+        "transformation": {"features": ["W", "B", "cat",
+                                        "datetimestampseconds"],
+                           "time_interval_original": 60, "normalize": True,
+                           "skip_normalization": ["datetimestampseconds"],
+                           "onehot_features": ["cat"],
+                           "n_rows_to_adapt_featurespace": 10 ** 9}})
+    rows = build_pipeline(spark, cfg).orderBy("datetimestampseconds").collect()
+    for c in ("W", "B"):
+        vals = [float(r[c]) for r in rows]
+        mean = sum(vals) / len(vals)
+        assert abs(mean) < 1e-9
+        assert abs(sum((v - mean) ** 2 for v in vals) / len(vals) - 1) < 1e-9
+    # one-hot and skip_normalization still win over the numeric rule
+    assert [r.cat_onehot_1 for r in rows[:3]] == [0.0, 1.0, 0.0]
+    assert [r.datetimestampseconds for r in rows[:2]] == [0.0, 60.0]

@@ -2,10 +2,26 @@
 """Generate PLANS.md: a compact physical-plan audit of every registry query
 (operator tree + pushed filters + codegen spans), the evidence that each
 plan is shaped for scale (broadcast where intended, pushdown reaching scans,
-no accidental nested-loop joins or global sorts)."""
+no accidental nested-loop joins or global sorts).
+
+Usage:
+  python tools/dump_plans.py [--out DIR]
+      regenerate DIR/PLANS.md (default: the current directory)
+  python tools/dump_plans.py --queries q135_pagerank,q45_streaming_downsample
+                             [--out DIR] [--lazy]
+      write each named registry query's ``explain("formatted")`` to
+      DIR/<name>.txt. Streaming queries dump their pre-sink
+      ``qNN_stream_frame`` (the DAG the micro-batches run; the memory sink
+      has no batch plan to explain). ``--lazy`` identity-patches
+      ``localCheckpoint`` (and keeps persisted subtrees registered) so
+      materializing operators show their full plan rather than the
+      checkpoint scan. Driver-side plan build only, at sf0.001: eager
+      operators still run their build-time jobs.
+"""
 
 from __future__ import annotations
 
+import argparse
 import os
 import re
 import sys
@@ -278,7 +294,21 @@ def _disable_persist() -> None:
         cls.localCheckpoint = lambda self, *a, **k: self
 
 
-def _streaming_variants(spark, sf):
+#: streaming registry queries -> their pre-sink frame builders (queries.py)
+STREAM_FRAMES = {
+    "q45_streaming_downsample": "q45_stream_frame",
+    "q65_stream_stream_join": "q65_stream_frame",
+    "q95_streaming_sessionize": "q95_stream_frame",
+    "q124_stream_static_enrich": "q124_stream_frame",
+    "q190_streaming_auc": "q190_stream_frame",
+    "q196_streaming_heavy_hitters": "q196_stream_frame",
+    "q199_streaming_ks_drift": "q199_stream_frame",
+    "q213_streaming_quantile": "q213_stream_frame",
+    "q231_streaming_psi": "q231_stream_frame",
+}
+
+
+def _streaming_variants(spark, sf, names=STREAM_FRAMES):
     """Lazy PRE-SINK frames for the streaming registry queries: their
     builders execute an availableNow job and return the memory-sink table,
     so the executed plan is just a LocalTableScan — auditing that would
@@ -288,29 +318,10 @@ def _streaming_variants(spark, sf):
     SAME ``qNN_stream_frame`` builders the registry queries sink
     (queries.py) — the audit certifies the DAG each query actually runs,
     not a hand-written twin that could drift."""
-    from powerdatapipeline_spark.queries import (
-        q45_stream_frame,
-        q65_stream_frame,
-        q95_stream_frame,
-        q124_stream_frame,
-        q190_stream_frame,
-        q196_stream_frame,
-        q199_stream_frame,
-        q213_stream_frame,
-        q231_stream_frame,
-    )
+    from powerdatapipeline_spark import queries as Q
 
-    return {
-        "q45_streaming_downsample": q45_stream_frame(spark, sf),
-        "q65_stream_stream_join": q65_stream_frame(spark, sf),
-        "q95_streaming_sessionize": q95_stream_frame(spark, sf),
-        "q124_stream_static_enrich": q124_stream_frame(spark, sf),
-        "q190_streaming_auc": q190_stream_frame(spark, sf),
-        "q196_streaming_heavy_hitters": q196_stream_frame(spark, sf),
-        "q199_streaming_ks_drift": q199_stream_frame(spark, sf),
-        "q213_streaming_quantile": q213_stream_frame(spark, sf),
-        "q231_streaming_psi": q231_stream_frame(spark, sf),
-    }
+    return {name: getattr(Q, STREAM_FRAMES[name])(spark, sf)
+            for name in names if name in STREAM_FRAMES}
 
 
 def _iterative_variants(spark, sf):
@@ -576,15 +587,9 @@ def plan_summary(df) -> tuple[list[str], list[str], list[str],
     return ops, pushed, flags, unpartitioned_windows(txt)
 
 
-def main() -> None:
-    # Audit the AT-SCALE plan shape: global_prefix's round-14 small-input
-    # fast path would otherwise collapse every adopter to the single-task
-    # window at sf0.001 (the probe sees a tiny frame) and the audit would
-    # stop policing the distributed two-pass it exists to verify.
-    os.environ["SPARK_GRAFT_GP_SMALL_MAX_BYTES"] = "0"
-    spark = get_spark("plan-dump", master="local[4]", shuffle_partitions=4,
-                      extra_conf={"spark.ui.showConsoleProgress": "false"})
-    spark.sparkContext.setLogLevel("ERROR")
+def write_plans_md(spark, out_dir: str) -> None:
+    """The full audit: every registry query plus the flagship, with
+    persist and checkpoints disabled, into ``out_dir``/PLANS.md."""
     _disable_persist()
     out = ["# PLANS — physical-plan audit (auto-generated by tools/dump_plans.py)",
            "",
@@ -647,9 +652,78 @@ def main() -> None:
                        "pattern, constant-ish rows at any SF)")
         out.append("")
     out.append(f"Red-flag queries: {n_flags}")
-    with open("PLANS.md", "w") as f:
+    path = os.path.join(out_dir, "PLANS.md")
+    with open(path, "w") as f:
         f.write("\n".join(out) + "\n")
-    print(f"PLANS.md written; red flags: {n_flags}")
+    print(f"{path} written; red flags: {n_flags}")
+
+
+def _lazy_checkpoints() -> None:
+    """Identity-patch ``localCheckpoint`` so materializing operators
+    (ngram_cosine_pairs, bpe_train, embedding_neardup_pairs, …) expose
+    their full physical plan instead of the checkpoint-scan stub; plan
+    shape is unchanged, only the lineage cut is. ``unpersist`` becomes a
+    no-op so the dump still shows the InMemoryTableScan substitutions an
+    operator runs with (operators unpersist on exit)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    DataFrame.localCheckpoint = lambda self, *a, **k: self
+    DataFrame.unpersist = lambda self, *a, **k: self
+
+
+def dump_queries(spark, names: list[str], out_dir: str, lazy: bool) -> None:
+    """``explain("formatted")`` of each registry query in ``names`` into
+    ``out_dir``/<name>.txt."""
+    if lazy:
+        _lazy_checkpoints()
+    streams = _streaming_variants(spark, SF, names)
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        if name in streams:
+            df, label = streams[name], f"{name} ({STREAM_FRAMES[name]})"
+        else:
+            df, label = REGISTRY[name][0](spark, SF), name
+        txt = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted")
+        path = os.path.join(out_dir, f"{name}.txt")
+        with open(path, "w") as f:
+            f.write(f"== {label} @ {SF}{' (lazy)' if lazy else ''} ==\n\n")
+            f.write(txt)
+        print(f"wrote {path}")
+
+
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(
+        description="PLANS.md audit, or per-query formatted plans.")
+    ap.add_argument("--queries", metavar="NAMES",
+                    help="comma-separated registry names: dump their "
+                         "formatted plans instead of PLANS.md")
+    ap.add_argument("--out", metavar="DIR", default=".",
+                    help="output directory (default: .)")
+    ap.add_argument("--lazy", action="store_true",
+                    help="with --queries: identity-patch localCheckpoint")
+    args = ap.parse_args(argv)
+    if args.lazy and not args.queries:
+        ap.error("--lazy needs --queries (the PLANS.md audit always "
+                 "disables persist and checkpoints)")
+    names = [n for n in (args.queries or "").split(",") if n]
+    unknown = [n for n in names if n not in REGISTRY]
+    if unknown:
+        ap.error(f"not in the registry: {', '.join(unknown)}")
+    if not names:
+        # Audit the AT-SCALE plan shape: global_prefix's round-14
+        # small-input fast path would otherwise collapse every adopter to
+        # the single-task window at sf0.001 (the probe sees a tiny frame)
+        # and the audit would stop policing the distributed two-pass it
+        # exists to verify.
+        os.environ["SPARK_GRAFT_GP_SMALL_MAX_BYTES"] = "0"
+    spark = get_spark("plan-dump", master="local[4]", shuffle_partitions=4,
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
+    spark.sparkContext.setLogLevel("ERROR")
+    if names:
+        dump_queries(spark, names, args.out, args.lazy)
+    else:
+        write_plans_md(spark, args.out)
 
 
 if __name__ == "__main__":
