@@ -31,6 +31,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every registry query, in registration order."""
     return {name: fn for name, (fn, _oracle) in REGISTRY.items()}
 
 

@@ -386,11 +386,11 @@ def main() -> None:
     # live on q152 (17.9 s cold vs 5.0 s 4-rep minimum) and q153; warm
     # that path at sf0.001 so the recorded numbers measure the
     # operators, not the compiler
-    # Warm IMMEDIATELY BEFORE timing, not once up front: the r11 head
-    # rotation moved q152/q153 ~200 registry positions after the warm
-    # pass, far enough that the JIT/codegen cache evicts their compiled
-    # classes before the timed run (q152 re-measured 11 s with the
-    # stale up-front warm vs ~5-6 s warm-adjacent).
+    # Warm IMMEDIATELY BEFORE timing, not once up front: an up-front
+    # warm pass runs far enough ahead of q152/q153's turn in the registry
+    # loop that the JIT/codegen cache evicts their compiled classes
+    # before the timed run (q152 re-measured 11 s with the stale
+    # up-front warm vs ~5-6 s warm-adjacent).
     warm_first = {"q152_correlation_matrix", "q153_bootstrap_ci"}
 
     # pinned micro-set AFTER warm-up, BEFORE the timed loop: warm-path

@@ -79,16 +79,22 @@ class FeatureSpace:
                 exprs += [F.sort_array(F.collect_set(F.col(s.name)))
                           .alias(f"{s.name}__vocab")]
         row = sample.agg(*exprs).first().asDict() if exprs else {}
+
+        def num(name, key):
+            # decimal columns aggregate to Decimal, which JSON cannot hold
+            v = row[f"{name}__{key}"]
+            return None if v is None else float(v)
+
         for s in self.specs:
             if s.feature_type == "float" and s.output_mode == "normalized":
                 if s.skip_normalization:
                     self.stats[s.name] = {"mean": 0.0, "var": 1.0}
                 else:
-                    self.stats[s.name] = {"mean": row[f"{s.name}__mean"],
-                                          "var": row[f"{s.name}__var"]}
+                    self.stats[s.name] = {"mean": num(s.name, "mean"),
+                                          "var": num(s.name, "var")}
             elif s.feature_type == "float" and s.output_mode == "rescaled":
-                self.stats[s.name] = {"min": row[f"{s.name}__min"],
-                                      "max": row[f"{s.name}__max"]}
+                self.stats[s.name] = {"min": num(s.name, "min"),
+                                      "max": num(s.name, "max")}
             elif s.feature_type == "string" and s.output_mode == "one_hot":
                 self.stats[s.name] = {"vocab": list(row[f"{s.name}__vocab"])}
         self.fitted = True

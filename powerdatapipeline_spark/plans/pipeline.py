@@ -181,8 +181,9 @@ def featurize(df: DataFrame, cfg: RunConfig) -> DataFrame:
     """FeatureSpace stage (reference get_featurespace/apply_featurespace,
     datapipeline.py:273-401): z-score every numeric column (any
     ``NumericType``: tinyint through decimal; honoring
-    ``skip_normalization``), one-hot the ``onehot_features`` (int, depth 5 —
-    reference hard-codes 5, Appendix A.7); stats fitted on the first
+    ``skip_normalization``), one-hot the ``onehot_features`` (an int column
+    at depth 5 — reference hard-codes 5, Appendix A.7; a string column
+    gets one indicator per fitted vocabulary value); stats fitted on the first
     ``n_rows_to_adapt_featurespace`` rows, exactly the reference's adapt
     semantics. No-op when neither normalize nor one-hot is requested."""
     tr = cfg.datapipeline.transformation
@@ -196,7 +197,8 @@ def featurize(df: DataFrame, cfg: RunConfig) -> DataFrame:
     for f in df.schema.fields:
         c = f.name
         if c in tr.onehot_features:
-            specs.append(FeatureSpec(c, "int", "one_hot"))
+            kind = "string" if isinstance(f.dataType, T.StringType) else "int"
+            specs.append(FeatureSpec(c, kind, "one_hot"))
         elif tr.normalize and isinstance(f.dataType, T.NumericType):
             specs.append(FeatureSpec(c, "float", "normalized",
                                      skip_normalization=c in tr.skip_normalization))

@@ -52,29 +52,23 @@ from powerdatapipeline_spark.sources.readers import file_identity, read_parquet
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-#: name -> (spark builder, oracle SQL or None for rows-only checks)
+#: name -> (spark builder, oracle SQL or None for rows-only checks), in
+#: registration order
 REGISTRY: dict[str, tuple[QueryFn, str | None]] = {}
 
-#: name -> snapshot priority. The driver's correctness snapshot records the
-#: FIRST 50 ``queries()`` entries only, so the registry is ordered by
-#: (priority desc, registration order) and the head IS the top-50 by
-#: priority — rotation into/out of the recorded window is a one-argument
-#: edit on a query's ``@register(..., priority=...)`` (VERDICT r6 #8, the
-#: last hand-maintained list removed).
-PRIORITY: dict[str, int] = {}
 
-#: default: competes for the driver's recorded window
-PRI_HEAD = 100
-#: demoted: multi-round driver-green AND pinned by the tail-parity pytest
-#: (sf0.001 + sf0.01 strict DuckDB compare), or operator-redundant with a
-#: head entry — documented per call site
-PRI_TAIL = 10
+def register(name: str, oracle: str | None):
+    # qNN stems must be unique: bench.py's compact stdout map and the
+    # regression guard's name normalization key on them — a duplicate
+    # stem would silently merge two queries' timings
+    stem = name.split("_")[0]
+    for other in REGISTRY:
+        if other.split("_")[0] == stem:
+            raise RuntimeError(
+                f"duplicate query number {stem}: {other} vs {name}")
 
-
-def register(name: str, oracle: str | None, priority: int = PRI_HEAD):
     def deco(fn: QueryFn):
         REGISTRY[name] = (fn, oracle)
-        PRIORITY[name] = priority
         return fn
     return deco
 
@@ -247,7 +241,7 @@ SELECT l_returnflag, l_linestatus,
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
 GROUP BY l_returnflag, l_linestatus
-""", priority=PRI_TAIL)
+""")
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped hash aggregation (gap §2.12; the reference's only grouped agg
     is the pandas resample mean, pandas_utilities.py:115-129). Map-side
@@ -275,7 +269,7 @@ JOIN nation   ON c_nationkey = n_nationkey
 JOIN region   ON n_regionkey = r_regionkey
 WHERE r_name = 'ASIA'
 GROUP BY n_name
-""", priority=PRI_TAIL)
+""")
 def q02_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-way equi-join (gap §2.12 — the reference has NO joins,
     SURVEY.md §2.3). Dimensions are broadcast (customer/nation/region are
@@ -305,7 +299,7 @@ SELECT p_type,
 FROM lineitem JOIN part ON l_partkey = p_partkey
 WHERE p_size <= 25
 GROUP BY p_type
-""", priority=PRI_TAIL)
+""")
 def q03_part_type_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Broadcast fact-dim join (operators/relational.join_dim): the part dim
     rides to every executor; predicate on the dim prunes before broadcast."""
@@ -327,7 +321,7 @@ UNION ALL
 SELECT 'without_orders' AS op, 'ALL' AS segment, COUNT(*) AS n_customers
 FROM customer c
 WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-""", priority=PRI_TAIL)
+""")
 def q04_semi_anti_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join (EXISTS; never duplicates the left side) and left-anti
     join (NOT EXISTS) in one tagged result (gap §2.12)."""
@@ -355,7 +349,7 @@ SELECT 'global' AS scope, o_custkey, o_orderkey, o_totalprice,
        ROW_NUMBER() OVER (ORDER BY o_totalprice DESC, o_orderkey) AS rn
 FROM (SELECT o_custkey, o_orderkey, o_totalprice FROM orders
       ORDER BY o_totalprice DESC, o_orderkey LIMIT 10)
-""", priority=PRI_TAIL)
+""")
 def q06_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k both ways, tagged (gap §2.12 — the reference has no analytic
     windows or sort at all, SURVEY.md §2.6/§2.8): per-customer top-3 via a
@@ -398,7 +392,7 @@ SELECT 'gsets' AS op,
        COUNT(*) AS n,
        {_DSUM.format(c='l_extendedprice')} AS sum_val
 FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (year(l_shipdate)), ())
-""", priority=PRI_TAIL)
+""")
 def q08_rollup_cube_gsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The whole multi-dimensional grouping family, tagged (gap §2.12):
     hierarchical ROLLUP, full CUBE, and explicit GROUPING SETS (via the SQL
@@ -443,7 +437,7 @@ SELECT 'high_balance_non_buyers' AS op, COUNT(*) AS n FROM (
 UNION ALL
 SELECT 'all_keys_union' AS op, COUNT(*) AS n FROM (
   SELECT c_custkey FROM customer UNION SELECT o_custkey FROM orders)
-""", priority=PRI_TAIL)
+""")
 def q10_set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """union / intersect / except (gap §2.12 — the reference's concats are
     feature-wise, not row-wise, SURVEY.md §2.8)."""
@@ -467,7 +461,7 @@ SELECT l_returnflag,
        COUNT(DISTINCT l_suppkey) AS n_suppliers,
        COUNT(*) AS n_rows
 FROM lineitem GROUP BY l_returnflag
-""", priority=PRI_TAIL)
+""")
 def q11_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     return (li.groupBy("l_returnflag")
@@ -485,7 +479,7 @@ SELECT event_type,
        COUNT(*) AS n
 FROM events
 GROUP BY event_type
-""", priority=PRI_TAIL)
+""")
 def q13_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON extraction on events.props (gap §2.12): get_json_object — JVM
     Jackson parse, pushed inside codegen; no Python."""
@@ -504,7 +498,7 @@ SELECT CAST(floor(value / 20.0) AS BIGINT) AS value_bucket,
        {_DSUM.format(c="CASE WHEN event_type = 'purchase' THEN value ELSE 0 END")} AS purchase_value
 FROM events WHERE value IS NOT NULL
 GROUP BY 1
-""", priority=PRI_TAIL)
+""")
 def q14_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CASE/conditional aggregation (pivot-style without pivot's schema
     inference — fixed columns, deterministic)."""
@@ -531,7 +525,7 @@ SELECT event_type,
        round(CAST(SUM(CAST(interval AS DECIMAL(18,6))) AS DOUBLE) / count(interval), 6) AS avg_interval
 FROM stepped WHERE interval IS NOT NULL
 GROUP BY event_type
-""", priority=PRI_TAIL)
+""")
 def q16_adjacent_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adjacent-row interval audit (reference get_interval_dataset,
     tfdataset_utilities.py:162-170 — self-zip with skip(1); here a lead()
@@ -561,7 +555,7 @@ SELECT date_trunc('hour', ts) AS bucket_ts,
        COUNT(*) AS n
 FROM events
 GROUP BY 1, 2
-""", priority=PRI_TAIL)
+""")
 def q17_downsample_mean_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window mean downsample (reference pandas
     resample('1S').mean(), pandas_utilities.py:115-129 → SURVEY.md §2.4's
@@ -576,7 +570,7 @@ def q17_downsample_mean_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT event_id, CAST(floor(epoch(ts)) AS BIGINT) AS epoch_s, value
 FROM events
 WHERE CAST(floor(epoch(ts)) AS BIGINT) % 2 = 0
-""", priority=PRI_TAIL)
+""")
 def q18_downsample_modulo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Modulo-grid downsample (reference downsample_to_interval,
     tfdataset_resampling.py:32-48: keep rows with ts % i == 0). Pure filter —
@@ -596,7 +590,7 @@ WITH hourly AS (
 SELECT bucket_ts, event_type, avg_value,
        CAST(floor(epoch(bucket_ts)) + tick AS BIGINT) AS tick_s
 FROM hourly, unnest(generate_series(0, 3600 - 900, 900)) u(tick)
-""", priority=PRI_TAIL)
+""")
 def q19_upsample_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Upsample with repeat fill (reference upsample_to_interval,
     tfdataset_resampling.py:11-30): 1→N tick generation via
@@ -622,7 +616,7 @@ SELECT event_id,
          PARTITION BY user_id ORDER BY ts, event_id
          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v_filled
 FROM gapped
-""", priority=PRI_TAIL)
+""")
 def q20_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forward fill (reference fill_missing_values_in_df ffill,
     pandas_utilities.py:131-152) = last non-null over the unbounded-preceding
@@ -665,7 +659,7 @@ SELECT event_id,
        round((value - m) / sqrt(m2 - m * m), 6) AS value_z,
        round((value - lo) / (hi - lo), 6) AS value_rescaled
 FROM events JOIN stats USING (event_type)
-""", priority=PRI_TAIL)
+""")
 def q22_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase normalization, both modes in one pass (reference normalizer
     fit/apply, tfdataset_utilities.py:81-112, and the FeatureSpace's
@@ -697,7 +691,7 @@ SELECT event_id,
        CASE WHEN event_type = 'signup'   THEN 1.0 ELSE 0.0 END AS event_type_onehot_3,
        CASE WHEN event_type = 'view'     THEN 1.0 ELSE 0.0 END AS event_type_onehot_4
 FROM events
-""", priority=PRI_TAIL)
+""")
 def q24_onehot_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String one-hot with a distinct-scan vocabulary (reference
     StringLookup path, tfdataset_utilities.py:199-210; depth-5 parity with
@@ -721,7 +715,7 @@ SELECT CASE WHEN s <= t80 THEN 'train'
        CAST(floor(min(s)) AS BIGINT) AS first_s,
        CAST(floor(max(s)) AS BIGINT) AS last_s
 FROM s, thr GROUP BY 1
-""", priority=PRI_TAIL)
+""")
 def q25_prefix_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic ORDERED prefix split 0.8/0.1/0.1 (reference
     get_train_test_eval_dataset, datapipeline.py:404-424 — a prefix-by-
@@ -769,7 +763,7 @@ SELECT md5(trim(regexp_replace(lower(text), '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g')))
        min(doc_id) AS doc_id,
        count(*) AS n_copies
 FROM documents GROUP BY 1
-""", priority=PRI_TAIL)
+""")
 def q26_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by normalized-text md5 fingerprint (operators/dedup.
     exact_dedup): one shuffle keyed by a uniform 32-byte digest — never the
@@ -784,7 +778,7 @@ SELECT lang, source,
        CAST(SUM(len(list_filter({_SQL_TOKENS}, t -> t != ''))) AS BIGINT) AS total_tokens,
        (CAST(SUM(len(list_filter({_SQL_TOKENS}, t -> t != ''))) AS DOUBLE) / COUNT(*)) AS avg_tokens
 FROM documents GROUP BY lang, source
-""", priority=PRI_TAIL)
+""")
 def q27_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus token statistics (operators/text.token_count): integer sums
     are exact in any engine; the average is one double division."""
@@ -811,7 +805,7 @@ SELECT doc_id, CAST(n_tokens AS INT) AS n_tokens,
        CASE WHEN n_tokens > 0 AND CAST(n_stop AS DOUBLE) / n_tokens >= 0.08
             THEN 'en' ELSE 'other' END AS lang_pred
 FROM t
-""", priority=PRI_TAIL)
+""")
 def q28_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality features + language-ID heuristic
     (operators/text.quality_score / langid_heuristic): pure string/array
@@ -877,7 +871,7 @@ SELECT id_a, id_b,
              / (len(ma.g) + len(mb.g) - len(list_intersect(ma.g, mb.g))), 6) AS jaccard
 FROM cand JOIN mh ma ON ma.doc_id = id_a JOIN mh mb ON mb.doc_id = id_b
 WHERE CAST(len(list_filter(list_zip(ma.sig, mb.sig), z -> z[1] = z[2])) AS DOUBLE) / 16 >= 0.5
-""", priority=PRI_TAIL)
+""")
 def q29_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup with exact verification, one pass
     (operators/dedup.neardup_report): K–M double-hashed MinHash (16 perms, 4 bands
@@ -913,7 +907,7 @@ SELECT * FROM (
   SELECT query_id, vec_id, cosine, vec_norm,
          row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
   FROM scored) WHERE rank <= 10
-""", priority=PRI_TAIL)
+""")
 def q31_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k (operators/similarity.brute_force_topk
     semantics, decimal-exact dot products for engine parity): queries are
@@ -946,7 +940,7 @@ SELECT e.event_id,
 FROM (SELECT * FROM events WHERE event_type <> 'purchase') e
 ASOF LEFT JOIN purchases p
   ON e.user_id = p.user_id AND e.ts >= p.ts
-""", priority=PRI_TAIL)
+""")
 def q37_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backward as-of join (gap §2.12): each non-purchase event enriched
     with the user's most recent purchase at-or-before it.
@@ -974,7 +968,7 @@ FROM (SELECT * FROM events WHERE event_type = 'click') e
 LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
   ON epoch(p.ts) >= epoch(e.ts) - 3600 AND epoch(p.ts) <= epoch(e.ts) + 3600
 GROUP BY e.event_id
-""", priority=PRI_TAIL)
+""")
 def q38_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range join (gap §2.12): purchases within ±1 h of each click, counted.
     Executed via operators/timeseries.range_join_bucketed — time-bucket
@@ -1012,7 +1006,7 @@ SELECT user_id, session_id,
        round(max(epoch(ts)) - min(epoch(ts)), 6) AS duration_s,
        {_DSUM.format(c='value')} AS sum_value
 FROM sessions GROUP BY user_id, session_id
-""", priority=PRI_TAIL)
+""")
 def q39_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization (operators/timeseries.sessionize): 30-min-gap sessions
     per user — lag + running-sum windows, one shuffle on user_id. The
@@ -1039,7 +1033,7 @@ WINDOW w  AS (PARTITION BY user_id ORDER BY ts, event_id
               ROWS BETWEEN 3 PRECEDING AND CURRENT ROW),
        wr AS (PARTITION BY user_id ORDER BY s
               RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
-""", priority=PRI_TAIL)
+""")
 def q41_moving_average(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-based moving aggregates, ROW and RANGE flavors side by side
     (SURVEY.md §2.6 — the reference has only fixed ROW frames):
@@ -1096,7 +1090,7 @@ SELECT event_id, datetimestamp, datetimestampseconds,
        {_sql_cyc('datetimestampseconds', 365.2425 * 86400.0, 'sin')} AS sin_year,
        {_sql_cyc('datetimestampseconds', 365.2425 * 86400.0, 'cos')} AS cos_year
 FROM derived
-""", priority=PRI_TAIL)
+""")
 def q42_derive_datetime(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's signature derived columns (SURVEY.md §2.5): split
     date/time text blocks → ``datetimestamp`` concat
@@ -1144,7 +1138,7 @@ SELECT event_id,
 FROM events
 WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 QUALIFY lag(value, 3) OVER w IS NOT NULL
-""", priority=PRI_TAIL)
+""")
 def q43_supervised_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Windowed next-step supervision (reference windowed_dataset_v1,
     tfdataset.py:256-263: first w−1 rows = features, last = target) in
@@ -1171,7 +1165,7 @@ SELECT COUNT(*) AS n_rows,
        CAST(floor(max(epoch(ts))) AS BIGINT) AS last_s,
        CASE WHEN min(event_type) = max(event_type) THEN 1 ELSE 0 END AS all_types_equal
 FROM events
-""", priority=PRI_TAIL)
+""")
 def q44_data_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-quality audit in ONE pass (reference streams the file once per
     check — null audit datapipeline_utilities.py:12-38, all-equal reduction
@@ -1198,7 +1192,7 @@ SELECT date_trunc('hour', ts) AS bucket_ts,
        COUNT(*) AS n
 FROM events
 GROUP BY 1, 2
-""", priority=PRI_TAIL)
+""")
 def q45_streaming_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STRUCTURED STREAMING twin of q17 (SURVEY.md §2.10, §7.6): the same
     hourly tumbling mean executed incrementally — file stream source →
@@ -1335,7 +1329,7 @@ assigned AS (
 SELECT centroid_id, COUNT(*) AS n_assigned,
        round(CAST(SUM(CAST(dot AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*), 6) AS avg_dot
 FROM assigned WHERE rn = 1 GROUP BY centroid_id
-""", priority=PRI_TAIL)
+""")
 def q47_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One k-means E-step (assignment) — the building block of iterative
     algorithms on the engine: deterministic seed centroids (vec_id < 8)
@@ -1385,7 +1379,7 @@ SELECT o_orderkey,
        CAST(length(o_orderstatus) AS INT) AS status_len
 FROM orders
 WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice DESC, o_orderkey)
-""", priority=PRI_TAIL)
+""")
 def q49_analytic_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full analytic window-function family (gap §2.12 — the reference
     has zero SQL window functions, SURVEY.md §2.6) plus the per-row scalar
@@ -1444,7 +1438,7 @@ SELECT event_type,
        quantile_cont(value, 0.9)  AS p90,
        max(value) AS vmax
 FROM events GROUP BY event_type
-""", priority=PRI_TAIL)
+""")
 def q50_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles (median/p25/p90): Spark ``percentile``
     and DuckDB ``quantile_cont`` share the (1−g)·a + g·b linear
@@ -1472,7 +1466,7 @@ SELECT p_partkey,
        regexp_extract(p_type, '([A-Z]+)', 1) AS type_first_word,
        CAST(position(' ' IN p_type) AS INT) AS first_space
 FROM part
-""", priority=PRI_TAIL)
+""")
 def q51_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String scalar-function family (SURVEY.md §2.5 — the reference's only
     string ops ride py_function): case, trim, pad, replace, substring,
@@ -1504,7 +1498,7 @@ WHERE c_mktsegment = 'BUILDING'
   AND l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
 GROUP BY l_orderkey, o_orderdate, o_orderpriority
 ORDER BY revenue DESC, l_orderkey LIMIT 10
-""", priority=PRI_TAIL)
+""")
 def q53_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: selective filters on BOTH join sides pushed into
     their scans before the join, then top-k on the aggregate (a global
@@ -1533,7 +1527,7 @@ WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
    OR (p_brand = 'Brand#2' AND p_size BETWEEN 10 AND 30
        AND l_quantity >= 10 AND l_quantity <= 40)
    OR (p_type LIKE '%PROMO%' AND l_discount > 0.05)
-""", priority=PRI_TAIL)
+""")
 def q54_disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: a disjunction of conjunctive range/LIKE predicates
     across both join sides — Catalyst extracts the common-side filters it
@@ -1566,7 +1560,7 @@ JOIN nation sn ON sn.n_nationkey = s_nationkey
 JOIN nation cn ON cn.n_nationkey = c_nationkey
 WHERE sn.n_name <> cn.n_name
 GROUP BY 1, 2, 3
-""", priority=PRI_TAIL)
+""")
 def q55_supplier_customer_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: the same dimension (nation) joined TWICE under
     different roles (supplier vs customer side) with an inequality between
@@ -1600,7 +1594,7 @@ WHERE o_totalprice > 2 * (SELECT {_DAVG.format(c='o2.o_totalprice')}
                           WHERE o2.o_custkey = o.o_custkey)
   AND EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey
               AND l.l_quantity > 45)
-""", priority=PRI_TAIL)
+""")
 def q56_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subquery + correlated EXISTS (gap §2.12): Catalyst
     DECORRELATES both — the scalar subquery becomes an aggregate joined back
@@ -1627,7 +1621,7 @@ FROM (SELECT c_custkey, c_acctbal AS balance,
              CAST(c_nationkey AS DOUBLE) AS nation
       FROM customer)
 UNPIVOT (value FOR metric IN (balance, nation))
-""", priority=PRI_TAIL)
+""")
 def q58_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide→long unpivot (the inverse of q14's conditional-agg pivot):
     ``df.unpivot`` generates an Expand — one pass, rows × n_metrics output,
@@ -1662,7 +1656,7 @@ SELECT event_type, tick AS tick_s,
        CASE WHEN t1 IS NULL OR tick = t0 THEN v0
             ELSE v0 + (v1 - v0) * ((tick - t0) / (t1 - t0)) END AS value_interp
 FROM ticks
-""", priority=PRI_TAIL)
+""")
 def q59_resample_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Upsample with LINEAR interpolation (the reference's stubbed
     ``fill_method='linear'`` intent, tfdataset_resampling.py:22-25, now
@@ -1763,7 +1757,7 @@ SELECT doc_id,
             WHEN bk < 9000 THEN 'val'
             ELSE 'test' END AS split
 FROM b
-""", priority=PRI_TAIL)
+""")
 def q62_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic hash-based train/val/test split
     (operators/relational.hash_split): md5-bucket assignment — stable
@@ -1788,7 +1782,7 @@ SELECT doc_id,
                                   i -> CAST(ascii(substr(t, i, 1)) AS BIGINT))),
                    (acc, x) -> (acc * 131 + x) % 1000000007) AS rolling_fp
 FROM n
-""", priority=PRI_TAIL)
+""")
 def q61_token_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting + document fingerprinting (operators/text): whitespace
     token count, BPE-ish piece count (letter/digit/symbol pre-tokenization —
@@ -1804,7 +1798,7 @@ def q61_token_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         tx.rolling_fingerprint("text").alias("rolling_fp"))
 
 
-@register("q60_embedding_neardup", _emb_lsh_oracle(), priority=PRI_TAIL)
+@register("q60_embedding_neardup", _emb_lsh_oracle())
 def q60_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs
     (operators/dedup.embedding_neardup_pairs) at the operator's DEFAULTS
@@ -1857,7 +1851,7 @@ SELECT d.doc_id,
        CAST(CASE WHEN COALESCE(lab.label, d.doc_id) = d.doc_id
                  THEN 1 ELSE 0 END AS INT) AS is_canonical
 FROM documents d LEFT JOIN lab ON lab.node = d.doc_id
-""", priority=PRI_TAIL)
+""")
 def q63_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster assignment: blocking pairs → connected components →
     canonical pick (operators/dedup.blocked_pairs + dedup_clusters). Pair
@@ -1894,7 +1888,7 @@ SELECT id_a, id_b, a.p_name AS name_a, b.p_name AS name_b,
        CAST(levenshtein(a.p_name, b.p_name) AS INT) AS dist
 FROM cand JOIN p a ON a.p_partkey = id_a JOIN p b ON b.p_partkey = id_b
 WHERE levenshtein(a.p_name, b.p_name) <= 4
-""", priority=PRI_TAIL)
+""")
 def q64_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy key matching (operators/dedup.fuzzy_blocked_match): blocking on
     (p_brand, p_size) generates candidates, Levenshtein ≤ 4 verifies —
@@ -1926,7 +1920,7 @@ SELECT l_returnflag,
        round((sxy - sx * sy / n)
              / (sqrt(sxx - sx * sx / n) * sqrt(syy - sy * sy / n)), 6) AS corr_qty_price
 FROM s
-""", priority=PRI_TAIL)
+""")
 def q66_stats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-column statistical profile (covariance, stddev, correlation) per
     group from exact decimal moment sums. Built-in ``corr``/``covar_pop``
@@ -1970,7 +1964,7 @@ FROM events a JOIN events b
   ON a.user_id = b.user_id
  AND a.event_type = 'click' AND b.event_type = 'purchase'
  AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 10 MINUTE
-""", priority=PRI_TAIL)
+""")
 def q65_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STRUCTURED STREAMING stream-stream join
     (streaming/pipeline.stream_stream_join): clicks and purchases arrive as
@@ -2016,7 +2010,7 @@ SELECT o_orderpriority,
        {_DSUM.format(c="CASE WHEN o_orderstatus = 'O' THEN o_totalprice END")} AS status_o,
        {_DSUM.format(c="CASE WHEN o_orderstatus = 'P' THEN o_totalprice END")} AS status_p
 FROM orders GROUP BY o_orderpriority
-""", priority=PRI_TAIL)
+""")
 def q67_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Long→wide pivot (operators/relational.pivot_table, the inverse of
     q58's unpivot): total order value per priority × status. The status
@@ -2053,7 +2047,7 @@ SELECT event_type, n,
                   THEN (n * sxy - sx * sy)
                        / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)) END, 6) AS r
 FROM m
-""", priority=PRI_TAIL)
+""")
 def q68_regression_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-series OLS time-trend (operators/stats.grouped_ols): slope/
     intercept/Pearson-r of value against time (days since a fixed epoch
@@ -2079,7 +2073,7 @@ def q68_regression_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("q46_sample", """
 SELECT COUNT(*) AS n_total, TRUE AS sample_in_bounds FROM events
-""", priority=PRI_TAIL)
+""")
 def q46_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded Bernoulli sample (the reference's declared-but-unconsumed
     ``downsampling_rate`` knob, config/config.py:118-119 → df.sample).
@@ -2105,7 +2099,7 @@ SELECT l_returnflag,
        COUNT(DISTINCT l_partkey) AS exact_parts,
        TRUE AS approx_in_bounds
 FROM lineitem GROUP BY l_returnflag
-""", priority=PRI_TAIL)
+""")
 def q48_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog++ approximate distinct (gap §2.12): the sketch path for
     cardinalities where exact count-distinct's shuffle is not worth it at
@@ -2154,7 +2148,7 @@ FROM cand WHERE bit_count(xor(fp_a, fp_b)) <= 3
 """
 
 
-@register("q33_simhash_pairs", _SIMHASH_ORACLE, priority=PRI_TAIL)
+@register("q33_simhash_pairs", _SIMHASH_ORACLE)
 def q33_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup (operators/dedup.simhash_pairs): 64-bit
     fingerprints, 16-bit-slice LSH, Hamming verification. max_hamming is
@@ -2221,7 +2215,7 @@ SELECT * FROM (
 """
 
 
-@register("q34_ann_lsh_topk", _lsh_topk_oracle(), priority=PRI_TAIL)
+@register("q34_ann_lsh_topk", _lsh_topk_oracle())
 def q34_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate NN via multi-probe random-hyperplane LSH
     (operators/similarity.hyperplane_lsh_topk) — the 100 TB scale path for
@@ -2321,7 +2315,7 @@ SELECT * FROM (
 """
 
 
-@register("q35_ann_ivf_topk", _ivf_topk_oracle(), priority=PRI_TAIL)
+@register("q35_ann_ivf_topk", _ivf_topk_oracle())
 def q35_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN (operators/similarity.ivf_topk): spherical-k-means-fitted
     coarse centroids (fit_iters=2 Lloyd passes, deterministic from the
@@ -2363,7 +2357,7 @@ FROM {rel_sql}
 """
 
 
-@register("q36_multimodal_features", _multimodal_oracle(), priority=PRI_TAIL)
+@register("q36_multimodal_features", _multimodal_oracle())
 def q36_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing (operators/multimodal): documents.text encoded to
     a binary payload column + typed metadata (built-ins), then the
@@ -2399,7 +2393,7 @@ WHERE bk < CASE o_orderpriority
              WHEN '2-HIGH'   THEN 5000
              WHEN '3-MEDIUM' THEN 2500
              ELSE 1000 END
-""", priority=PRI_TAIL)
+""")
 def q69_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stratified sampling (operators/relational.
     stratified_hash_sample — SURVEY.md §2.8's `downsampling_rate` config
@@ -2428,7 +2422,7 @@ SELECT l_returnflag, bin,
        0.0 + (bin + 1) * 5000.0 AS bin_hi,
        COUNT(*) AS n
 FROM t GROUP BY l_returnflag, bin
-""", priority=PRI_TAIL)
+""")
 def q70_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width histogram per group (operators/stats.histogram): the
     profile-a-column primitive (reference pandas_utilities.py:99-105 spans
@@ -2471,7 +2465,7 @@ SELECT split,
        CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
        CAST(SUM(n_tokens) AS DOUBLE) / COUNT(*) AS avg_tokens
 FROM s GROUP BY split
-""", priority=PRI_TAIL)
+""")
 def q71_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end training-data curation (the BASELINE.json north-star
     pipeline as ONE composed query): quality filter (token count +
@@ -2517,7 +2511,7 @@ SELECT doc_id,
          '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
          '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '<IP>', 'g') AS clean_text
 FROM documents
-""", priority=PRI_TAIL)
+""")
 def q73_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII redaction for corpus curation (operators/text.redact_pii): scrub
     URLs, emails, and IPv4 literals to typed placeholders and count each
@@ -2558,7 +2552,7 @@ top AS (
 SELECT l.doc_id, CAST(l.n_lines AS INT) AS n_lines, l.dup_line_frac,
        COALESCE(t.top_bigram_frac, 0.0) AS top_bigram_frac
 FROM lines l LEFT JOIN top t USING (doc_id)
-""", priority=PRI_TAIL)
+""")
 def q74_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Repetition-based quality signals (operators/text.repetition_stats):
     duplicate-line fraction + top-bigram share — the Gopher repetition
@@ -2578,7 +2572,7 @@ WITH r AS (
 SELECT user_id, ts AS last_ts, event_id AS last_event_id,
        value AS last_value, n_events
 FROM r WHERE rn = 1
-""", priority=PRI_TAIL)
+""")
 def q72_latest_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Latest-record-per-key via ONE aggregation — ``max(struct(ts,
     event_id, value))`` takes the lexicographic max, so the whole
@@ -2620,7 +2614,7 @@ JOIN (SELECT DISTINCT gh, doc_id FROM sh WHERE source = 'src0') b
   ON s.gh = b.gh
 WHERE s.source <> 'src0'
 GROUP BY s.doc_id
-""", priority=PRI_TAIL)
+""")
 def q75_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark-contamination detection (operators/text.contamination_report):
     flag training documents sharing any word 8-gram with the eval set
@@ -2657,7 +2651,7 @@ SELECT doc_id, CAST(chunk_id AS INT) AS chunk_id,
        array_to_string(list_slice(t, chunk_id * 24 + 1, chunk_id * 24 + 32),
                        ' ') AS chunk_text
 FROM c
-""", priority=PRI_TAIL)
+""")
 def q76_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-window chunking (operators/text.chunk_documents): split every
     document into 32-token training chunks with 8-token overlap (stride
@@ -2690,7 +2684,7 @@ r AS (
   FROM s)
 SELECT doc_id, term, tf, doc_freq, score, CAST(rank AS INT) AS rank
 FROM r WHERE rank <= 3
-""", priority=PRI_TAIL)
+""")
 def q77_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 terms per document by TF-IDF (operators/text.tfidf_top_terms)
     — corpus topic profiling / salience scoring. One (doc, term) count
@@ -2707,7 +2701,7 @@ SELECT o_orderkey, o_custkey, o_totalprice
 FROM orders
 ORDER BY o_totalprice DESC, o_orderkey
 LIMIT 100 OFFSET 50
-""", priority=PRI_TAIL)
+""")
 def q78_offset_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skip-then-take pagination (operators/relational.offset_limit — the
     reference's dataset.skip/take, examples/datapipeline_test.py:44-45)
@@ -2733,7 +2727,7 @@ r AS (
   FROM customer)
 SELECT l.o_orderkey, l.o_totalprice, r.c_custkey, r.c_acctbal
 FROM l JOIN r ON l.__rn = r.__rn
-""", priority=PRI_TAIL)
+""")
 def q79_positional_zip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional zip of two plans (operators/timeseries.zip_by_position —
     the reference's zip_datasets, tfdataset.py:177-183): align by
@@ -2760,7 +2754,7 @@ seen AS (
 SELECT fp, doc_id, n_copies_in_batch
 FROM new_batch b
 WHERE NOT EXISTS (SELECT 1 FROM seen s WHERE s.fp = b.fp)
-""", priority=PRI_TAIL)
+""")
 def q84_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delta-ingest dedup (operators/dedup.incremental_dedup): documents
     with doc_id >= 250 play the newly-arrived batch, the rest the
@@ -2802,7 +2796,7 @@ SELECT doc_id, CAST(count(*) AS INT) AS n_query_terms_hit,
 FROM s GROUP BY doc_id
 ORDER BY score DESC, doc_id
 LIMIT 10
-""", priority=PRI_TAIL)
+""")
 def q83_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 keyword search (operators/text.bm25_topk): rank the corpus
     for the query {spark, window, join} — the inverted-index retrieval
@@ -2821,7 +2815,7 @@ WITH u AS (
   SELECT user_id, count(*) AS user_n_events FROM events GROUP BY user_id)
 SELECT e.event_id, e.user_id, e.value, u.user_n_events
 FROM events e JOIN u ON e.user_id = u.user_id
-""", priority=PRI_TAIL)
+""")
 def q82_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-safe salted join (operators/relational.salted_join): the
     skewed fact side (events, hot user_ids) takes a random salt in
@@ -2861,7 +2855,7 @@ SELECT d.doc_id, d.source, d.n_chars
 FROM documents d
 WHERE d.source <> 'src0'
   AND NOT EXISTS (SELECT 1 FROM hits h WHERE h.doc_id = d.doc_id)
-""", priority=PRI_TAIL)
+""")
 def q80_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination, the action half of q75
     (operators/text.decontaminate): anti-join the contaminated ids out of
@@ -2891,7 +2885,7 @@ SELECT tf.doc_id, CAST(sum(tf.tf) AS BIGINT) AS n_tokens,
              / sum(tf.tf), 6) AS avg_neg_logprob
 FROM tf JOIN ct USING (term) CROSS JOIN tot
 GROUP BY tf.doc_id
-""", priority=PRI_TAIL)
+""")
 def q81_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM cross-entropy per document
     (operators/text.unigram_logprob) — the perplexity-proxy quality
@@ -2931,7 +2925,7 @@ SELECT d.doc_id, coalesce(reb.n_spans, 0) AS n_spans,
        coalesce(reb.n_removed, 0) AS n_removed,
        coalesce(reb.clean_text, '') AS clean_text
 FROM documents d LEFT JOIN reb USING (doc_id)
-""", priority=PRI_TAIL)
+""")
 def q85_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Substring-level (fixed-width span) deduplication
     (operators/text.remove_repeated_spans): segment each document into
@@ -2973,7 +2967,7 @@ SELECT pt.stratum, pt.n_docs, round(pt.tw, 6) AS target_weight,
        round(pt.rate, 6) AS rate,
        coalesce(sel.n_selected, 0) AS n_selected
 FROM pt LEFT JOIN sel USING (stratum)
-""", priority=PRI_TAIL)
+""")
 def q86_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain-mixture resampling plan (operators/relational.
     mixture_resample_plan) — the Pile/DoReMi corpus-mixing step: target
@@ -3015,7 +3009,7 @@ SELECT CAST(bucket AS INT) AS bucket, CAST(count(*) AS INT) AS n_docs,
        round(CAST(sum(CAST(n_tokens AS DECIMAL(28,12))) AS DOUBLE)
              / count(*), 6) AS avg_tokens
 FROM b GROUP BY bucket
-""", priority=PRI_TAIL)
+""")
 def q87_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style quality bucketing (operators/text.quality_buckets):
     rank documents by unigram-LM cross-entropy (q81's per-doc signal,
@@ -3047,7 +3041,7 @@ SELECT shard,
        CAST(sum(nt) AS BIGINT) AS n_tokens,
        min(doc_id) AS first_doc, max(doc_id) AS last_doc
 FROM c GROUP BY 1, 2
-""", priority=PRI_TAIL)
+""")
 def q88_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing for training batches (operators/text.
     pack_sequences): per shard (source), concatenate documents in id
@@ -3109,7 +3103,7 @@ SELECT * FROM (
          CAST(row_number() OVER (ORDER BY rrf_score DESC, doc_id) AS INT)
            AS rank
   FROM f) WHERE rank <= 10
-""", priority=PRI_TAIL)
+""")
 def q89_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid search via reciprocal-rank fusion (operators/similarity.
     rrf_fuse; Cormack et al. 2009): fuse the BM25 keyword ranking (q83's
@@ -3157,7 +3151,7 @@ SELECT * FROM (
          CAST(row_number() OVER (ORDER BY n_occurrences DESC, ngram ASC)
               AS INT) AS rank
   FROM c) WHERE rank <= 20
-""", priority=PRI_TAIL)
+""")
 def q90_corpus_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide top-20 word bigrams (operators/text.
     corpus_ngram_counts) — the non-distinct counting pass a BPE merge or
@@ -3190,7 +3184,7 @@ SELECT id_a, id_b,
        round(CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter), 6) AS jaccard
 FROM inter
 WHERE round(CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter), 6) >= 0.5
-""", priority=PRI_TAIL)
+""")
 def q91_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-3-gram Jaccard near-dup pairs via the inverted-index
     join (operators/dedup.ngram_jaccard_pairs, unit='word') — the
@@ -3223,7 +3217,7 @@ SELECT canonical_url,
        CAST(count(*) AS BIGINT) AS n_docs,
        min(doc_id) AS first_doc
 FROM c GROUP BY 1
-""", priority=PRI_TAIL)
+""")
 def q92_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL canonicalization + URL-level dedup (operators/text.
     canonical_url / url_dedup) — the first dedup pass of every
@@ -3262,7 +3256,7 @@ w AS (
               ELSE CAST([] AS BIGINT[]) END AS wins
   FROM g)
 SELECT doc_id, unnest(list_distinct(wins)) AS fp FROM w
-""", priority=PRI_TAIL)
+""")
 def q93_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprints per document (operators/text.
     winnow_fingerprints; Schleimer et al., SIGMOD 2003 — MOSS): hash
@@ -3303,7 +3297,7 @@ SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        CAST(count(*) AS BIGINT) AS n_shared
 FROM pr a JOIN pr b ON a.fp = b.fp AND a.doc_id < b.doc_id
 GROUP BY 1, 2 HAVING count(*) >= 6
-""", priority=PRI_TAIL)
+""")
 def q94_winnow_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MOSS-style near-dup pairs from shared winnowing fingerprints
     (operators/text.winnow_neardup_pairs): documents sharing ≥6 RARE
@@ -3335,7 +3329,7 @@ s AS (
 SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
        min(ts) AS session_start, max(ts) AS session_end
 FROM s GROUP BY user_id, sid
-""", priority=PRI_TAIL)
+""")
 def q95_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STRUCTURED STREAMING sessionization over the events stream
     (streaming/pipeline.streaming_sessionize — q39's streaming twin,
@@ -3380,7 +3374,7 @@ SELECT event_type, slot, n,
                             - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
                            / (n * n), 0.0)), 6) AS profile_std
 FROM a
-""", priority=PRI_TAIL)
+""")
 def q96_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hour-of-day seasonal baseline per event type
     (operators/timeseries.seasonal_profile) — the load-profile primitive
@@ -3414,7 +3408,7 @@ SELECT event_id, event_type, slot, value, z_score
 FROM j WHERE z_score IS NOT NULL
 ORDER BY abs(z_score) DESC, event_id
 LIMIT 20
-""", priority=PRI_TAIL)
+""")
 def q97_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 seasonal anomalies (operators/timeseries.
     deviation_from_profile): each event z-scored against its own
@@ -3466,7 +3460,7 @@ SELECT d.vec_id, CAST(d.dim AS INT) AS dim,
                i -> CAST(d.embedding[i] AS DOUBLE) * r.m[d.dim + 1][i])),
            (acc, x) -> acc + x), 6) AS value
 FROM d CROSS JOIN r
-""", priority=PRI_TAIL)
+""")
 def q98_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Johnson–Lindenstrauss random projection 64 → 16 dims
     (operators/similarity.random_projection) — the standard cheap
@@ -3492,7 +3486,7 @@ WITH s AS (
   FROM documents WHERE n_chars IS NOT NULL AND n_chars > 0)
 SELECT doc_id, n_chars, round(sample_score, 6) AS sample_score
 FROM s ORDER BY round(s.sample_score, 6) DESC, doc_id ASC LIMIT 25
-""", priority=PRI_TAIL)
+""")
 def q99_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic weighted sampling without replacement
     (operators/relational.weighted_hash_sample) — Efraimidis–Spirakis
@@ -3520,7 +3514,7 @@ SELECT e.event_id, e.event_type, e.value,
        round(CASE WHEN f.iqr <> 0 THEN (e.value - f.med) / f.iqr END, 6)
          AS robust_z
 FROM events e JOIN f USING (event_type)
-""", priority=PRI_TAIL)
+""")
 def q100_robust_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group robust scaling (operators/stats.robust_scale_fit/apply):
     median/IQR instead of mean/std (q22's fit), the outlier-resistant
@@ -3550,7 +3544,7 @@ SELECT d.event_id, d.event_type, d.value,
             THEN abs(0.6745 * (d.value - d.med) / md.mad) > 3.5 END
          AS is_outlier
 FROM d JOIN md USING (event_type)
-""", priority=PRI_TAIL)
+""")
 def q101_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust outlier detection via the modified z-score
     (operators/stats.mad_outliers, Iglewicz–Hoaglin 0.6745·dev/MAD,
@@ -3570,7 +3564,7 @@ def q101_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT o.o_orderkey, o.o_custkey, o.o_totalprice, c.c_name
 FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
 WHERE c.c_mktsegment = 'BUILDING'
-""", priority=PRI_TAIL)
+""")
 def q102_bloom_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter-pruned selective join
     (operators/relational.bloom_prune_join) — the runtime-filter idiom
@@ -3637,7 +3631,7 @@ UNION ALL SELECT 3, 'mean_word_len', s2, s3, s2 - s3 FROM a
 UNION ALL SELECT 4, 'stopword_ratio', s3, s4, s3 - s4 FROM a
 UNION ALL SELECT 5, 'punct_ratio', s4, s5, s4 - s5 FROM a
 UNION ALL SELECT 6, 'dup_lines', s5, s6, s5 - s6 FROM a
-""", priority=PRI_TAIL)
+""")
 def q103_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curation filter-funnel audit (operators/text.filter_funnel): the
     ordered C4/Gopher-style rule list with per-stage entered/dropped/
@@ -3662,7 +3656,7 @@ c AS (
 SELECT doc_id, source, CAST(n_tokens AS BIGINT) AS n_tokens,
        CAST(cum AS BIGINT) AS cum_tokens
 FROM c WHERE cum - n_tokens < 5000
-""", priority=PRI_TAIL)
+""")
 def q104_token_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source token-budget enforcement
     (operators/text.enforce_token_quota): admit documents in
@@ -3697,7 +3691,7 @@ SELECT d.doc_id, CAST(length(d.text) AS INT) AS n_chars,
              (acc, x) -> acc + x) / length(d.text), 6)
        ELSE 0.0 END AS char_entropy
 FROM documents d LEFT JOIN pl USING (doc_id)
-""", priority=PRI_TAIL)
+""")
 def q105_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document Shannon character entropy
     (operators/text.char_entropy) — the gibberish/mojibake/base64-blob
@@ -3738,7 +3732,7 @@ SELECT * FROM (
          CAST(row_number() OVER (ORDER BY pmi DESC, ngram ASC) AS INT)
            AS rank
   FROM s) WHERE rank <= 20
-""", priority=PRI_TAIL)
+""")
 def q106_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 collocations by pointwise mutual information
     (operators/text.pmi_bigrams): ``ln p(ab) − ln p(a) − ln p(b)`` over
@@ -3778,7 +3772,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 """
 
 
-@register("q107_ewma", _ewma_oracle(), priority=PRI_TAIL)
+@register("q107_ewma", _ewma_oracle())
 def q107_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially-weighted moving average per user series
     (operators/timeseries.ewma_fir) — telemetry smoothing in its
@@ -3799,7 +3793,7 @@ SELECT event_type, CAST(count(*) AS BIGINT) AS n,
        round(quantile_cont(value, 0.5), 6) AS p50_exact,
        TRUE AS within_contract
 FROM events GROUP BY 1
-""", priority=PRI_TAIL)
+""")
 def q108_approx_percentile_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """approx_percentile with an explicit accuracy contract (the q48
     HLL pattern applied to quantile sketches): the scale path for
@@ -3856,7 +3850,7 @@ SELECT CAST(step AS INT) AS step, event_type,
                        / lag(n_users) OVER (ORDER BY step) END, 6)
          AS conversion
 FROM c
-""", priority=PRI_TAIL)
+""")
 def q109_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered conversion funnel view → click → purchase
     (operators/timeseries.event_funnel): per step, the users who
@@ -3883,7 +3877,7 @@ b0 AS (SELECT cohort, n_active AS base FROM c WHERE week_offset = 0)
 SELECT c.cohort, c.week_offset, c.n_active,
        round(CAST(c.n_active AS DOUBLE) / b0.base, 6) AS retention
 FROM c JOIN b0 USING (cohort)
-""", priority=PRI_TAIL)
+""")
 def q110_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly cohort retention matrix
     (operators/timeseries.retention_cohorts): users cohorted by the
@@ -3930,7 +3924,7 @@ SELECT n,
                        / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
              END, 6) AS r
 FROM m
-""", priority=PRI_TAIL)
+""")
 def q111_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf's-law fit of the corpus frequency spectrum
     (operators/text.zipf_fit): OLS of ln(count) on ln(rank) over the
@@ -3969,7 +3963,7 @@ SELECT l.event_id, l.user_id,
                    / (epoch(ta) - epoch(tb))
        END, 6) AS interp_value
 FROM l LEFT JOIN bb USING (event_id) LEFT JOIN aa USING (event_id)
-""", priority=PRI_TAIL)
+""")
 def q112_interpolation_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sample-at-event interpolation join
     (operators/timeseries.interpolation_join): each click event samples
@@ -4014,7 +4008,7 @@ SELECT top.term, CAST(top.c AS BIGINT) AS exact_count,
        CAST(est.est AS BIGINT) AS cms_estimate,
        est.est >= top.c AS no_underestimate
 FROM top JOIN est USING (term)
-""", priority=PRI_TAIL)
+""")
 def q113_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min-sketch frequency estimates for the corpus' top-20 terms
     (operators/stats.cms_build/cms_estimate): the mergeable
@@ -4078,7 +4072,7 @@ SELECT * FROM (
          CAST(row_number() OVER (PARTITION BY query_id
               ORDER BY qscore DESC, vec_id ASC) AS INT) AS rank
   FROM s) WHERE rank <= 10
-""", priority=PRI_TAIL)
+""")
 def q114_int8_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Int8 scalar-quantized similarity top-k
     (operators/similarity.int8_topk): the 4× embedding-compression path
@@ -4100,7 +4094,7 @@ SELECT CAST(count(DISTINCT CAST(floor(epoch(ts) / 86400.0) AS BIGINT))
        CAST(count(DISTINCT user_id) AS BIGINT) AS exact_distinct,
        TRUE AS within_contract
 FROM events
-""", priority=PRI_TAIL)
+""")
 def q115_hll_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable HLL sketch COLUMNS (Spark's Datasketches
     ``hll_sketch_agg`` / ``hll_union_agg``): distinct users per day as
@@ -4150,7 +4144,7 @@ SELECT user_id, n_readings,
        round(CASE WHEN span > 0 THEN COALESCE(intg, 0.0) / span END, 6)
          AS time_weighted_avg
 FROM a
-""", priority=PRI_TAIL)
+""")
 def q116_energy_integral(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trapezoidal time integral + time-weighted average per user series
     (operators/timeseries.energy_integral) — THE power-domain primitive:
@@ -4184,7 +4178,7 @@ SELECT a.event_type, a.bucket, a.n_readings,
        round(CASE WHEN a.mn <> 0 THEN a.pk / a.mn END, 6) AS peak_to_avg,
        p.peak_ts AS peak_ts_seconds
 FROM a JOIN p USING (event_type, bucket)
-""", priority=PRI_TAIL)
+""")
 def q117_peak_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily peak-demand statistics per series
     (operators/timeseries.peak_analysis): peak load, decimal-exact mean
@@ -4213,7 +4207,7 @@ f(i, d) AS (VALUES {', '.join(
 SELECT a.event_type, a.n_readings,
        f.d AS duration_frac, round(a.qs[f.i], 6) AS load
 FROM a CROSS JOIN f
-""", priority=PRI_TAIL)
+""")
 def q118_load_duration_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Load-duration curve per series
     (operators/timeseries.load_duration_curve) — the sorted-load-vs-time
@@ -4247,7 +4241,7 @@ SELECT event_type, n_readings, n_gaps, missing_ticks,
                   THEN n_readings / (round(span / 60.0e0, 0) + 1)
                   ELSE 1.0 END, 6) AS completeness
 FROM a
-""", priority=PRI_TAIL)
+""")
 def q119_gap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-series cadence-gap report (operators/timeseries.gap_report) —
     the observability twin of q16's interval AUDIT (which asserts):
@@ -4281,7 +4275,7 @@ c AS (SELECT event_id, event_type,
 SELECT event_id, event_type, round(cs, 6) AS cusum,
        abs(round(cs, 6)) > 5.0e0 * sqrt(CAST(i AS DOUBLE)) AS is_shift
 FROM c
-""", priority=PRI_TAIL)
+""")
 def q120_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM level-shift detection per series
     (operators/timeseries.cusum_changepoints): the running sum of
@@ -4339,7 +4333,7 @@ SELECT event_type, CAST(max(nr) AS BIGINT) AS n_ref,
        CAST(max(nc) AS BIGINT) AS n_cur,
        round(CAST(sum(term) AS DOUBLE), 6) AS psi
 FROM terms GROUP BY 1
-""", priority=PRI_TAIL)
+""")
 def q121_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population-stability-index drift report
     (operators/stats.psi_drift): the standard training-data / feature
@@ -4378,7 +4372,7 @@ s AS (SELECT event_type, value,
       FROM b)
 SELECT event_type, min(value) AS weighted_median
 FROM s WHERE cum >= 0.5e0 * tot GROUP BY 1
-""", priority=PRI_TAIL)
+""")
 def q122_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duration-weighted median load per series
     (operators/stats.weighted_percentile): each reading weighted by its
@@ -4412,7 +4406,7 @@ SELECT CAST(count(*) AS BIGINT) AS n_groups,
        CAST(min(n) AS BIGINT) AS min_group_size,
        sum(CASE WHEN n < 10 THEN 1 ELSE 0 END) = 0 AS k_anonymous
 FROM g
-""", priority=PRI_TAIL)
+""")
 def q123_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity release audit over the corpus quasi-identifiers
     (operators/stats.k_anonymity_audit, k=10 on (source, lang)): every
@@ -4478,7 +4472,7 @@ SELECT t.doc_id,
                          THEN t.t[pos] END),
            x -> x IS NOT NULL), ' '), '') AS clean_text
 FROM toks t LEFT JOIN per_doc p USING (doc_id)
-""", priority=PRI_TAIL)
+""")
 def q126_exact_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT substring dedup at token granularity (operators/text.
     remove_repeated_substrings_exact) — the suffix-array-equivalent
@@ -4528,7 +4522,7 @@ dropped AS (
 SELECT b1.vec_id, b1.cell_id, b1.cent_sim,
        d.vec_id IS NULL AS is_kept
 FROM b1 LEFT JOIN dropped d ON d.vec_id = b1.vec_id
-""", priority=PRI_TAIL)
+""")
 def q127_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup — SEMANTIC deduplication (operators/dedup.semdedup; Abbas
     et al. 2023): k-means-style cell assignment (deterministic seed
@@ -4561,7 +4555,7 @@ FROM events e
 LEFT JOIN (SELECT c_custkey, c_name, c_nationkey FROM customer
            WHERE c_acctbal >= 500.0) c
   ON c.c_custkey = e.user_id
-""", priority=PRI_TAIL)
+""")
 def q124_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STRUCTURED STREAMING stream-static dimension enrichment
     (streaming/pipeline.stream_static_enrich — the round-7 operator that
@@ -4627,7 +4621,7 @@ JOIN (SELECT DISTINCT gh, doc_id FROM sh WHERE split = 'test') b
   ON s.gh = b.gh
 WHERE s.split = 'train'
 GROUP BY s.doc_id
-""", priority=PRI_TAIL)
+""")
 def q128_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/test SPLIT-LEAKAGE audit — q75's decontamination rule turned
     on the pipeline's own split (operators/relational.hash_split +
@@ -4674,7 +4668,7 @@ rebuilt AS (
   FROM surviving)
 SELECT user_id, bal, valid_from, valid_to, valid_to IS NULL AS is_current
 FROM rebuilt
-""", priority=PRI_TAIL)
+""")
 def q129_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Slowly-changing-dimension TYPE 2 merge (operators/relational.
     scd2_merge — the dimension-MAINTENANCE half of the star-join story;
@@ -4741,7 +4735,7 @@ SELECT doc_id, n_words, mean_word_len, symbol_ratio, alpha_frac,
          AND symbol_ratio <= 0.1 AND alpha_frac >= 0.8
          AND n_stopwords >= 2 AS passes
 FROM m
-""", priority=PRI_TAIL)
+""")
 def q130_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher quality-rule battery (operators/text.gopher_quality_flags;
     Rae et al. 2021 App. A1.1) — the canonical hard-threshold doc filter
@@ -4792,7 +4786,7 @@ SELECT d.doc_id, coalesce(doc.n_tokens, 0) AS n_tokens,
        coalesce(rk.rn <= 100, FALSE) AS selected
 FROM documents d
 LEFT JOIN doc USING (doc_id) LEFT JOIN rk USING (doc_id)
-""", priority=PRI_TAIL)
+""")
 def q131_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance resampling (operators/text.dsir_importance; Xie
     et al. 2023, arXiv:2302.03169) — score every document by the
@@ -4844,7 +4838,7 @@ SELECT d.doc_id, coalesce(b.topic, 'none') AS topic,
        coalesce(b.n_terms_hit, 0) AS n_terms_hit
 FROM documents d LEFT JOIN (SELECT * FROM best WHERE rn = 1) b
   USING (doc_id)
-""", priority=PRI_TAIL)
+""")
 def q132_keyword_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted-keyword domain router (operators/text.keyword_route) —
     the auditable topic classifier that mixture plans (q86) and token
@@ -4877,7 +4871,7 @@ SELECT d.doc_id, coalesce(pd.n_grams, 0) AS n_grams,
             THEN round(CAST(pd.n_novel AS DOUBLE) / pd.n_grams, 6)
        END AS novelty_frac
 FROM documents d LEFT JOIN pd USING (doc_id)
-""", priority=PRI_TAIL)
+""")
 def q133_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document 8-gram novelty (operators/text.ngram_novelty) — the
     fraction of a document's distinct word 8-grams occurring in no other
@@ -4897,7 +4891,7 @@ SELECT date_trunc('day', ts) AS day, event_type,
        min(value) AS min_value, max(value) AS max_value
 FROM events
 GROUP BY 1, 2
-""", priority=PRI_TAIL)
+""")
 def q134_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental aggregate maintenance (operators/relational.
     partial_rollup + merge_rollups): the event stream is split into three
@@ -4958,7 +4952,7 @@ r3 AS (SELECT e.dst AS node,
        FROM e JOIN r2 ON r2.node = e.src JOIN deg ON deg.src = e.src
        CROSS JOIN n GROUP BY e.dst, n.nn)
 SELECT node, rank FROM r3
-""", priority=PRI_TAIL)
+""")
 def q135_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank, 3 statically-unrolled iterations (operators/graph.
     pagerank) over the symmetrized customer↔supplier interaction graph
@@ -5019,7 +5013,7 @@ SELECT sa.g AS g_a, sb.g AS g_b, sa.n AS n_a, sb.n AS n_b,
              / (sa.n + sb.n - coalesce(i.n_common, 0)), 6) AS jaccard
 FROM sizes sa JOIN sizes sb ON sa.g < sb.g
 LEFT JOIN inter i ON i.g_a = sa.g AND i.g_b = sb.g
-""", priority=PRI_TAIL)
+""")
 def q136_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise source-vocabulary Jaccard matrix (operators/text.
     source_vocab_overlap) — the corpus-overlap report curation teams
@@ -5054,7 +5048,7 @@ SELECT dots.g_a, dots.g_b, ca.n AS n_a, cb.n AS n_b,
             THEN round(dots.d / (na.s * nb.s), 6) END AS cosine
 FROM dots JOIN nrm na ON na.g = dots.g_a JOIN nrm nb ON nb.g = dots.g_b
 JOIN counts ca ON ca.g = dots.g_a JOIN counts cb ON cb.g = dots.g_b
-""", priority=PRI_TAIL)
+""")
 def q137_centroid_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label embedding centroids + pairwise centroid-cosine matrix
     (operators/similarity.centroid_cosine_matrix) — the embedding-space
@@ -5087,7 +5081,7 @@ SELECT shard_id, CAST(count(*) AS BIGINT) AS n_rows,
          AS order_checksum,
        CAST(sum(n_chars) AS BIGINT) AS total_size
 FROM p GROUP BY shard_id
-""", priority=PRI_TAIL)
+""")
 def q138_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic training-shard assignment + manifest (operators/
     relational.shard_assign/shard_manifest) — the global-shuffle-and-
@@ -5124,7 +5118,7 @@ SELECT file_id, CAST(count(*) AS BIGINT) AS n_rows,
        min(x) AS x_min, max(x) AS x_max,
        min(y) AS y_min, max(y) AS y_max
 FROM f GROUP BY file_id
-""", priority=PRI_TAIL)
+""")
 def q139_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) clustering layout + data-skipping audit
     (operators/relational.zorder_code/zorder_layout_audit) — the
@@ -5180,7 +5174,7 @@ SELECT length_bucket, batch_id,
        round(CAST(count(*) * max(n_pieces) - sum(n_pieces) AS DOUBLE)
              / (count(*) * max(n_pieces)), 6) AS pad_ratio
 FROM g GROUP BY 1, 2
-""", priority=PRI_TAIL)
+""")
 def q140_batch_padding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length-bucketed batch assembly + padding-waste audit (operators/
     text.length_bucketed_batches/batch_padding_report) — the
@@ -5212,7 +5206,7 @@ SELECT stratum, n_size, natural_share, mixture_weight,
        CAST(floor(1000000.0 * mixture_weight) AS BIGINT) AS expected_size,
        round(1000000.0 * mixture_weight / n_size, 6) AS oversample_factor
 FROM w
-""", priority=PRI_TAIL)
+""")
 def q141_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled source mixture (operators/relational.
     temperature_mixture) — the mT5/XLM-R ``p_s ∝ n_s^α`` sampling rule
@@ -5268,7 +5262,7 @@ FROM (SELECT query_id, vec_id, adc_dist,
                                 ORDER BY adc_dist, vec_id) AS rank
       FROM adc)
 WHERE rank <= 10
-""", priority=PRI_TAIL)
+""")
 def q142_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN with asymmetric distance (operators/
     similarity.pq_seed_codebook/pq_encode/pq_adc_topk; Jégou et al.
@@ -5309,7 +5303,7 @@ SELECT status, CAST(count(*) AS BIGINT) AS n_rows,
        round(CAST(count(*) AS DOUBLE)
              / CAST(sum(count(*)) OVER () AS DOUBLE), 6) AS share
 FROM d GROUP BY status
-""", priority=PRI_TAIL)
+""")
 def q143_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot diff between two corpus-build runs (operators/
     relational.snapshot_diff_summary) — the run-over-run regression
@@ -5369,7 +5363,7 @@ SELECT 'lineitem.l_partkey->part.p_partkey',
 FROM lineitem l
 LEFT JOIN (SELECT DISTINCT p_partkey FROM part) p
   ON l.l_partkey = p.p_partkey
-""", priority=PRI_TAIL)
+""")
 def q144_fk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Referential-integrity audit over the star schema (operators/
     relational.fk_audit) — the ingest-time FK health report
@@ -5460,7 +5454,7 @@ SELECT query_id, label AS pred_label, n_votes, sum_cosine FROM (
 """
 
 
-@register("q145_knn_classify", _knn_classify_oracle(), priority=PRI_TAIL)
+@register("q145_knn_classify", _knn_classify_oracle())
 def q145_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-NN label transfer (operators/similarity.knn_classify) — the
     weak-labeling step of corpus curation: the even-id half of the
@@ -5503,7 +5497,7 @@ SELECT user_id_a, user_id_b, CAST(count(*) AS BIGINT) AS n_overlaps,
        round(CAST(sum(CAST(ov AS DECIMAL(18,6))) AS DOUBLE), 6)
          AS total_overlap_s
 FROM p GROUP BY 1, 2
-""", priority=PRI_TAIL)
+""")
 def q146_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval×interval overlap join (operators/timeseries.
     interval_overlap_join) — the segment-alignment primitive the
@@ -5545,7 +5539,7 @@ SELECT from_state, to_state, n_transitions,
              / CAST(sum(n_transitions) OVER (PARTITION BY from_state)
                     AS DOUBLE), 6) AS prob
 FROM c
-""", priority=PRI_TAIL)
+""")
 def q147_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix over the event stream
     (operators/timeseries.transition_matrix) — the navigation-flow
@@ -5575,7 +5569,7 @@ SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n_kept,
        round(CAST(sum(CAST(l_extendedprice AS DECIMAL(28,6))) AS DOUBLE)
              / count(*), 6) AS trimmed_mean
 FROM kept GROUP BY l_returnflag
-""", priority=PRI_TAIL)
+""")
 def q148_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric 10% trimmed mean per return flag (operators/stats.
     trimmed_mean) — the robust location estimate between the exact
@@ -5611,7 +5605,7 @@ SELECT source, CAST(count(*) AS BIGINT) AS n_tokens,
                   AS DOUBLE) / count(*), 6) AS oov_rate
 FROM toks LEFT JOIN vocab v USING (term)
 GROUP BY source
-""", priority=PRI_TAIL)
+""")
 def q149_vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary coverage / OOV audit (operators/text.vocab_top_k +
     oov_report) — the tokenizer-fit health metric: build the top-500
@@ -5641,7 +5635,7 @@ SELECT * FROM (
          CAST(row_number() OVER (ORDER BY pair_count DESC, left_piece,
                                  right_piece) AS BIGINT) AS merge_rank
   FROM c) WHERE merge_rank <= 20
-""", priority=PRI_TAIL)
+""")
 def q150_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE merge-candidate statistics (operators/text.
     bpe_merge_candidates; Sennrich et al. 2016) — the distributed half
@@ -5691,7 +5685,7 @@ SELECT t.doc_id, coalesce(agg.clean_text, '') AS clean_text,
        coalesce(agg.n_kept, 0) AS n_lines_kept,
        t.n_lines - coalesce(agg.n_kept, 0) AS n_lines_removed
 FROM tot t LEFT JOIN agg USING (doc_id)
-""", priority=PRI_TAIL)
+""")
 def q151_boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Line-level boilerplate removal (operators/text.
     remove_boilerplate_lines; the CCNet/jusText template-chrome rule) —
@@ -5777,7 +5771,7 @@ SELECT 'l_discount' AS col_a, 'l_tax' AS col_b,
        / (sqrt(CAST(n AS DOUBLE) * CAST(p22 AS DOUBLE) - CAST(s2 AS DOUBLE) * CAST(s2 AS DOUBLE))
           * sqrt(CAST(n AS DOUBLE) * CAST(p33 AS DOUBLE) - CAST(s3 AS DOUBLE) * CAST(s3 AS DOUBLE))), 6)
   END AS corr, n AS n_rows FROM m
-""", priority=PRI_TAIL)
+""")
 def q152_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise Pearson correlation matrix over the lineitem numerics
     (operators/stats.correlation_matrix) — the feature-redundancy
@@ -5832,7 +5826,7 @@ pt AS (SELECT round(CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE)
        FROM events WHERE value IS NOT NULL)
 SELECT point_mean, n_rows, boot_lo, boot_hi, boot_se, n_replicas
 FROM pt CROSS JOIN summary
-""", priority=PRI_TAIL)
+""")
 def q153_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Poisson-bootstrap confidence interval for the mean in ONE pass
     (operators/stats.poisson_bootstrap_ci; Chamandy et al. 2012) —
@@ -5871,7 +5865,7 @@ SELECT * FROM (
          round((2.0 * s_ic) / (k_keys * tot)
                - CAST(k_keys + 1 AS DOUBLE) / k_keys, 6) AS gini
   FROM r2) WHERE skew_rank <= 10
-""", priority=PRI_TAIL)
+""")
 def q154_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-key skew report (operators/relational.skew_report) — the
     planning tool behind the salted-join decision (q82) and AQE's skew
@@ -5921,7 +5915,7 @@ SELECT doc_a, doc_b,
             AS INT) AS hamming
 FROM cand
 WHERE bit_count(xor(hi_a, hi_b)) + bit_count(xor(lo_a, lo_b)) <= 8
-""", priority=PRI_TAIL)
+""")
 def q155_image_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-hash image near-dup (operators/multimodal.image_ahash
     + ahash_neardup_pairs) — the IMAGE-side member of the near-dup
@@ -5976,7 +5970,7 @@ SELECT * FROM (
          round(1.0 - CAST(n_distinct_chunks AS DOUBLE) / n_chunks_total,
                6) AS dup_share
   FROM counts CROSS JOIN tot) WHERE dup_rank <= 10
-""", priority=PRI_TAIL)
+""")
 def q156_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-defined chunking + corpus chunk-dedup report (operators/
     text.cdc_chunk_rows/cdc_dedup_report; the Rabin/LBFS rule) — the
@@ -6052,7 +6046,7 @@ def materialize_binary_fixture(spark: SparkSession, sf_dir: str,
 @register("q125_binary_ingest",
           f"""WITH sel AS (SELECT doc_id, text FROM documents
   WHERE text IS NOT NULL ORDER BY doc_id LIMIT {_BINFIX_N})
-""" + _multimodal_oracle("sel"), priority=PRI_TAIL)
+""" + _multimodal_oracle("sel"))
 def q125_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-FILE multimodal ingestion end to end (VERDICT r7 missing
     #1): a directory of real on-disk payload files is scanned with the
@@ -6095,22 +6089,6 @@ def q125_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "n_bytes", "checksum", "mean_pixel"))
 
 
-# ===========================================================================
-# Registry ordering — the driver's correctness snapshot records at most 50
-# entries (CORRECTNESS_r{3,4}.json both hold exactly the first 50), so the
-# dict order IS the verification budget. It is derived, not hand-listed
-# (VERDICT r6 #8): entries sort by (priority desc, registration order) and
-# the first 50 form the recorded head. Rotation = editing one query's
-# ``priority=`` argument.
-#
-# Invariant since round 10: EVERY registry query has at least one green
-# driver record (rotations r7/r8/r9/r10 walked the whole registry through
-# the 50-entry window — ledger in COVERAGE.md). Rotation is now needed
-# only for NEW entries: register them at default PRI_HEAD and demote an
-# equal number of freshly-recorded heads to PRI_TAIL. Demoted entries
-# keep their oracles and still run in tools/check_parity.py, the
-# tail-parity pytest (sf0.001+sf0.01 strict compare) and the sf0.1 sweep.
-#
 # --- round-8d additions ---------------------------------------------------
 
 _BIGRAM_LAM = 0.8
@@ -6140,7 +6118,7 @@ SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_bigrams,
        round(CAST(-sum(CAST(tf * lnp AS DECIMAL(28,12))) AS DOUBLE)
              / sum(tf), 6) AS avg_neg_logprob
 FROM lp GROUP BY doc_id
-""", priority=PRI_TAIL)
+""")
 def q157_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated bigram-LM cross-entropy per document
     (operators/text.bigram_logprob) — the next rung of the CCNet-style
@@ -6169,7 +6147,7 @@ SELECT wday AS window_end_day,
        CAST(count(DISTINCT user_id) AS BIGINT) AS n_active,
        CAST(count(*) AS BIGINT) AS n_id_buckets
 FROM win GROUP BY 1
-""", priority=PRI_TAIL)
+""")
 def q158_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 7-day distinct users per day
     (operators/timeseries.rolling_distinct) — the "7-day active users"
@@ -6206,7 +6184,7 @@ SELECT l.event_id, l.user_id, l.ets,
             WHEN p.fwd = 1 THEN 'forward' END AS near_direction,
        p.gap AS near_gap_s
 FROM l LEFT JOIN pick p ON p.event_id = l.event_id AND p.rn = 1
-""", priority=PRI_TAIL)
+""")
 def q159_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest-direction as-of join with tolerance
     (operators/timeseries.asof_join_nearest — pandas
@@ -6239,7 +6217,7 @@ SELECT CAST(count(*) AS BIGINT) AS n_rows,
        min(user_id) AS min_user_id, max(user_id) AS max_user_id,
        min(value) + 0.0 AS min_value, max(value) + 0.0 AS max_value
 FROM events
-""", priority=PRI_TAIL)
+""")
 def q160_scan_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata-only dataset profile (sources/readers.scan_stats):
     COUNT(*) + id/value MIN/MAX answered from parquet FOOTER statistics
@@ -6269,7 +6247,7 @@ SELECT doc_id, frame_idx,
             AS BIGINT) AS frame_len,
        md5(substr(t, CAST(frame_idx * 64 + 1 AS BIGINT), 64)) AS frame_md5
 FROM idx
-""", priority=PRI_TAIL)
+""")
 def q161_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame-sampling plumbing, oracle-paired
     (operators/multimodal.frame_sample — the north star names
@@ -6301,7 +6279,7 @@ WITH s AS (SELECT source, doc_id, n_chars,
             AS BIGINT) + 1) / 1152921504606846976.0 ASC, doc_id ASC) AS rn
   FROM documents)
 SELECT source, doc_id, n_chars FROM s WHERE rn <= 5
-""", priority=PRI_TAIL)
+""")
 def q162_group_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic uniform k-per-group sample
     (operators/relational.group_reservoir_sample) — "5 eval examples
@@ -6347,7 +6325,7 @@ SELECT id_a, id_b, round(CAST(n_inter AS DOUBLE)
                          / (n_a + n_b - n_inter), 6) AS jaccard
 FROM inter
 WHERE round(CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter), 6) >= 0.5
-""", priority=PRI_TAIL)
+""")
 def q163_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix-filter similarity join (operators/dedup.
     prefix_filter_jaccard_pairs — AllPairs/PPJoin, Bayardo et al.
@@ -6402,7 +6380,7 @@ SELECT ga AS set_a, gb AS set_b, n_merged,
        round(eu, 6) AS est_union, round(jac, 6) AS jaccard_est,
        round(jac * eu, 6) AS est_intersection
 FROM raw
-""", priority=PRI_TAIL)
+""")
 def q164_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV bottom-k set-overlap estimates between per-event-type user
     sets (operators/stats.kmv_sketch + kmv_set_compare — Bar-Yossef et
@@ -6454,7 +6432,7 @@ SELECT n AS n_points, total_tokens, total_vocab,
                     / (CAST(n AS DOUBLE) * sxx - sx * sx)) * sx)
              / CAST(n AS DOUBLE), 6) AS log_k
 FROM agg
-""", priority=PRI_TAIL)
+""")
 def q165_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heaps'-law vocabulary-growth fit (operators/text.heaps_law_fit)
     — V(N) ≈ k·N^β beside the Zipf rank-frequency fit (q111): β far
@@ -6476,7 +6454,7 @@ cand AS (SELECT a.k AS key_a, b.k AS key_b, a.s AS sort_a, b.s AS sort_b,
 SELECT key_a, key_b, sort_a, sort_b, rank_gap,
        CAST(levenshtein(sort_a, sort_b) AS BIGINT) AS lev
 FROM cand WHERE levenshtein(sort_a, sort_b) <= 4
-""", priority=PRI_TAIL)
+""")
 def q166_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted-neighborhood entity-resolution blocking
     (operators/dedup.sorted_neighborhood_pairs — Hernández & Stolfo
@@ -6528,7 +6506,7 @@ SELECT n_nodes, n_edges, n_wedges, n_triangles,
                   THEN 3.0 * n_triangles / n_wedges ELSE 0.0 END, 6)
          AS global_clustering
 FROM tri, st, ne
-""", priority=PRI_TAIL)
+""")
 def q167_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact triangle count + global clustering coefficient over the
     part co-purchase graph (operators/graph.triangle_count — the
@@ -6579,7 +6557,7 @@ SELECT CAST(lag AS BIGINT) AS lag, n_pairs,
                           *(sx/CAST(n AS DOUBLE))), 6) END AS acf
 FROM pl CROSS JOIN g
 ORDER BY lag
-""", priority=PRI_TAIL)
+""")
 def q168_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Autocorrelation function at lags 1-12h over the hourly-bucketed
     event-value series (operators/timeseries.acf) — the seasonality/
@@ -6648,7 +6626,7 @@ SELECT CASE WHEN score >= 2.0 THEN 'match'
        CAST(sum(CASE WHEN agree_digit THEN 1 ELSE 0 END) AS BIGINT)
          AS n_agree_digit
 FROM sc GROUP BY 1
-""", priority=PRI_TAIL)
+""")
 def q169_fs_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fellegi-Sunter probabilistic record linkage over (nation,
     segment)-blocked customer pairs (operators/dedup.fs_linkage) — the
@@ -6714,7 +6692,7 @@ SELECT src, dst, n_src, n_inter,
        round(CAST(n_inter AS DOUBLE) / n_src, 6) AS containment
 FROM both_dirs
 WHERE round(CAST(n_inter AS DOUBLE) / n_src, 6) >= 0.7
-""", priority=PRI_TAIL)
+""")
 def q170_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directional word-3-gram containment pairs C(A->B) = |A inter B|
     / |A| (operators/dedup.containment_pairs — Broder 1997's asymmetric
@@ -6771,8 +6749,7 @@ def _trunc_recall_oracle(dims=(8, 16, 32), full=64, k=10, nq=5) -> str:
             "FROM hits CROSS JOIN nf")
 
 
-@register("q171_truncation_recall", _trunc_recall_oracle(),
-          priority=PRI_TAIL)
+@register("q171_truncation_recall", _trunc_recall_oracle())
 def q171_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka-style dimension-truncation recall curve
     (operators/similarity.truncation_recall): search with only the
@@ -6837,7 +6814,7 @@ SELECT bin, CAST(count(*) AS BIGINT) AS n,
              / count(*), 6) AS accuracy,
        CAST(sum(CAST(cos AS DECIMAL(18,6))) AS DOUBLE) AS sum_cos
 FROM b GROUP BY 1
-""", priority=PRI_TAIL)
+""")
 def q172_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability diagram for the nearest-centroid embedding
     classifier (operators/similarity.centroid_calibration, Guo et al.
@@ -6898,7 +6875,7 @@ SELECT n, n00, n01, n10, n11,
                                / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))),
                        6) END AS kappa
 FROM c
-""", priority=PRI_TAIL)
+""")
 def q173_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohen's kappa between two heuristic keep/drop labelers on the
     document corpus (operators/stats.cohen_kappa): labeler A = length
@@ -6937,7 +6914,7 @@ SELECT CAST(b % 24 AS BIGINT) AS phase, CAST(count(*) AS BIGINT) AS n,
        CAST(sum(CAST(x AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
        CAST(sum(CAST(det AS DECIMAL(18,6))) AS DOUBLE) AS sum_detrended
 FROM det GROUP BY 1
-""", priority=PRI_TAIL)
+""")
 def q174_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classical additive seasonal decomposition of the hourly event
     series (operators/timeseries.seasonal_decompose_profile) — the
@@ -6996,7 +6973,7 @@ LEFT JOIN inter i ON i.sa = p.sa AND i.sb = p.sb
 """
 
 
-@register("q175_js_divergence", _jsd_oracle(), priority=PRI_TAIL)
+@register("q175_js_divergence", _jsd_oracle())
 def q175_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise Jensen-Shannon divergence (bits) between per-source
     unigram distributions (operators/text.js_divergence_matrix) — the
@@ -7041,7 +7018,7 @@ SELECT cls, n_true, n_pred, tp,
        CASE WHEN pr + rc > 0
             THEN round(2 * pr * rc / (pr + rc), 6) END AS f1
 FROM m
-""", priority=PRI_TAIL)
+""")
 def q176_classification_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-class precision/recall/F1 for the nearest-centroid
     embedding classifier (operators/stats.classification_report over
@@ -7073,7 +7050,7 @@ SELECT digit, n, total,
              / (total * round(log10(1.0 + 1.0 / digit), 6)), 6)
          AS chi2_term
 FROM counts CROSS JOIN tot ORDER BY digit
-""", priority=PRI_TAIL)
+""")
 def q177_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford's-law first-digit audit of lineitem prices
     (operators/stats.benford_audit) — the data-forensics screen for
@@ -7107,7 +7084,7 @@ SELECT CAST(count(*) AS BIGINT) AS n_groups,
        CAST(min(d) AS BIGINT) AS min_distinct_sensitive,
        sum(CASE WHEN d < 3 THEN 1 ELSE 0 END) = 0 AS l_diverse
 FROM g
-""", priority=PRI_TAIL)
+""")
 def q178_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct l-diversity audit (operators/stats.l_diversity_audit,
     l=3 on quasi-identifiers (source, lang) with the document-length
@@ -7153,7 +7130,7 @@ SELECT n_pos, n_neg, n_scores,
        2.0 * (floor(CAST(num AS DOUBLE) / (2.0 * n_pos * n_neg)
                     * 1000000.0 + 0.5) / 1000000.0) - 1.0 AS gini
 FROM agg WHERE n_pos > 0 AND n_neg > 0
-""", priority=PRI_TAIL)
+""")
 def q179_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROC AUC of a scalar embedding score against a binary label
     (operators/stats.binary_auc — exact Mann-Whitney U in BIGINT over
@@ -7209,7 +7186,7 @@ SELECT n, (SELECT CAST(count(*) AS BIGINT) FROM mx) AS x_levels,
                        * 1000000.0 + 0.5) / 1000000.0
             END AS nmi
 FROM tot CROSS JOIN mi CROSS JOIN hx CROSS JOIN hy
-""", priority=PRI_TAIL)
+""")
 def q180_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mutual information between document language and source
     (operators/stats.mutual_information) — the metadata-redundancy
@@ -7263,7 +7240,7 @@ SELECT t, CAST(n_risk AS BIGINT) AS n_risk, n_events, n_censored,
             ELSE floor(exp(ls) * 1000000.0 + 0.5) / 1000000.0
             END AS survival
 FROM cum WHERE n_events > 0 ORDER BY t
-""", priority=PRI_TAIL)
+""")
 def q181_km_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier user-retention curve over event-stream lifetimes
     (operators/stats.km_survival): lifetime = last minus first event
@@ -7330,7 +7307,7 @@ SELECT n_a, n_b,
                             + (vb / n_b) * (vb / n_b) / (n_b - 1))
              * 1000000.0 + 0.5) / 1000000.0 AS df
 FROM y
-""", priority=PRI_TAIL)
+""")
 def q182_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Welch's unequal-variance t-test between returned ('A') and
     refused ('R') lineitem prices (operators/stats.welch_ttest) — the
@@ -7377,7 +7354,7 @@ SELECT n_a, n_b, n_values,
              * 1000000.0 + 0.5) / 1000000.0 AS d,
        d_at
 FROM hit CROSS JOIN nv WHERE n_a > 0 AND n_b > 0
-""", priority=PRI_TAIL)
+""")
 def q183_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov D between returned and refused
     lineitem price distributions (operators/stats.ks_test) — the
@@ -7401,7 +7378,7 @@ SELECT n.o_orderkey AS node,
 FROM nodes n JOIN (SELECT o_custkey, min(o_orderkey) AS lbl
                    FROM nodes GROUP BY 1) m
      ON m.o_custkey = n.o_custkey
-""", priority=PRI_TAIL)
+""")
 def q184_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over per-customer order chains
     (operators/graph.connected_components — alternating
@@ -7485,7 +7462,7 @@ FROM p0 LEFT JOIN p{n_merges} ON p{n_merges}.doc = p0.doc"""
     return "WITH " + ",\n".join(blocks) + "\n" + final
 
 
-@register("q185_bpe_train", _bpe_train_oracle(3), priority=PRI_TAIL)
+@register("q185_bpe_train", _bpe_train_oracle(3))
 def q185_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer TRAINING, outer loop included (operators/text.
     bpe_train; Sennrich et al. 2016) — q150's merge-candidate
@@ -7500,8 +7477,7 @@ def q185_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tx.bpe_train(_t(spark, sf_dir, "documents"), n_merges=3)
 
 
-@register("q186_bpe_encode", _bpe_train_oracle(3, emit="corpus"),
-          priority=PRI_TAIL)
+@register("q186_bpe_encode", _bpe_train_oracle(3, emit="corpus"))
 def q186_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer train-then-ENCODE round trip (operators/text.
     bpe_encode) — the inference half q185's trainer feeds: the learned
@@ -7561,7 +7537,7 @@ SELECT n, x_levels, y_levels,
                             * (least(x_levels, y_levels) - 1)))
                * 1000000.0 + 0.5) / 1000000.0 END AS cramers_v
 FROM fin
-""", priority=PRI_TAIL)
+""")
 def q187_chisq_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson chi-square independence test of document language vs
     source (operators/stats.chisq_independence) — the significance
@@ -7615,7 +7591,7 @@ SELECT n, x_distinct, y_distinct,
                     - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
           * 1000000.0 + 0.5) / 1000000.0 END AS rho
 FROM agg
-""", priority=PRI_TAIL)
+""")
 def q188_spearman_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spearman rank correlation of event value vs event time
     (operators/stats.spearman_corr) — the monotone drift/trend screen
@@ -7661,7 +7637,7 @@ SELECT source, n, CAST(total AS BIGINT) AS total,
                 - (CAST(n AS DOUBLE) + 1.0) / CAST(n AS DOUBLE))
                * 1000000.0 + 0.5) / 1000000.0 END AS gini
 FROM agg
-""", priority=PRI_TAIL)
+""")
 def q189_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source Gini coefficient of document character mass
     (operators/stats.gini_concentration) — the corpus-concentration
@@ -7701,7 +7677,7 @@ SELECT n_pos, n_neg, n_scores,
        2.0 * (floor(CAST(num AS DOUBLE) / (2.0 * n_pos * n_neg)
                     * 1000000.0 + 0.5) / 1000000.0) - 1.0 AS gini
 FROM agg WHERE n_pos > 0 AND n_neg > 0
-""", priority=PRI_TAIL)
+""")
 def q190_streaming_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING ROC AUC under driver verification (streaming/stateful.
     streaming_binary_auc + finalize_binary_auc) — q179's exact
@@ -7787,7 +7763,7 @@ SELECT k, n, ssb, ssw,
   CASE WHEN ssb + ssw > 0 THEN
     floor(ssb / (ssb + ssw) * 1000000.0 + 0.5) / 1000000.0 END AS eta_sq
 FROM agg
-""", priority=PRI_TAIL)
+""")
 def q191_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-way ANOVA F across the 20 document sources
     (operators/stats.anova_f) — the k-sample omnibus mean screen the
@@ -7796,8 +7772,7 @@ def q191_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined groupBy accumulates exact integer-micro moments
     per source; the 20-row group frame folds the between/within
     sum-of-squares as floor6-rounded decimals (partition-order-free)
-    and the F ratio is a fixed double expression the oracle replays.
-    Round-10b born: PRI_TAIL until the round-11 rotation."""
+    and the F ratio is a fixed double expression the oracle replays."""
     from powerdatapipeline_spark.operators import stats as st
     return st.anova_f(_t(spark, sf_dir, "documents"), "n_chars", "source")
 
@@ -7847,7 +7822,7 @@ SELECT k, n, n_values,
                  - CAST(n AS DOUBLE)))) * 1000000.0 + 0.5) / 1000000.0
   END AS h_adj
 FROM agg CROSS JOIN ties
-""", priority=PRI_TAIL)
+""")
 def q192_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kruskal-Wallis H across the 5 event types
     (operators/stats.kruskal_wallis) — the rank-based omnibus location
@@ -7856,8 +7831,7 @@ def q192_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     over-weights. Exact BIGINT tie-averaged doubled ranks from the
     per-distinct-value frame (the q188 machinery), per-group rank
     sums in exact decimal, tie correction from the same tiny frame;
-    the oracle replays the identical integer construction.
-    Round-10b born: PRI_TAIL until the round-11 rotation."""
+    the oracle replays the identical integer construction."""
     from powerdatapipeline_spark.operators import stats as st
     ev = _t(spark, sf_dir, "events")
     return st.kruskal_wallis(ev, "value", "event_type")
@@ -7900,7 +7874,7 @@ SELECT CAST(lag AS BIGINT) AS lag, m AS n_pairs,
                     - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
           * 1000000.0 + 0.5) / 1000000.0 END AS r
 FROM per ORDER BY lag
-""", priority=PRI_TAIL)
+""")
 def q193_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly click->purchase cross-correlation at lags 0..6
     (operators/timeseries.cross_correlation) — the lead/lag companion
@@ -7908,8 +7882,7 @@ def q193_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     later? Both streams pre-reduce to per-hour BIGINT count frames
     (the corpus never joins itself); one explode+equi-join covers all
     lags; every moment sum is exact integer arithmetic and only the
-    final per-lag Pearson ratio is double (floor6, oracle-replayed).
-    Round-10b born: PRI_TAIL until the round-11 rotation."""
+    final per-lag Pearson ratio is double (floor6, oracle-replayed)."""
     return ts.cross_correlation(_t(spark, sf_dir, "events"), "ts",
                                 "event_type", "click", "purchase",
                                 max_lag=6)
@@ -7954,7 +7927,7 @@ SELECT n_buckets, n_pairs, s,
                 ELSE 0.0 END) * 1000000.0 + 0.5) / 1000000.0 END AS z,
   floor(sen_raw * 1000000.0 + 0.5) / 1000000.0 AS sen_slope
 FROM agg CROSS JOIN med CROSS JOIN vr
-""", priority=PRI_TAIL)
+""")
 def q194_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Kendall trend test with Sen's slope on the daily-mean event
     value series (operators/timeseries.mann_kendall) — the
@@ -7964,8 +7937,7 @@ def q194_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic lower-median pairwise slope. The O(days^2/2) pair
     frame is calendar-bounded (30 days = 435 pairs at ANY corpus
     scale; the corpus itself reduces to daily means in one map-side
-    combined pass). Round-10b born: PRI_TAIL until the round-11
-    rotation."""
+    combined pass)."""
     return ts.mann_kendall(_t(spark, sf_dir, "events"), "ts", "value")
 
 
@@ -8022,7 +7994,7 @@ SELECT CAST(10 AS BIGINT) AS k, n_ranked, dcg, idcg,
   floor(CAST(hits AS DOUBLE) / 10.0 * 1000000.0 + 0.5) / 1000000.0
     AS precision_at_k
 FROM agg
-""", priority=PRI_TAIL)
+""")
 def q195_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NDCG@10 / MRR / precision@10 for the q83 BM25 ranking
     (operators/similarity.ranking_metrics) — the retrieval-EVAL half
@@ -8031,8 +8003,7 @@ def q195_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     log2 discount, deterministic actual/ideal orders. The metric runs
     on the top-10 frame only (bounded by k, never corpus-sized); the
     oracle replays BM25 end-to-end then the identical metric
-    arithmetic. Round-10b born: PRI_TAIL until the round-11
-    rotation."""
+    arithmetic."""
     from powerdatapipeline_spark.operators import similarity as sim
     ranked = tx.bm25_topk(_t(spark, sf_dir, "documents"),
                           ["spark", "window", "join"], k=10)
@@ -8065,7 +8036,7 @@ SELECT top.term, CAST(top.c AS BIGINT) AS exact_count,
        CAST(est.est AS BIGINT) AS cms_estimate,
        est.est >= top.c AS no_underestimate
 FROM top JOIN est USING (term)
-""", priority=PRI_TAIL)
+""")
 def q196_streaming_heavy_hitters(spark: SparkSession, sf_dir: str
                                  ) -> DataFrame:
     """STREAMING heavy hitters under driver verification
@@ -8077,8 +8048,7 @@ def q196_streaming_heavy_hitters(spark: SparkSession, sf_dir: str
     finalizer re-reduces and rebuilds the EXACT batch sketch via
     cms_build's count_col contract (cell counts merge by addition), so
     stream ≡ batch bit-identically and q113's batch DuckDB oracle
-    verifies the streaming run. Round-10b born: PRI_TAIL until the
-    round-11 rotation."""
+    verifies the streaming run."""
 
     from powerdatapipeline_spark.streaming.stateful import (
         finalize_heavy_hitters, heavy_hitter_partial,
@@ -8141,7 +8111,7 @@ LEFT JOIN inter i ON i.sa = p.sa AND i.sb = p.sb
 """
 
 
-@register("q197_hellinger_tv", _hellinger_oracle(), priority=PRI_TAIL)
+@register("q197_hellinger_tv", _hellinger_oracle())
 def q197_hellinger_tv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise Hellinger + total-variation distance between per-source
     unigram distributions (operators/text.hellinger_tv_matrix) — the
@@ -8149,8 +8119,7 @@ def q197_hellinger_tv(spark: SparkSession, sf_dir: str) -> DataFrame:
     TV is the worst-case probability gap, Hellinger tensorizes. Same
     no-outer-join decomposition (off-intersection mass folds from
     per-pair intersection sums; #sources²-row pair universe from the
-    tiny totals frame). Round-10b born: PRI_TAIL until the round-11
-    rotation."""
+    tiny totals frame)."""
     return tx.hellinger_tv_matrix(_t(spark, sf_dir, "documents"))
 
 
@@ -8175,15 +8144,14 @@ SELECT source AS grp, CAST(count(*) AS BIGINT) AS n_docs,
 FROM documents
 WHERE text IS NOT NULL AND source IS NOT NULL
 GROUP BY 1
-""", priority=PRI_TAIL)
+""")
 def q198_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source tokenizer fertility: BPE-ish pieces per whitespace
     word (operators/text.tokenizer_fertility) — the token-budget cost
     model for quota (q104) / packing (q88) / batching (q140): a
     punctuation-heavy source at fertility 2.1 consumes twice the LLM
     tokens its word count suggests. Zero-shuffle per-document size
-    expressions + one keyed agg; exact BIGINT sums, floor6 ratios.
-    Round-10b born: PRI_TAIL until the round-11 rotation."""
+    expressions + one keyed agg; exact BIGINT sums, floor6 ratios."""
     return tx.tokenizer_fertility(_t(spark, sf_dir, "documents"))
 
 
@@ -8220,7 +8188,7 @@ SELECT n_a, n_b, n_values,
              * 1000000.0 + 0.5) / 1000000.0 AS d,
        d_at
 FROM hit CROSS JOIN nv WHERE n_a > 0 AND n_b > 0
-""", priority=PRI_TAIL)
+""")
 def q199_streaming_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING KS drift monitor under driver verification
     (streaming/stateful.streaming_ks_drift + finalize_ks_drift) — the
@@ -8230,7 +8198,7 @@ def q199_streaming_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the static VIEW reference through the SAME
     ks_from_value_counts as batch q183, so stream ≡ batch
     bit-identically and the batch DuckDB oracle verifies the streaming
-    run. Round-10b born: PRI_TAIL until the round-11 rotation."""
+    run."""
 
     from powerdatapipeline_spark.streaming.stateful import (
         finalize_ks_drift, streaming_ks_drift)
@@ -8307,15 +8275,14 @@ SELECT k, n, ssb, ssw,
   CASE WHEN ssb + ssw > 0 THEN
     floor(ssb / (ssb + ssw) * 1000000.0 + 0.5) / 1000000.0 END AS eta_sq
 FROM agg
-""", priority=PRI_TAIL)
+""")
 def q200_levene_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brown-Forsythe spread-homogeneity test across the 5 event types
     (operators/stats.levene_bf) — do event VALUES differ in dispersion,
     the assumption q191's ANOVA quietly makes and q183's KS can only
     flag without localizing? Exact lower medians from per-group
     distinct-value cumsums, |v − median| deviations through the
-    UNCHANGED anova_f (one operator, one oracle seam). Round-10b born:
-    PRI_TAIL until the round-11 rotation."""
+    UNCHANGED anova_f (one operator, one oracle seam)."""
     from powerdatapipeline_spark.operators import stats as st
     return st.levene_bf(_t(spark, sf_dir, "events"), "value", "event_type")
 
@@ -8363,7 +8330,7 @@ SELECT tgt.id, tgt.grp, tgt.value,
        floor(tgt.q * 1000000.0 + 0.5) / 1000000.0 AS quantile,
        dict.norm_value
 FROM tgt JOIN dict USING (pos)
-""", priority=PRI_TAIL)
+""")
 def q201_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantile-normalize document sizes across the 20 sources
     (operators/stats.quantile_normalize) — the batch-effect remover
@@ -8371,8 +8338,7 @@ def q201_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     mixture planning (q141) / quality bucketing (q87). Exact BIGINT
     rank arithmetic from per-distinct-value count frames, global
     inverse CDF as an exploded (position → value) dictionary equi-join
-    — no per-row global sort anywhere. Round-10b born: PRI_TAIL until
-    the round-11 rotation."""
+    — no per-row global sort anywhere."""
     from powerdatapipeline_spark.operators import stats as st
     return st.quantile_normalize(_t(spark, sf_dir, "documents"),
                                  "n_chars", "source", "doc_id")
@@ -8393,15 +8359,14 @@ FROM seq WHERE s3 IS NOT NULL
 GROUP BY 1, 2, 3
 ORDER BY n_occurrences DESC, s1, s2, s3
 LIMIT 25
-""", priority=PRI_TAIL)
+""")
 def q202_sequence_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-25 per-user event-type TRIGRAMS
     (operators/timeseries.sequence_ngrams) — higher-order sequential
     pattern mining over q147's 1-step Markov matrix: the dominant
     3-step paths that drive funnel instrumentation and session
     features. One user-keyed lead window (deterministic (ts, event_id)
-    order), no collect_list, map-side-combined counts, exact integers.
-    Round-10b born: PRI_TAIL until the round-11 rotation."""
+    order), no collect_list, map-side-combined counts, exact integers."""
     return ts.sequence_ngrams(load_events(spark, sf_dir), "ts",
                               "user_id", "event_type", n=3, top_k=25,
                               tiebreak_col="event_id")
@@ -8434,7 +8399,7 @@ JOIN item_n nb ON nb.i = pairs.ib
 CROSS JOIN n_orders
 ORDER BY lift DESC, item_a, item_b
 LIMIT 25
-""", priority=PRI_TAIL)
+""")
 def q203_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-25 part-pair association rules by lift over order baskets
     (operators/relational.association_rules) — the market-basket
@@ -8444,7 +8409,7 @@ def q203_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     (TPC-H baskets <= 7 items; max_basket_size raises loudly on a
     degenerate hot basket at scale), min-support prune BEFORE the
     marginal joins. Exact BIGINT counts, floor6 ratios, total-order
-    top-k. Round-10b born: PRI_TAIL until the round-11 rotation."""
+    top-k."""
     return rel.association_rules(_t(spark, sf_dir, "lineitem"),
                                  "l_orderkey", "l_partkey",
                                  min_pair_count=2, top_k=25)
@@ -8472,15 +8437,14 @@ SELECT slot, CAST(max(n) AS BIGINT) AS n,
   min(CASE WHEN cum >= floor(0.9 * CAST(n - 1 AS DOUBLE) + 0.5) + 1
            THEN v END) AS q_90
 FROM staged GROUP BY 1 ORDER BY 1
-""", priority=PRI_TAIL)
+""")
 def q204_seasonal_quantile_bands(spark: SparkSession, sf_dir: str
                                  ) -> DataFrame:
     """Hour-of-day p10/p50/p90 bands of event value
     (operators/timeseries.seasonal_quantile_bands) — the
     distributional seasonal profile beside q96's mean profile: exact
     per-slot quantiles from distinct-value count-frame cumsums (no
-    per-row windows), deterministic nearest-rank positions. Round-10b
-    born: PRI_TAIL until the round-11 rotation."""
+    per-row windows), deterministic nearest-rank positions."""
     return ts.seasonal_quantile_bands(load_events(spark, sf_dir))
 
 
@@ -8512,7 +8476,7 @@ FROM (SELECT u AS node FROM e{rounds} UNION ALL SELECT v FROM e{rounds})
 GROUP BY 1 HAVING count(*) >= {k}""")
 
 
-@register("q205_k_core", _kcore_oracle(), priority=PRI_TAIL)
+@register("q205_k_core", _kcore_oracle())
 def q205_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-core of the part co-occurrence graph (operators/graph.k_core)
     — density-based cohesion completing the graph family (pagerank
@@ -8521,8 +8485,7 @@ def q205_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the q203 co-purchase edges (pairs in >= 2 orders). Each round
     is two node-keyed shuffles (degree count + double semi-join),
     lineage cut per round, exact edge-count fixpoint, loud raise past
-    the round budget the oracle unrolls. Round-10b born: PRI_TAIL
-    until the round-11 rotation."""
+    the round budget the oracle unrolls."""
     li = (_t(spark, sf_dir, "lineitem")
           .select(F.col("l_orderkey").alias("b"),
                   F.col("l_partkey").alias("i"))
@@ -8552,7 +8515,7 @@ SELECT value_a, value_b, dist, n_a, n_b
 FROM p WHERE dist <= 5
 ORDER BY dist, value_a, value_b
 LIMIT 50
-""", priority=PRI_TAIL)
+""")
 def q206_fuzzy_dict_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy label reconciliation over the part-name dictionary
     (operators/dedup.fuzzy_dict_pairs) — blocked Levenshtein entity
@@ -8561,8 +8524,7 @@ def q206_fuzzy_dict_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     sees only the |V|-row dictionary (corpus reduced by one
     map-side-combined groupBy first), blocked by head-noun + length
     band, with a loud max_dict_size refusal — never all-pairs, never
-    the corpus. Exact integer edit distance, JVM codegen, no UDF.
-    Round-10c born: PRI_TAIL until the round-11 rotation."""
+    the corpus. Exact integer edit distance, JVM codegen, no UDF."""
     from powerdatapipeline_spark.operators import dedup as dd
     return dd.fuzzy_dict_pairs(_t(spark, sf_dir, "part"), "p_name",
                                max_dist=5, top_k=50)
@@ -8600,7 +8562,7 @@ r AS (SELECT c_custkey, s_suppkey, dist_km,
                                 ORDER BY dist_km, s_suppkey) AS rn
       FROM cand)
 SELECT c_custkey, s_suppkey, dist_km FROM r WHERE rn = 1
-""", priority=PRI_TAIL)
+""")
 def q207_grid_nearest_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest-supplier assignment per customer on a 10-degree lon/lat
     grid (operators/relational.grid_nearest_join) — the radius-bounded
@@ -8609,8 +8571,7 @@ def q207_grid_nearest_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical modular arithmetic), sites replicate into their 3x3
     cell ring (9x fan-out of the SMALL side, date-line wrap included),
     then one cell equi-join + haversine + per-point window argmin with
-    a total-order tiebreak. Never point x site all-pairs. Round-10c
-    born: PRI_TAIL until the round-11 rotation."""
+    a total-order tiebreak. Never point x site all-pairs."""
     cust = _t(spark, sf_dir, "customer").select(
         "c_custkey",
         ((F.col("c_custkey") * 7907) % 12000 / 100.0 - 60.0).alias("lat"),
@@ -8656,7 +8617,7 @@ SELECT per.g AS event_type, n_buckets,
              * 1000000.0 + 0.5) / 1000000.0 AS coincidence_factor
 FROM per JOIN pkb USING (g) LEFT JOIN at_sys USING (g), sysr
 ORDER BY event_type
-""", priority=PRI_TAIL)
+""")
 def q208_load_coincidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type load factor + system coincidence factor over hourly
     event load (operators/timeseries.load_coincidence) — the demand
@@ -8664,8 +8625,7 @@ def q208_load_coincidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-feeder peak vs system peak). Interval loads are exact
     decimal(38,10) sums, so peak picks and the exact-tie argmin bucket
     are deterministic across engines; ratios are double + floor6 at
-    the very end. Two keyed shuffles, 1-row broadcast system frame.
-    Round-10c born: PRI_TAIL until the round-11 rotation."""
+    the very end. Two keyed shuffles, 1-row broadcast system frame."""
     return ts.load_coincidence(load_events(spark, sf_dir))
 
 
@@ -8699,7 +8659,7 @@ SELECT b AS split_bucket, n AS n_buckets,
        floor(g * 1000000.0 + 0.5) / 1000000.0 AS gain,
        mean_left, mean_right
 FROM scored ORDER BY g DESC, b LIMIT 1
-""", priority=PRI_TAIL)
+""")
 def q209_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Offline change-point detection on the daily load series
     (operators/timeseries.changepoint_binary_seg) — the two-segment
@@ -8707,8 +8667,7 @@ def q209_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch companion to q97's streaming CUSUM. Corpus collapses to the
     |days| frame first (exact decimal sums); prefix sums are decimal
     window cumsums, so gains are bit-identical doubles in both engines
-    and the argmax needs no epsilon. Round-10c born: PRI_TAIL until
-    the round-11 rotation."""
+    and the argmax needs no epsilon."""
     return ts.changepoint_binary_seg(load_events(spark, sf_dir))
 
 
@@ -8759,7 +8718,7 @@ def _dq_oracle(table: str, spec: dict) -> str:
             + "\nUNION ALL ".join(sels) + "\nORDER BY col_name, metric")
 
 
-@register("q210_dq_expectations", _dq_oracle("orders", _DQ_SPEC), priority=PRI_TAIL)
+@register("q210_dq_expectations", _dq_oracle("orders", _DQ_SPEC))
 def q210_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deequ-style data-quality expectation suite over orders
     (operators/stats.dq_expectations) — the measured ingest gate the
@@ -8769,8 +8728,7 @@ def q210_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     (col_name, metric, value) row each). ONE corpus pass — every
     metric is an aggregate in a single agg(); the unpivot runs on the
     1-row result. Exact distincts here for oracle exactness;
-    approx_count_distinct is the documented 100 TB swap-in. Round-10c
-    born: PRI_TAIL until the round-11 rotation."""
+    approx_count_distinct is the documented 100 TB swap-in."""
     from powerdatapipeline_spark.operators import stats as st
     return st.dq_expectations(_t(spark, sf_dir, "orders"), _DQ_SPEC)
 
@@ -8807,7 +8765,7 @@ SELECT thr.g AS event_type, n, thr AS threshold,
        max_value
 FROM thr LEFT JOIN exceed USING (g) JOIN mx USING (g)
 ORDER BY event_type
-""", priority=PRI_TAIL)
+""")
 def q211_exceedance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Peaks-over-threshold tail report per event type
     (operators/stats.exceedance_report) — exact per-group p99
@@ -8815,8 +8773,7 @@ def q211_exceedance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     q204 discipline), exceedance count, mean excess (the EVT
     mean-residual-life statistic) and max. All sums over the
     |distinct| frame weighted by exact BIGINT counts; the excess sum
-    is decimal-cast. Round-10c born: PRI_TAIL until the round-11
-    rotation."""
+    is decimal-cast."""
     from powerdatapipeline_spark.operators import stats as st
     return st.exceedance_report(load_events(spark, sf_dir),
                                 "value", "event_type", q=0.99)
@@ -8859,7 +8816,7 @@ SELECT g AS o_orderpriority, n,
              * (CAST(n AS DOUBLE) * syy - sy * sy))
           * 1000000.0 + 0.5) / 1000000.0 END AS r2
 FROM m ORDER BY o_orderpriority
-""", priority=PRI_TAIL)
+""")
 def q212_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-priority OLS trend of daily order revenue
     (operators/stats.ols_trend) — slope/intercept/R² from one grouped
@@ -8867,7 +8824,7 @@ def q212_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-order freedom — the correlation-matrix discipline), the
     parametric companion to q194's Mann-Kendall. Daily revenue is an
     exact decimal sum first; x is the day offset from each group's
-    first day. Round-10c born: PRI_TAIL until the round-11 rotation."""
+    first day."""
     from powerdatapipeline_spark.operators import stats as st
     o = _t(spark, sf_dir, "orders")
     daily = (o.where(F.col("o_orderpriority").isNotNull()
@@ -8906,7 +8863,7 @@ SELECT CAST(max(n) AS BIGINT) AS n,
   min(CASE WHEN cum >= floor(0.99 * CAST(n - 1 AS DOUBLE) + 0.5) + 1
            THEN v END) AS q_99
 FROM cum
-""", priority=PRI_TAIL)
+""")
 def q213_streaming_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING exact-quantile monitor under driver verification
     (streaming/stateful.streaming_quantile_monitor +
@@ -8916,8 +8873,7 @@ def q213_streaming_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch appends its |batch-distinct|-row partial blind;
     quantiles of everything-seen merge by addition, exact at any
     checkpoint, state bounded by |distinct values| not rows). The
-    batch DuckDB oracle verifies the streaming run bit-for-bit.
-    Round-10c born: PRI_TAIL until the round-11 rotation."""
+    batch DuckDB oracle verifies the streaming run bit-for-bit."""
 
     from powerdatapipeline_spark.streaming.stateful import (
         finalize_quantile_monitor, streaming_quantile_monitor)
@@ -8975,7 +8931,7 @@ FROM dots JOIN norms na ON na.doc_id = id_a
           JOIN norms nb ON nb.doc_id = id_b
 WHERE na.nrm > 0 AND nb.nrm > 0
 ORDER BY cosine DESC, id_a, id_b LIMIT 25
-""", priority=PRI_TAIL)
+""")
 def q214_ngram_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-25 document pairs by exact TF-IDF cosine over word TRIGRAM
     vectors (operators/text.ngram_cosine_pairs) — the count-weighted
@@ -8984,8 +8940,7 @@ def q214_ngram_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigram dictionary keeps small where the 31-word unigram vocab
     would degenerate (measured Σdf²: 2.8M trigram vs 448M unigram at
     sf0.1). q77's idf recipe, decimal dot/norm sums, IEEE-exact sqrt,
-    floor6 cosine, total-order top-k. Round-10c born: PRI_TAIL until
-    the round-11 rotation."""
+    floor6 cosine, total-order top-k."""
     return tx.ngram_cosine_pairs(_t(spark, sf_dir, "documents"),
                                  n=3, top_k=25)
 
@@ -9038,7 +8993,7 @@ FROM scored ORDER BY o_custkey
 """
 
 
-@register("q215_rfm_scores", _rfm_oracle(), priority=PRI_TAIL)
+@register("q215_rfm_scores", _rfm_oracle())
 def q215_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM customer segmentation over orders
     (operators/relational.rfm_scores) — recency/frequency/monetary per
@@ -9047,7 +9002,7 @@ def q215_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer (exact decimal spend), quintile cut points come from
     per-distinct-value count frames (the q204/q211 nearest-rank
     discipline), and scoring is four broadcast comparisons per
-    dimension. Round-10c born: PRI_TAIL until the round-11 rotation."""
+    dimension."""
     o = _t(spark, sf_dir, "orders").withColumn(
         "o_orderdate", F.col("o_orderdate").cast("timestamp"))
     return rel.rfm_scores(o, "o_custkey", "o_orderdate", "o_totalprice")
@@ -9070,8 +9025,7 @@ ranked AS (
 SELECT vec_id, label, draw_rank
 FROM ranked, m WHERE draw_rank <= m
 ORDER BY label, vec_id
-""", priority=PRI_TAIL)  # driver-green r11 + r12 → demoted for the r13
-#                          head so q266 gets its first driver record
+""")
 def q216_class_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Class-balanced downsample of the embedding set
     (operators/relational.class_balance) — every label equalized to
@@ -9079,8 +9033,7 @@ def q216_class_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     q62/q162 reproducible-sampling discipline; no RNG state, identical
     picks in both engines). One |labels|-row count agg + 1-row
     broadcast minimum + WindowGroupLimit-prunable per-label rank — no
-    label partition fully sorts. Round-10c born: PRI_TAIL until the
-    round-11 rotation."""
+    label partition fully sorts."""
     return rel.class_balance(_t(spark, sf_dir, "embeddings"),
                              "label", "vec_id")
 
@@ -9091,7 +9044,7 @@ def _canon_oracle(max_dist: int = 2, rounds: int = 16) -> str:
     q185/q205 unrolled-oracle discipline). The flood converges in
     diameter(G) rounds and extra rounds are no-ops, so a 16-round
     unroll is exact for any dictionary whose fuzzy clusters have
-    diameter <= 16 — far beyond the fixture's (tail-parity pytest
+    diameter <= 16 — far beyond the fixture's (oracle-parity pytest
     guards drift); the Spark side (star contraction) is
     diameter-independent."""
     ctes = [
@@ -9138,8 +9091,7 @@ def q217_canonicalize_labels(spark: SparkSession, sf_dir: str
     contraction (graph.connected_components), each cluster mapped to
     its dominant spelling (max support, lexicographic tiebreak). The
     quadratic + iterative stages run on the |V| dictionary only;
-    applying the fix to a 100 TB corpus is one broadcast map join.
-    Round-10c born: PRI_TAIL until the round-11 rotation."""
+    applying the fix to a 100 TB corpus is one broadcast map join."""
     return dd.canonicalize_labels(_t(spark, sf_dir, "part"), "p_name",
                                   max_dist=2)
 
@@ -9176,16 +9128,14 @@ SELECT g AS event_type, n_scored,
     floor(CAST(sape AS DOUBLE) / CAST(n_nz AS DOUBLE)
           * 1000000.0 + 0.5) / 1000000.0 END AS mape
 FROM agg ORDER BY event_type
-""", priority=PRI_TAIL)  # driver-green r11 + r12 → demoted for the r13
-#                          head so q267 gets its first driver record
+""")
 def q218_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly seasonal-naive forecast backtest per event type
     (operators/timeseries.forecast_backtest_naive) — MAE/RMSE/bias/
     MAPE of the ŷ(t)=y(t−168 h) persistence baseline every grid load
     forecaster must beat. Exact decimal interval loads, keyed
     (group, bucket−168) self equi-join (no window, no sort), decimal
-    error sums, IEEE-exact sqrt, floor6 metrics. Round-10c born:
-    PRI_TAIL until the round-11 rotation."""
+    error sums, IEEE-exact sqrt, floor6 metrics."""
     return ts.forecast_backtest_naive(load_events(spark, sf_dir))
 
 
@@ -9215,8 +9165,7 @@ def q219_state_durations(spark: SparkSession, sf_dir: str) -> DataFrame:
     complement to q147's Markov transition counts: exact epoch
     interval lengths from one user-keyed lead window (deterministic
     (ts, event_id) order), right-censored last events dropped, decimal
-    total sums. Round-10c born: PRI_TAIL until the round-11
-    rotation."""
+    total sums."""
     return ts.state_durations(load_events(spark, sf_dir))
 
 
@@ -9255,8 +9204,7 @@ def q220_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     share of revenue? Exact decimal per-customer totals (6-rounded),
     cumulative windows on the |distinct values| frame only, decile
     rows as pure monotone aggregates — no join-back, no global
-    per-entity sort. Round-10c born: PRI_TAIL until the round-11
-    rotation."""
+    per-entity sort."""
     from powerdatapipeline_spark.operators import stats as st
     return st.lorenz_deciles(_t(spark, sf_dir, "orders"),
                              "o_custkey", "o_totalprice")
@@ -9276,8 +9224,7 @@ def q221_kfold_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-validation folds from the md5-prefix hash primitive (q62's
     hash_bucket discipline; no RNG, no sort), counts per (fold, label)
     so imbalance is auditable before training. Pure narrow map + one
-    map-side-combined count shuffle. Round-10c born: PRI_TAIL until
-    the round-11 rotation."""
+    map-side-combined count shuffle."""
     return rel.kfold_report(_t(spark, sf_dir, "embeddings"),
                             "vec_id", "label", k=5)
 
@@ -9320,8 +9267,7 @@ def q222_last_touch_attribution(spark: SparkSession, sf_dir: str
     window conversions land in '(none)'. The q37 as-of discipline
     (union-tag + one user-keyed carried window, touches ordered
     before same-instant conversions) — never a per-conversion range
-    join. Exact decimal value sums. Round-10c born: PRI_TAIL until
-    the round-11 rotation."""
+    join. Exact decimal value sums."""
     return ts.last_touch_attribution(load_events(spark, sf_dir))
 
 
@@ -9353,8 +9299,7 @@ def q223_reconciliation_audit(spark: SparkSession, sf_dir: str
     each order's total as Σ extendedprice·(1−discount)·(1+tax) over
     its lines (per-line double, 6-rounded, decimal-summed — one keyed
     fact shuffle) and rank the 25 worst |declared − recomputed|
-    divergences. Round-10c born: PRI_TAIL until the round-11
-    rotation."""
+    divergences."""
     li = (_t(spark, sf_dir, "lineitem")
           .withColumnRenamed("l_orderkey", "o_orderkey"))
     amount = (F.col("l_extendedprice").cast("double")
@@ -9407,8 +9352,7 @@ def q224_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, exact p50/p90 (shared count-frame quantile finalizer,
     stats.quantiles_from_value_counts) and decimal-exact mean. The
     latency companion to q109's funnel counts; durations 6-rounded
-    before the decimal cast (the q219 recipe). Round-10c born:
-    PRI_TAIL until the round-11 rotation."""
+    before the decimal cast (the q219 recipe)."""
     return ts.time_to_convert(load_events(spark, sf_dir))
 
 
@@ -9437,8 +9381,7 @@ def q225_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue companion to q110's retention counts: one per-user
     min-aggregate for cohort assignment, one keyed join of the
     purchase stream, exact decimal revenue and BIGINT buyer
-    distincts. Round-10c born: PRI_TAIL until the round-11
-    rotation."""
+    distincts."""
     return ts.cohort_ltv(load_events(spark, sf_dir))
 
 
@@ -9463,8 +9406,7 @@ def q226_duplicate_transactions(spark: SparkSession, sf_dir: str
     unit-rounded amount, under an hour apart: the double-charge /
     meter-re-send audit. Not a self range-join: one lag window inside
     uniform (user, amount) hash groups finds adjacent pairs — no pair
-    explosion, no time-bucket replication. Round-10c born: PRI_TAIL
-    until the round-11 rotation."""
+    explosion, no time-bucket replication."""
     return rel.duplicate_transactions(load_events(spark, sf_dir),
                                       "user_id", "ts", "value",
                                       max_gap_seconds=3600.0,
@@ -9513,8 +9455,7 @@ def q227_abc_classification(spark: SparkSession, sf_dir: str
     holding 80 % of revenue, B to 95 %, C the tail. Per-line amounts
     6-rounded before the decimal cast (the q219 recipe), descending
     cumulative window on the |distinct revenue| frame only — parts
-    never globally sort. Round-10c born: PRI_TAIL until the round-11
-    rotation."""
+    never globally sort."""
     li = _t(spark, sf_dir, "lineitem")
     amount = F.round(F.col("l_extendedprice").cast("double")
                      * (F.lit(1.0) - F.col("l_discount").cast("double")),
@@ -9564,8 +9505,7 @@ def q228_fanout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     report: fan-out distribution (zero-line orders included) predicts
     join amplification before the join runs at 100 TB. One FK-keyed
     child count, a left join onto parent keys, exact nearest-rank
-    p50/p95 from the |distinct fanout| count frame. Round-10c born:
-    PRI_TAIL until the round-11 rotation."""
+    p50/p95 from the |distinct fanout| count frame."""
     return rel.fanout_audit(_t(spark, sf_dir, "orders"),
                             _t(spark, sf_dir, "lineitem"),
                             "o_orderkey", "l_orderkey")
@@ -9599,8 +9539,7 @@ def q229_token_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/text.token_coverage_curve) — the vocab-sizing
     companion to Zipf (q111) and Heaps (q165): one map-side unigram
     count, a total-order rank window over the |vocab| frame only,
-    monotone aggregates per k. Round-10c born: PRI_TAIL until the
-    round-11 rotation."""
+    monotone aggregates per k."""
     return tx.token_coverage_curve(_t(spark, sf_dir, "documents"))
 
 
@@ -9630,8 +9569,7 @@ def q230_centroid_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/similarity.centroid_shift_report) — the embedding-space
     drift/imbalance screen: one narrow posexplode to a k×dim
     aggregate (never pairwise), exact decimal per-dim means, decimal
-    squared-diff sums over the |dims| frame, IEEE-exact sqrt.
-    Round-10c born: PRI_TAIL until the round-11 rotation."""
+    squared-diff sums over the |dims| frame, IEEE-exact sqrt."""
     return sim.centroid_shift_report(_t(spark, sf_dir, "embeddings"))
 
 
@@ -9680,8 +9618,7 @@ def q231_streaming_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials (mergeable by addition, exact at any checkpoint) and
     finalizes against the static VIEW reference through the SAME
     stats.psi_from_bin_counts scorer as batch q121, so the batch
-    DuckDB oracle verifies the streaming run bit-for-bit. Round-10c
-    born: PRI_TAIL until the round-11 rotation."""
+    DuckDB oracle verifies the streaming run bit-for-bit."""
 
     from powerdatapipeline_spark.streaming.stateful import (
         finalize_psi_drift, streaming_psi_drift)
@@ -9740,8 +9677,7 @@ def q232_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     24 h / weekly) dominates? Phase reduced exactly BEFORE the
     transcendental (t mod T in integer-double arithmetic), cos/sin
     6-rounded per the parity rules, demeaning constant floor6 of the
-    exact decimal mean, one corpus scan for all periods. Round-10c
-    born: PRI_TAIL until the round-11 rotation."""
+    exact decimal mean, one corpus scan for all periods."""
     return ts.periodogram(load_events(spark, sf_dir))
 
 
@@ -9790,8 +9726,7 @@ def q233_session_entry_exit(spark: SparkSession, sf_dir: str
     min/max over STRUCT is pathologically slow (measured 200s for
     10k rows / 9.5k groups vs 0.1s for the mark-based twin; sf0.1
     parity pair 275s → 30s). Equivalent because (t, tiebreak) is
-    unique inside a partition, so first/last row ≡ struct min/max.
-    Round-10c born: PRI_TAIL until the round-11 rotation."""
+    unique inside a partition, so first/last row ≡ struct min/max."""
     return ts.session_entry_exit(load_events(spark, sf_dir))
 
 
@@ -9853,8 +9788,7 @@ def q234_load_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     answers at THE peak, answered across the whole distribution: one
     (type, hour) decimal-load aggregate, a conditional-aggregation
     pivot (absent hours = 0 load), then q152's one-pass moment
-    template on the |hours|-row frame. Round-10c born: PRI_TAIL until
-    the round-11 rotation."""
+    template on the |hours|-row frame."""
     from powerdatapipeline_spark.operators import stats as st
     ev = load_events(spark, sf_dir)
     hourly = (ev.where(F.col("ts").isNotNull()
@@ -9897,8 +9831,7 @@ def q235_hits_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     (h₀=1 makes every intermediate a BIGINT edge sum, so the oracle
     unrolls as plain SQL joins), max-normalization ONCE at the end —
     per-round float normalization is where HITS loses cross-engine
-    reproducibility. Two keyed shuffles per alternation. Round-10c
-    born: PRI_TAIL until the round-11 rotation."""
+    reproducibility. Two keyed shuffles per alternation."""
     e = (_t(spark, sf_dir, "orders")
          .join(_t(spark, sf_dir, "lineitem"),
                F.col("l_orderkey") == F.col("o_orderkey"))
@@ -9929,8 +9862,7 @@ def q236_vocab_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Type-token ratio + hapax share per document source
     (operators/text.vocab_richness) — the lexical-diversity screen
     beside Heaps (q165) and fertility (q198): one (source, term)
-    count aggregate, one |vocab|-row reduction, exact BIGINT counts.
-    Round-10c born: PRI_TAIL until the round-11 rotation."""
+    count aggregate, one |vocab|-row reduction, exact BIGINT counts."""
     return tx.vocab_richness(_t(spark, sf_dir, "documents"))
 
 
@@ -9975,8 +9907,7 @@ def q237_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrival-process characterization behind q120's gap report. Gaps
     lift to exact integer microseconds; Σm and Σm² fold as
     DECIMAL(38,0) (the levene/anova exact-integer recipe); one
-    (user, type)-keyed lead window. Round-10c born: PRI_TAIL until
-    the round-11 rotation."""
+    (user, type)-keyed lead window."""
     return ts.burstiness_report(load_events(spark, sf_dir))
 
 
@@ -10056,8 +9987,7 @@ def q240_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     dictionary first (exact duplicates never dominate each other, so
     the frontier is decided on points, with part counts carried), then
     ONE running-min window over that bounded frame — the classic
-    sort-scan skyline, never pairwise domination joins. Round-10c
-    born: PRI_TAIL until the round-11 rotation."""
+    sort-scan skyline, never pairwise domination joins."""
     prepared = (_t(spark, sf_dir, "part")
                 .select(F.col("p_retailprice").cast("double")
                         .alias("price"),
@@ -10084,8 +10014,7 @@ def q239_scd2_asof_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     (open rows count). A partition-pruned range predicate at scale
     (valid_from/valid_to are the natural sort keys of a versioned
     dimension); exactly one row per key by the SCD2 invariant q129
-    hash-verifies. Round-10c born: PRI_TAIL until the round-11
-    rotation."""
+    hash-verifies."""
     dim = q129_scd2_merge(spark, sf_dir)
     return (dim.where((F.col("valid_from") <= F.lit(_ASOF_T))
                       & (F.col("valid_to").isNull()
@@ -10156,8 +10085,7 @@ def q241_changepoint_two_level(spark: SparkSession, sf_dir: str
     multi-change-point recursion unrolled into one declarative plan:
     global best split, then the best within-segment split on either
     side. Exact decimal cumsums make both argmaxes bit-identical
-    across engines. Round-10c born: PRI_TAIL until the round-11
-    rotation."""
+    across engines."""
     return ts.changepoint_two_level(load_events(spark, sf_dir))
 
 
@@ -10205,8 +10133,7 @@ def q242_copurchase_hitrate(spark: SparkSession, sf_dir: str
     machinery closed into an eval loop: top-1 "bought together"
     partners trained on pre-1999 orders, scored on post-1999 baskets
     (temporal split — random splits leak co-purchases). Basket-bounded
-    pair join, WindowGroupLimit top-1, two hash joins to score.
-    Round-10c born: PRI_TAIL until the round-11 rotation."""
+    pair join, WindowGroupLimit top-1, two hash joins to score."""
     base = (_t(spark, sf_dir, "orders")
             .join(_t(spark, sf_dir, "lineitem"),
                   F.col("l_orderkey") == F.col("o_orderkey"))
@@ -10236,7 +10163,7 @@ def q243_weekly_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands: the standard load-shape input for weekly-cycle forecasting
     (q218's lag choice) and anomaly baselines. One map-side-combined
     aggregate to a fixed 168-row frame; exact decimal sums, floor6
-    mean. Round-10c born: PRI_TAIL until the round-11 rotation."""
+    mean."""
     ev = load_events(spark, sf_dir)
     e = F.col("ts").cast("double")
     base = (ev.where(F.col("ts").isNotNull() & F.col("value").isNotNull())
@@ -10308,8 +10235,7 @@ def q244_session_associations(spark: SparkSession, sf_dir: str
     user-keyed window (deterministic (ts, event_id) order), basket
     key = user·10⁵ + session (collision-free: sessions per user ≪
     10⁵, guarded upstream by the corpus span), then the identical
-    a-priori pair pipeline. Round-10c born: PRI_TAIL until the
-    round-11 rotation."""
+    a-priori pair pipeline."""
     e = F.col("ts").cast("double")
     w = (Window.partitionBy("user_id")
          .orderBy(F.col("ts").asc(), F.col("event_id").asc()))
@@ -11350,8 +11276,6 @@ def q265_cosine_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("q266_streaming_krippendorff",
-          # promoted into the r13 head (VERDICT r12 #1): born after the
-          # r12 snapshot froze, needs its first driver record
           REGISTRY["q249_krippendorff_alpha"][1])
 def q266_streaming_krippendorff(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
@@ -11384,8 +11308,6 @@ def q266_streaming_krippendorff(spark: SparkSession,
 
 
 @register("q267_streaming_did",
-          # promoted into the r13 head (VERDICT r12 #1): born after the
-          # r12 snapshot froze, needs its first driver record
           REGISTRY["q257_diff_in_diff"][1])
 def q267_streaming_did(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING 2×2 difference-in-differences under driver
@@ -11408,84 +11330,3 @@ def q267_streaming_did(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda p, c: streaming_did_monitor(ev, "value", group, post, p, c))
     return finalize_did_monitor(spark, partials)
 
-
-# Round-10 rotation (EXECUTED): CORRECTNESS_r09 recorded the q99-q149
-# head green (50/50), so the last never-driver-recorded pool — q125,
-# q150-q184 (36 queries) plus the round-10-born q185-q190 — was
-# promoted to PRI_HEAD together with 8 retained freshly-recorded
-# entries (q105-q112); q99-q104, q113-q124 and q126-q149 were demoted
-# to PRI_TAIL. With CORRECTNESS_r10 green, every registry query has
-# >=1 driver record (full ledger: COVERAGE.md); rotation is thereafter
-# needed only for NEW entries.
-#
-# ROUND-11 ROTATION (EXECUTED this round — COVERAGE.md ledger,
-# pytest-pinned by test_round11_rotation_head_is_q191_to_q240): the
-# round-10-born q191-q240 hold the 50-entry head so CORRECTNESS_r11
-# gives them driver records; the freshly-recorded r10 head demoted to
-# PRI_TAIL (q184's overflow fixed first — graph.py checksum — so its
-# re-record lands green).
-#
-# ROUND-12 ROTATION (EXECUTED this round — COVERAGE.md ledger,
-# pytest-pinned by test_round12_rotation_head_is_q216_to_q265):
-# with CORRECTNESS_r11 green (50/50), promote q241-q244 (two-level
-# changepoint, co-purchase hit-rate, weekly profile, session
-# associations) plus the round-11-born cohort q245-q265 (Neyman
-# allocation, mutual-kNN reciprocity, canonical cluster selection,
-# Markov entropy rate, Krippendorff alpha, WOE/IV, script mix, LSH
-# sketch calibration, label propagation, embedding anisotropy,
-# shuffle-runs audit, SAX words, diff-in-diff, streaming WOE, join-size
-# pre-flight, ramp rates, negative sampling, policy replay, schema
-# contract, exact stratified split, cosine threshold curve) — 25
-# queries — into the head, demoting the 25 oldest r11-head entries
-# (q191 onward). All are
-# oracle-paired from birth, strict-compared at sf0.001+sf0.01 by
-# tests/test_tail_query_parity.py, hash-exact at sf0.1 AND ANSI-on at
-# sf0.001 in the committed PARITY sweeps — the driver record is the
-# only missing evidence tier.
-#
-# ROUND-13 ROTATION PLAN: the round-12-born streaming twins q266
-# (Krippendorff) and q267 (diff-in-diff) are PRI_TAIL, oracle-paired
-# from birth (they REUSE q249's/q257's oracles verbatim — stream ≡
-# batch through shared finalizers); promote them into the head next
-# round, demoting the 2 oldest r12-head entries (q216, q217).
-# ===========================================================================
-
-#: driver correctness-snapshot size (CORRECTNESS_r{3..6}.json: exactly 50)
-SNAPSHOT_CAP = 50
-
-
-def _reorder_registry() -> None:
-    # qNN stems must be unique: bench.py's compact stdout map and the
-    # regression guard's name normalization key on them — a duplicate
-    # stem would silently merge two queries' timings
-    stems: dict[str, str] = {}
-    for n in REGISTRY:
-        stem = n.split("_")[0]
-        if stem in stems:
-            raise RuntimeError(
-                f"duplicate query number {stem}: {stems[stem]} vs {n}")
-        stems[stem] = n
-    seq = {n: i for i, n in enumerate(REGISTRY)}
-    order = sorted(REGISTRY, key=lambda n: (-PRIORITY[n], seq[n]))
-    if len(order) > SNAPSHOT_CAP:
-        # membership in the recorded window must be intentional: a tie
-        # straddling the cap would let registration order silently decide
-        # which query gets a driver record
-        lo, hi = order[SNAPSHOT_CAP - 1], order[SNAPSHOT_CAP]
-        if PRIORITY[lo] == PRIORITY[hi]:
-            raise RuntimeError(
-                f"priority tie across the {SNAPSHOT_CAP}-entry snapshot "
-                f"boundary ({lo} vs {hi}, both {PRIORITY[lo]}); set "
-                "explicit priorities so head membership is deliberate")
-    reordered = {n: REGISTRY[n] for n in order}
-    REGISTRY.clear()
-    REGISTRY.update(reordered)
-
-
-_reorder_registry()
-
-#: names past the driver's recorded window, in registry order — each must
-#: be covered by the tail-parity pytest (tests/test_tail_query_parity.py)
-TAIL_NAMES = list(REGISTRY)[SNAPSHOT_CAP:]
-#: backwards-compatible alias (pre-r7 hand-maintained list, now derived)
-_TAIL = TAIL_NAMES

@@ -69,6 +69,12 @@ def get_spark(
         # never fires.
         conf.setdefault("spark.driver.memory",
                         os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # Python workers start in the driver's working directory, so the
+        # mapInPandas/applyInPandas kernels that import this package fail
+        # when the driver runs from anywhere but the repo root. Put the
+        # package's parent directory on the workers' path.
+        conf["spark.executorEnv.PYTHONPATH"] = os.path.dirname(
+            os.path.dirname(os.path.abspath(__file__)))
     if shuffle_partitions is None:
         # local mode: match core count; cluster mode: leave to AQE + conf.
         cpus = os.environ.get("SPARK_GRAFT_CPUS")

@@ -118,6 +118,23 @@ def test_json_roundtrip(spark, tmp_path):
     assert a == b
 
 
+def test_decimal_fit_round_trips_through_json(spark, tmp_path):
+    from decimal import Decimal
+
+    df = spark.createDataFrame(
+        [(Decimal(w), Decimal(w)) for w in ("1.000", "2.000", "4.500")],
+        "w decimal(10,3), v decimal(10,3)")
+    fs = FeatureSpace([FeatureSpec("w", "float", "normalized"),
+                       FeatureSpec("v", "float", "rescaled")]).fit(df)
+    assert all(type(x) is float
+               for st in fs.stats.values() for x in st.values())
+    p = str(tmp_path / "fs.json")
+    fs.save(p)
+    fs2 = FeatureSpace.load(p)
+    assert fs2.stats == fs.stats
+    assert fs.transform(df).collect() == fs2.transform(df).collect()
+
+
 def test_transform_before_fit_raises(spark):
     fs = FeatureSpace([FeatureSpec("x", "float", "normalized")])
     with pytest.raises(RuntimeError):

@@ -664,6 +664,32 @@ def test_get_spark_turns_origin_capture_off(spark):
         "spark.python.sql.dataFrameDebugging.enabled") == "false"
 
 
+def test_python_workers_import_the_package_outside_the_repo(tmp_path):
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from powerdatapipeline_spark.session import get_spark
+
+def kernel(batches):
+    import powerdatapipeline_spark  # noqa: F401
+    yield from batches
+
+spark = get_spark("worker-import", master="local[1]", shuffle_partitions=1)
+spark.sparkContext.setLogLevel("ERROR")
+print("rows", spark.range(3).mapInPandas(kernel, "id long").count())
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    r = subprocess.run([sys.executable, "-c", script], cwd=tmp_path, env=env,
+                       capture_output=True, text=True, timeout=300)
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert "rows 3" in r.stdout
+
+
 # ------------------------------------------------ one evaluation per run
 def _f1_config(tmp_path, drop=None):
     """A small F1-shaped run: 1 s cadence, mean-downsampled to 60 s,
@@ -764,3 +790,22 @@ def test_featurize_normalizes_tinyint_and_decimal(spark, tmp_path):
     # one-hot and skip_normalization still win over the numeric rule
     assert [r.cat_onehot_1 for r in rows[:3]] == [0.0, 1.0, 0.0]
     assert [r.datetimestampseconds for r in rows[:2]] == [0.0, 60.0]
+
+
+def test_featurize_one_hots_string_column_by_vocabulary(spark, tmp_path):
+    p = tmp_path / "s.csv"
+    p.write_text("datetimestampseconds,W,site\n0,1.0,a\n60,2.0,b\n120,3.0,a\n")
+    cfg = RunConfig(name="str1h", datapipeline={
+        "extraction": {"data_files": [str(p)],
+                       "columns_original": ["datetimestampseconds", "W",
+                                            "site"],
+                       "column_dtypes": {"site": "string"}},
+        "transformation": {"features": ["datetimestampseconds", "W", "site"],
+                           "time_interval_original": 60,
+                           "onehot_features": ["site"],
+                           "n_rows_to_adapt_featurespace": 10 ** 9}})
+    out = build_pipeline(spark, cfg).orderBy("datetimestampseconds")
+    hot = [c for c in out.columns if c.startswith("site_onehot_")]
+    assert hot == ["site_onehot_0", "site_onehot_1"]
+    assert [(r.site_onehot_0, r.site_onehot_1) for r in out.collect()] == \
+        [(1.0, 0.0), (0.0, 1.0), (1.0, 0.0)]

@@ -1,51 +1,25 @@
-"""Value-level oracle parity for registry TAIL queries.
+"""Value-level oracle parity for every registry query.
 
-The driver's correctness snapshot records only the first 50 registry
-entries; the tail (queries whose operator coverage is redundant with a
-head entry, plus rotation parking spots) would otherwise have no recorded
-harness answer. This test pins each oracle-paired tail query against its
-own DuckDB oracle with the same canonical compare ``tools/check_parity.py``
-uses — at BOTH sf0.001 (fast) and sf0.01, the driver's own scale factor,
-so small-sf coincidences (regex classes or guards that only diverge on
-rows absent at sf0.001) can't hide (VERDICT r5 #5).
+Each registry query runs on Spark and its DuckDB oracle runs on the same
+tables; the two results must agree under the canonical compare that
+``tools/check_parity.py`` uses. Both sf0.001 (fast) and sf0.01, the
+driver's own scale factor, are checked, so small-sf coincidences (regex
+classes or guards that only diverge on rows absent at sf0.001) can't hide
+(VERDICT r5 #5). A query without an oracle fails.
 
-Structural guards (VERDICT r5 #6, r6 #8) make the cap un-fallible: the
-registry order is DERIVED from per-query priorities (head = top-50 by
-priority, ties across the boundary are a hard error at import), so a newly
-added query can never silently land past the recorded window, and rotation
-is a one-argument ``priority=`` edit that these tests re-verify.
+The file and test names date from when only part of the registry was
+checked here; they are kept so the test ids stay stable.
 """
-
-import math
 
 import duckdb
 import pytest
 
-from powerdatapipeline_spark.queries import (
-    PRI_HEAD, PRI_TAIL, PRIORITY, REGISTRY, SNAPSHOT_CAP, _TAIL)
-
-TABLES = ("region nation customer supplier part orders lineitem events "
-          "documents embeddings").split()
-
-ORACLE_TAIL = [n for n in _TAIL if REGISTRY[n][1] is not None]
+from powerdatapipeline_spark.queries import REGISTRY, register
+from powerdatapipeline_spark.sources.readers import TESTDATA_TABLES
+from tools.check_parity import canon
 
 #: sf0.001 = iteration speed; sf0.01 = the driver's correctness scale
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
-
-
-def _canon(df):
-    cols = sorted(df.columns)
-    df = df[cols]
-
-    def fmt(v):
-        if v is None or (isinstance(v, float) and math.isnan(v)):
-            return "NULL"
-        if isinstance(v, float):
-            return repr(v)
-        return str(v)
-
-    return sorted(tuple(fmt(v) for v in row)
-                  for row in df.itertuples(index=False))
 
 
 @pytest.fixture(scope="module", params=SF_DIRS, ids=["sf0.001", "sf0.01"])
@@ -56,50 +30,30 @@ def tail_sf_dir(request):
 @pytest.fixture(scope="module")
 def oracle_con(tail_sf_dir):
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TESTDATA_TABLES:
         con.execute(f"CREATE OR REPLACE VIEW {t} AS "
                     f"SELECT * FROM '{tail_sf_dir}/{t}.parquet'")
     yield con
     con.close()
 
 
-@pytest.mark.parametrize("name", ORACLE_TAIL)
+@pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_tail_query_matches_oracle(spark, tail_sf_dir, oracle_con, name):
     fn, oracle = REGISTRY[name]
-    got = _canon(fn(spark, tail_sf_dir).toPandas())
-    want = _canon(oracle_con.execute(oracle).df())
+    assert oracle is not None, f"{name} has no oracle"
+    got_df = fn(spark, tail_sf_dir).toPandas()
+    want_df = oracle_con.execute(oracle).df()
+    assert sorted(got_df.columns) == sorted(want_df.columns)
+    got, want = canon(got_df), canon(want_df)
     assert got == want, f"{name}: {len(got)} spark rows vs {len(want)} oracle"
 
 
-def test_head_is_exactly_the_top_50_by_priority():
-    """The registry order must BE the priority order: every head entry's
-    priority ≥ every tail entry's, so rotation is a one-argument edit and
-    nothing depends on registration order across the boundary."""
-    names = list(REGISTRY)
-    head, tail = names[:SNAPSHOT_CAP], names[SNAPSHOT_CAP:]
-    assert tail == _TAIL
-    min_head = min(PRIORITY[n] for n in head)
-    max_tail = max(PRIORITY[n] for n in tail)
-    assert min_head > max_tail, (
-        f"priority inversion across the snapshot boundary: head min "
-        f"{min_head} <= tail max {max_tail}")
-    assert PRI_HEAD > PRI_TAIL
-
-
-def test_round13_rotation_head():
-    """Round-13 rotation (staged — COVERAGE.md ledger): the round-12-
-    born q266/q267 (the only never-driver-recorded entries) are
-    promoted into the head; q216/q218 — driver-green in BOTH r11 and
-    r12, the two multi-round-greenest retainees — are demoted to
-    PRI_TAIL to make room. Head = q217 + q219-q240 retained + q241-
-    q265 + q266/q267. After CORRECTNESS_r13 lands green, every
-    registry query has >=1 driver record."""
-    head = set(list(REGISTRY)[:SNAPSHOT_CAP])
-    want = {n for n in REGISTRY
-            if n.split("_")[0] in
-            ({f"q{i}" for i in range(216, 268)} - {"q216", "q218"})}
-    assert len(want) == 50
-    assert head == want
+def test_duplicate_query_number_raises_and_leaves_registry_unchanged():
+    # bench.py's packed timings and the regression guard key on qNN stems
+    before = dict(REGISTRY)
+    with pytest.raises(RuntimeError, match="duplicate query number q01"):
+        register("q01_another_query", "SELECT 1 AS x")
+    assert REGISTRY == before
 
 
 def test_latest_sf01_parity_artifact_covers_full_registry():
@@ -129,13 +83,3 @@ def test_latest_sf01_parity_artifact_covers_full_registry():
     bad = {n: r["status"] for n, r in data["queries"].items()
            if r["status"] != "pass"}
     assert not bad, f"non-pass rows in {os.path.basename(latest)}: {bad}"
-
-
-def test_head_is_at_most_fifty_and_oracle_paired():
-    names = list(REGISTRY)
-    head = names[:SNAPSHOT_CAP]
-    assert len(names) - len(head) == len(_TAIL)
-    rows_only = [n for n in head if REGISTRY[n][1] is None]
-    assert not rows_only, (
-        f"head entries without an oracle waste recorded-window slots "
-        f"(driver would log a weaker rows-only check): {rows_only}")

@@ -34,8 +34,7 @@ sys.path.insert(0, ".")
 
 from powerdatapipeline_spark.queries import REGISTRY  # noqa: E402
 from powerdatapipeline_spark.session import get_spark  # noqa: E402
-
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+from powerdatapipeline_spark.sources.readers import TESTDATA_TABLES  # noqa: E402
 
 
 def canon(df: pd.DataFrame) -> list[tuple]:
@@ -77,7 +76,7 @@ def main():
         assert got == "true", f"ANSI flag did not take: {got}"
         print("(ANSI mode ON — matching the driver's vanilla session)")
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TESTDATA_TABLES:
         con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     n_pass = n_fail = n_rows_only = 0
