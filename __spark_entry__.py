@@ -7,6 +7,12 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 All implementations live in ``powerdatapipeline_spark``; this module is a
 thin adapter over its query registry (powerdatapipeline_spark/queries.py).
+
+A session built here with ``SparkSession.builder`` rather than
+``session.get_spark`` keeps PySpark's origin capture on, so every Column
+and DataFrame call walks the Python stack: q01's build takes 416 Py4J
+round trips instead of 126. The conf is static, so such a builder has to
+set ``spark.python.sql.dataFrameDebugging.enabled=false`` itself.
 """
 
 from __future__ import annotations

@@ -49,8 +49,10 @@ def with_interval(df: DataFrame, ts_col: str, partition_by: Sequence[str] | None
 def check_intervals(df: DataFrame, ts_col: str, expected_seconds: float,
                     partition_by: Sequence[str] | None = None) -> bool:
     """All-equal interval validation (reference dataset.reduce state machine,
-    tfdataset_utilities.py:172-188 ≡ ``all(x == first)``) as a single
-    aggregate: min(step) == max(step) == expected."""
+    tfdataset_utilities.py:172-188 ≡ ``all(x == first)``): the adjacent
+    step from :func:`with_interval` (a ``Window.orderBy(ts_col)`` — one
+    ordered partition unless ``partition_by`` is given), then one
+    aggregate checking min(step) == max(step) == expected."""
     stepped = with_interval(df, ts_col, partition_by).where(F.col("interval").isNotNull())
     row = stepped.agg(F.min("interval").alias("lo"), F.max("interval").alias("hi")).first()
     ok = row.lo is not None and row.lo == row.hi == float(expected_seconds)
@@ -588,15 +590,16 @@ def prefix_split(df: DataFrame, ts_col: str, train_fraction: float = 0.8,
     if not (0 < train_fraction + test_fraction <= 1.0 + 1e-9):
         raise AssertionError("fractions must sum to at most 1")
     t = F.col(ts_col).cast("double")
-    p_train = F.lit(float(train_fraction))
-    p_test = F.lit(float(train_fraction + test_fraction))
+    # both thresholds from one percentile aggregate: one count map over t
+    ps = F.percentile(t, F.array(F.lit(float(train_fraction)),
+                                 F.lit(float(train_fraction + test_fraction))))
     if partition_by:
         # per-series thresholds: one grouped percentile agg (tiny result —
         # one row per key) broadcast-joined back; each series gets its own
         # 80/10/10 prefix, never a global ordering
-        q = (df.groupBy(*partition_by)
-               .agg(F.percentile(t, p_train).alias("__t_train"),
-                    F.percentile(t, p_test).alias("__t_test")))
+        q = (df.groupBy(*partition_by).agg(ps.alias("__ps"))
+               .select(*partition_by, F.col("__ps")[0].alias("__t_train"),
+                       F.col("__ps")[1].alias("__t_test")))
         j = df.join(F.broadcast(q), list(partition_by))
         # the join moves partition keys to the front; restore input order so
         # both branches return the same schema
@@ -605,13 +608,11 @@ def prefix_split(df: DataFrame, ts_col: str, train_fraction: float = 0.8,
                 .select(*df.columns)
         eval_df = j.where(t > F.col("__t_test")).select(*df.columns)
         return train, test, eval_df
-    q = df.agg(
-        F.percentile(t, p_train).alias("t_train"),
-        F.percentile(t, p_test).alias("t_test"),
-    ).first()
-    train = df.where(t <= q.t_train)
-    test = df.where((t > q.t_train) & (t <= q.t_test))
-    eval_df = df.where(t > q.t_test)
+    # no non-null t: percentile is null and every split is empty
+    t_train, t_test = df.agg(ps).first()[0] or (None, None)
+    train = df.where(t <= t_train)
+    test = df.where((t > t_train) & (t <= t_test))
+    eval_df = df.where(t > t_test)
     return train, test, eval_df
 
 

@@ -9,25 +9,33 @@ execution repeatedly with ``take(1)`` debug prints — SURVEY.md §3.4; here
 verbosity is the caller's problem):
 
 * ``build_pipeline``: the interval audit (``check_intervals``), on the
-  selected rows, before anything is materialized — a broken cadence
-  raises from ``build_pipeline``;
+  selected rows — a broken cadence raises from ``build_pipeline``;
+* ``build_pipeline``: the fill of the run's one local checkpoint;
 * ``build_pipeline``: the feature fit (``FeatureSpace.fit``), when
   ``normalize`` or ``onehot_features`` is set;
 * ``split``: the percentile thresholds.
 
-One evaluation per run: a batch frame gets one lazy local checkpoint after
-the resample (and the optional ``downsampling_rate`` sample), right before
-featurize. The first consumer (the fit, else the split percentile, else
-the caller's sink) fills its blocks; the fit, the split thresholds, every
-split write and the sliding windows then read those blocks instead of
-parsing the source and re-running the resample shuffle. A streaming frame
-is never checkpointed.
+One evaluation per run: a batch frame gets one eager local checkpoint
+after the resample (and the optional ``downsampling_rate`` sample), right
+before featurize. The fit, the split thresholds, every split write and the
+sliding windows read its blocks instead of parsing the source and
+re-running the resample shuffle. A streaming frame is never checkpointed.
+
+The audit reads the source rows, not the checkpoint, so it runs on one
+background thread while the caller's thread fills the checkpoint and fits
+the feature space: per-job launch cost, not compute, dominates these small
+jobs, and two of them at once hide one's fixed cost behind the other's.
+``transform`` joins the audit before it returns or raises, so no thread or
+job of the build outlives ``build_pipeline``; an audit failure wins over a
+fill or fit failure, as it would if the audit ran first.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -97,7 +105,8 @@ def extract(spark: SparkSession, cfg: RunConfig) -> DataFrame:
 def transform(df: DataFrame, cfg: RunConfig) -> DataFrame:
     """Transformation stage (reference ``add_select_resample_csvdataset``,
     datapipeline.py:619-650): derive datetime columns → select → interval
-    audit → resample."""
+    audit → resample. The audit of a batch frame runs beside the resample,
+    the checkpoint fill and the feature fit (module docstring)."""
     ex = cfg.datapipeline.extraction
     tr = cfg.datapipeline.transformation
     if ex.columns_added:
@@ -118,10 +127,24 @@ def transform(df: DataFrame, cfg: RunConfig) -> DataFrame:
         df = df.select(*keep)
     if tr.time_interval_original and sec_col and not df.isStreaming:
         # the audit is an action — on a stream, cadence monitoring is the
-        # streaming_interval_stats job instead (streaming/pipeline.py)
-        ts.check_intervals(
-            df.withColumn("__ts", F.col(sec_col)), "__ts",
-            float(tr.time_interval_original))
+        # streaming_interval_stats job instead (streaming/pipeline.py). The
+        # background thread keeps the caller's job group, description and
+        # tags; the finally joins it and lets its error win.
+        audit = inheritable_thread_target(df.sparkSession)(ts.check_intervals)
+        with ThreadPoolExecutor(1) as pool:
+            done = pool.submit(audit, df.withColumn("__ts", F.col(sec_col)),
+                               "__ts", float(tr.time_interval_original))
+            try:
+                return _resample_onward(df, cfg, feats, sec_col)
+            finally:
+                done.result()
+    return _resample_onward(df, cfg, feats, sec_col)
+
+
+def _resample_onward(df: DataFrame, cfg: RunConfig, feats: list[str],
+                     sec_col: str | None) -> DataFrame:
+    """Resample → optional sample → checkpoint → featurize → windows."""
+    tr = cfg.datapipeline.transformation
     if tr.resample and tr.time_interval_original and tr.time_interval_desired and sec_col:
         vcols = [c for c in feats if c != sec_col]
         if (df.isStreaming and tr.resample_method == "mean"
@@ -160,13 +183,12 @@ def transform(df: DataFrame, cfg: RunConfig) -> DataFrame:
         # be a modulo filter on the event id/timestamp instead
         df = df.sample(fraction=tr.downsampling_rate, seed=42)
     if not df.isStreaming:
-        # one evaluation per run (module docstring). Lazy: the first
-        # consumer fills the blocks, so this adds no job. Local, not
-        # persist(): the blocks belong to this frame alone (a rerun over
-        # a rewritten CSV at the same path cannot be served them) and
-        # are freed once the frame is garbage-collected; they do not
-        # survive executor loss.
-        df = df.localCheckpoint(eager=False)
+        # one evaluation per run (module docstring). Local, not persist():
+        # the blocks belong to this frame alone (a rerun over a rewritten
+        # CSV at the same path cannot be served them) and are freed once
+        # the frame is garbage-collected; they do not survive executor
+        # loss.
+        df = df.localCheckpoint(eager=True)
     df = featurize(df, cfg)
     if tr.window_size and sec_col and sec_col in df.columns and not df.isStreaming:
         # row-based sliding windows are not supported on streams; the

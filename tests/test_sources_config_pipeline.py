@@ -760,7 +760,70 @@ def test_streaming_pipeline_is_never_checkpointed(spark, tmp_path,
         build_pipeline(spark, batch)
 
 
+def _nothing_left_running(spark, threads_before):
+    """No Spark job is active once the listener bus has caught up, and no
+    thread started since ``threads_before`` is still alive (threads of
+    earlier tests may end meanwhile, so the count alone could shrink)."""
+    import threading
+
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    assert set(threading.enumerate()) <= threads_before
+
+
 def test_build_pipeline_raises_on_broken_cadence(spark, tmp_path):
+    import threading
+
+    before = set(threading.enumerate())
+    with pytest.raises(AssertionError, match="interval audit failed"):
+        build_pipeline(spark, _f1_config(tmp_path, drop=300))
+    _nothing_left_running(spark, before)
+
+
+def test_build_pipeline_joins_the_audit_before_returning(spark, tmp_path):
+    import threading
+    import warnings
+
+    cfg = _f1_config(tmp_path)
+    before = set(threading.enumerate())
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        build_pipeline(spark, cfg)
+    _nothing_left_running(spark, before)
+    assert not [w for w in caught if "Tags will not be inherited" in str(w.message)]
+
+
+def test_audit_jobs_count_under_the_callers_group(spark, tmp_path,
+                                                  monkeypatch):
+    from powerdatapipeline_spark.operators import timeseries as ts
+
+    cfg = _f1_config(tmp_path)
+    _, with_audit = _jobs_in_group(spark, "audit-on",
+                                   lambda: build_pipeline(spark, cfg))
+    audit_jobs = []
+    real = ts.check_intervals
+
+    def counted(df, *a, **k):
+        _, n = _jobs_in_group(spark, "audit-alone", lambda: real(df, *a, **k))
+        audit_jobs.append(n)
+        return True
+
+    monkeypatch.setattr(ts, "check_intervals", counted)
+    build_pipeline(spark, cfg)
+    monkeypatch.setattr(ts, "check_intervals", lambda *a, **k: True)
+    _, without = _jobs_in_group(spark, "audit-off",
+                                lambda: build_pipeline(spark, cfg))
+    assert audit_jobs and audit_jobs[0] >= 1
+    assert with_audit == without + audit_jobs[0]
+
+
+def test_audit_error_wins_over_a_failed_fill(spark, tmp_path, monkeypatch):
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
+
+    def refuse(self, *a, **k):
+        raise RuntimeError("localCheckpoint called")
+
+    monkeypatch.setattr(ClassicDF, "localCheckpoint", refuse)
     with pytest.raises(AssertionError, match="interval audit failed"):
         build_pipeline(spark, _f1_config(tmp_path, drop=300))
 

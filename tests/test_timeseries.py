@@ -205,6 +205,27 @@ def test_prefix_split_partitioned_schema_order(spark):
         assert part.columns == df.columns  # join must not reorder the schema
 
 
+def test_prefix_split_thresholds_match_two_scalar_percentiles(spark):
+    # duplicate timestamps (three rows per second, gaps of 2 s) and two
+    # series of different length, so the thresholds interpolate
+    rows = [Row(k=k, s=float(i // 3 * 2), v=float(i))
+            for k, n in (("a", 20), ("b", 31)) for i in range(n)]
+    df = spark.createDataFrame(rows)
+    t = F.col("s").cast("double")
+    lo, hi = 0.75, 0.75 + 0.125
+    for by in (None, ["k"]):
+        q = df.groupBy(*(by or [])).agg(F.percentile(t, F.lit(lo)).alias("lo"),
+                                        F.percentile(t, F.lit(hi)).alias("hi"))
+        j = df.join(q, by) if by else df.crossJoin(q)
+        want = [j.where(t <= F.col("lo")),
+                j.where((t > F.col("lo")) & (t <= F.col("hi"))),
+                j.where(t > F.col("hi"))]
+        got = ts.prefix_split(df, "s", lo, 0.125, partition_by=by)
+        for g, w in zip(got, want):
+            assert sorted(g.collect()) == sorted(w.select(*df.columns).collect())
+            assert g.count() > 0
+
+
 def test_prefix_split_fraction_validation(spark):
     with pytest.raises(AssertionError):
         ts.prefix_split(_series(spark, 10), "s", 0.9, 0.3)
